@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardOpenOption}
 
 /** Benchmark main: one JSON line with per-query steady-state seconds.
   *
@@ -114,42 +114,37 @@ object Bench {
       Map.empty
     }
 
+  /** Default per-query output file: the CPU count and the sf directory's
+    * last path component are in the name, so an 8-core run cannot
+    * clobber the 32-core run's file (nor sf0.01 clobber sf0.1). */
+  def defaultOutPath(cpus: String, sfDir: String): String =
+    s"bench_out_c${cpus}_${Paths.get(sfDir).getFileName}.json"
+
+  /** Write `content` to `path` — or, when that file exists, to the first
+    * free `<stem>.<n><ext>` (n = 1, 2, …) — never overwriting a bench
+    * artifact. `CREATE_NEW` makes the free-name check and the write one
+    * atomic step. Returns the path actually written. */
+  def writeNew(path: String, content: String): String = {
+    val dot = path.lastIndexOf('.')
+    val (stem, ext) =
+      if (dot > path.lastIndexOf('/')) path.splitAt(dot) else (path, "")
+    Iterator.from(0).map(n => if (n == 0) path else s"$stem.$n$ext")
+      .find { p =>
+        try {
+          Files.writeString(Paths.get(p), content, StandardOpenOption.CREATE_NEW)
+          true
+        } catch { case _: FileAlreadyExistsException => false }
+      }.get
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val prior = sys.env.get("SPARK_GRAFT_PRIOR_BENCH")
       .map(readPrior).getOrElse(Map.empty)
-    // Extra session conf via env (r20): "k=v;k=v" applied LAST, so a
-    // deployment can pin scale-dependent settings (shuffle partitions,
-    // codec, join strategy) without editing the bench — and an A/B run
-    // can measure one config against the default on identical code. The
-    // local default is EMPTY: the driver's bench runs the settings below,
-    // comparable round to round.
-    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(";").map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    // advice r20: overrides are applied last and could silently diverge
-    // from the configuration the oracle certified — log each one
-    extra.foreach { case (k, v) =>
-      System.err.println(s"[bench] extra conf override: $k=$v") }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r20 (guide §3.1/§9): let the planner pick shuffled-hash over
-      // sort-merge when its size conditions hold — every mid-size join in
-      // the registry (band/cell/pair tables) then skips both sort passes.
-      // Same-session A/B over a 10-query subset: wall −16%, cpu −12%,
-      // no regressions outside noise (OPTIMIZATION_r20.md). NOT a
-      // local-only knob: the operators' join sides are bounded (bands,
-      // cells, per-group tables), which is exactly SHJ's safety
-      // condition; AQE still rewrites to broadcast when a side is tiny.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the product session, so the bench times the configuration the
+    // oracle certifies
+    val spark = Graft.session(cpus.toInt, "graft-bench")
 
     // optional positional args name specific queries to bench in
     // isolation — the controlled-A/B knob for adjudicating a single
@@ -166,18 +161,7 @@ object Bench {
     val osBean = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    // SPARK_GRAFT_BENCH_ISOLATE=1 (r18 verdict #4): between timed
-    // queries, drop SQL-cached plans and nudge the ContextCleaner (a
-    // full GC is what drives its reference-queue drain), so one query's
-    // accumulated shuffle/broadcast state cannot bleed into the next
-    // row's timings. FixtureMemo's localCheckpoint blocks are NOT in the
-    // cacheManager and stay live via the memo's strong references, so
-    // the serving rows keep measuring probe/rank, never re-training.
-    // The A/B vs the default (whether the sub-0.5 s rows' run-to-run
-    // spread tightens) is recorded in SURVEY §11.
-    val isolate = sys.env.get("SPARK_GRAFT_BENCH_ISOLATE").contains("1")
     val results = ordered.map { case (name, fn) =>
-      if (isolate) { spark.catalog.clearCache(); System.gc() }
       def once(): Option[(Double, Double)] = {
         val c0 = osBean.getProcessCpuTime
         val t0 = System.nanoTime()
@@ -208,26 +192,30 @@ object Bench {
       if (failed > 0) -1.0 else results.map(_._2.wall).sum
     val cpuTotal =
       if (failed > 0) -1.0 else results.map(_._2.cpu).sum
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"cpu_total":$cpuTotal,"flapped":$flaps,"queries":$qs,"cpu":$cs,"wall_min":$mins,"wall_max":$maxs,"sf":"$sfDir"}"""
+    val sf = Graft.jsonString(sfDir)
+    val full = s"""{"metric":"total_full","value":$total,"unit":"sec","failed":$failed,"cpu_total":$cpuTotal,"flapped":$flaps,"queries":$qs,"cpu":$cs,"wall_min":$mins,"wall_max":$maxs,"sf":$sf}"""
     // r21 (verdict #1): the driver's stdout capture keeps only the LAST
     // 2000 chars, and the full per-query line above has grown to ~25 KB —
     // every BENCH_r*.json on record holds a line truncated mid-JSON
     // (`parsed: null` for five straight rounds). The full JSON therefore
-    // ALSO goes to a file (SPARK_GRAFT_BENCH_OUT, default bench_out.json —
-    // the per-query ground truth for cross-round diffs), and the LAST
+    // ALSO goes to a file (SPARK_GRAFT_BENCH_OUT, default [[defaultOutPath]]
+    // — the per-query ground truth for cross-round diffs), and the LAST
     // stdout line is a compact summary guaranteed to sit complete inside
     // the capture window. The 172-entry queries map cannot fit there even
     // at 2-decimal precision (~4 KB serialized vs a ~1.9 KB budget), so
     // the compact line carries the totals and points at the file; no
     // query is dropped from the bench — the full line (printed above,
-    // unchanged format) and the file both carry all of them.
+    // metric "total_full") and the file both carry all of them.
     println(full)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $outPath: $e")
-    }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"cpu_total":$cpuTotal,"n_queries":${results.size},"flapped":$flaps,"queries_file":"$outPath","sf":"$sfDir"}""")
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      defaultOutPath(cpus, sfDir))
+    val written =
+      try Graft.jsonString(writeNew(outPath, full + "\n"))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $outPath: $e")
+        "null"
+      }
+    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"cpu_total":$cpuTotal,"n_queries":${results.size},"flapped":$flaps,"queries_file":$written,"sf":$sf}""")
     spark.stop()
   }
 }

@@ -9,11 +9,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * tiny shuffle files on a laptop-scale run). On a real cluster the same
   * builder settings scale: AQE coalesces shuffle partitions at runtime and
   * handles skew joins, so the static setting is only the upper bound.
+  *
+  * This is the only session builder in the engine: the CLI, `Bench`,
+  * `Verify`, the tools and the tests all run the same configuration, so
+  * the oracle gate certifies the session the product and the bench run.
+  * The configuration is fixed in code and read from no environment
+  * variable; a config A/B edits a `.config` line here on a branch.
   */
 object Graft {
   def session(cores: Int = 32, appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
-      .builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.extensions", "graft.GraftExtensions")
@@ -32,6 +37,19 @@ object Graft {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** A JSON string literal: escapes backslash, quote and ALL control chars
+    * (< 0x20) — a tab or CR in an interpolated path or in hand-written oracle
+    * SQL would otherwise make a `json.load` of the artifact fail. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** Load one of the driver-generated test tables from an sf directory. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =

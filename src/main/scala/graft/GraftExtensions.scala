@@ -12,8 +12,8 @@ import graft.exprs._
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  * // or
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
+  * // or, in code (what Graft.session does), on the session builder:
+  * .config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   *
   * Unlike [[graft.functions.GraftFunctions.register]] (temp functions on

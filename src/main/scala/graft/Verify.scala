@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -24,26 +23,9 @@ object Verify {
         s"unknown query name(s) in filter: ${unknown.mkString(", ")}")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Mirror the bench session (r21, verdict #2 + advice): the oracle gate
-    // must certify the same physical configuration the bench times — SHJ
-    // preference included — and honor the same per-deployment override
-    // knob. Each applied override is logged so a deployment cannot
-    // silently diverge from the verified configuration.
-    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(";").map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    extra.foreach { case (k, v) =>
-      System.err.println(s"[verify] extra conf override: $k=$v") }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the product session: the oracle gate certifies the configuration
+    // the CLI and the bench run, extensions included
+    val spark = Graft.session(cpus.toInt, "graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -54,20 +36,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => Graft.jsonString(k) + ": " + Graft.jsonString(v) }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -21,8 +21,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Values are bit-identical to the struct-array forms they replace:
   *  - assignment: ns = −(⟨f,c⟩.toDouble + e_x·e_c) with ⟨·,·⟩ an exact
   *    integer sum, e_x = √(max(m2 − ⟨f,f⟩, 0)); argmin by Spark's struct
-  *    ordering = `java.lang.Double.compare` on ns, tie to smallest cid —
-  *    replicated exactly (incl. −0.0 < 0.0);
+  *    ordering on (ns, cid), tie to smallest cid. Spark orders ±0.0 as
+  *    equal while `java.lang.Double.compare` puts −0.0 < 0.0, but the
+  *    two agree here: a long converts to +0.0, never −0.0, and an IEEE
+  *    sum is −0.0 only when both operands are, so the sum is never −0.0
+  *    and a zero ns is always −0.0 — no ns is ever +0.0;
   *  - probes: ns = −⟨q,c⟩ stays a pure integer; sort (ns, cid)
   *    ascending, keep the first nProbe cids in order.
   */

@@ -160,7 +160,8 @@ object Ann {
     * the whole plan is the final per-query rank window over the
     * cell-bounded candidate set.
     *
-    * Economics, measured ([[graft.tools.ProbeMips]]): the FUSED form
+    * Economics, measured (ProbeMips, in history:
+    * `git show 408692e:src/main/scala/graft/tools/ProbeMips.scala`): the FUSED form
     * re-pays the O(N·nlist) assignment every call, so single-batch it
     * never beats [[mipsBrute]] (whose cost is O(N·Q)) — the candidate
     * bound (5.8 % → 2.0 % of the corpus per query at x1 → x100 under

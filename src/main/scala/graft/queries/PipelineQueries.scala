@@ -1625,7 +1625,8 @@ object PipelineQueries {
     * posting join), oriented both ways so every participating doc mines
     * its own confusable set, ranked per query by shared-3-gram count.
     * 3-gram AllPairs prefixes and 16/8 MinHash banding were both probed
-    * and rejected for this corpus shape ([[graft.tools.ProbeHardNeg]]:
+    * and rejected for this corpus shape (ProbeHardNeg, in history:
+    * `git show 408692e:src/main/scala/graft/tools/ProbeHardNeg.scala`:
     * 409k resp. 6.3k candidates at sf0.1 vs 256 here — hot 3-grams keep
     * df-sized/collision-sized fan-out super-linear). Semantic arm: the
     * TRAINED IVF top-10 ([[graft.ops.Ann.ivf]] over [[trainedCentroids]]
@@ -1702,7 +1703,11 @@ object PipelineQueries {
         floor(-log((h64(concat(lit("ws:"), col("doc_id").cast("string"))) + 1)
           .cast("double") / lit(1.152921504606846976e18)) * 1e6).cast("long"))
       .withColumn("key_q", expr("eq DIV n_chars"))
-    val w = Window.orderBy(col("key_q").asc, col("doc_id").asc)
+    // limit leaves its 20 rows in one partition, so a window keyed on the
+    // partition id ranks them as an unpartitioned one would, without
+    // WindowExec's warning (a literal key is optimized away)
+    val w = Window.partitionBy(spark_partition_id())
+      .orderBy(col("key_q").asc, col("doc_id").asc)
     keyed.orderBy(col("key_q").asc, col("doc_id").asc).limit(20)
       .withColumn("rank", row_number().over(w))
       .select(col("rank"), col("doc_id"), col("n_chars"), col("key_q"))

@@ -107,8 +107,12 @@ object SearchQueries {
       .where(col("score") > 0)
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(10)
+      // limit leaves its ≤ 10 rows in one partition, so a window keyed on
+      // the partition id ranks them as an unpartitioned one would, without
+      // WindowExec's warning (a literal key is optimized away)
       .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("score").desc, col("doc_id").asc)))
+        org.apache.spark.sql.expressions.Window.partitionBy(spark_partition_id())
+          .orderBy(col("score").desc, col("doc_id").asc)))
       .select(col("rank"), col("doc_id"))
   }
 

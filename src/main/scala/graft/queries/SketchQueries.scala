@@ -279,13 +279,14 @@ object SketchQueries {
     // low-cardinality grp — a SortMergeJoin that materialized 3 rows per
     // corpus row (one per quantile) before the rn = r filter could run.
     // The target ranks are computable INSIDE the same grp-keyed window
-    // pass: n rides along as count(v) over grp (count(col) skips NULLs,
-    // matching hdrQuantiles' n = non-null mass, while row_number still
-    // ranks the full partition exactly as before), each row checks itself
+    // pass: n rides along as count(v) over grp, each row checks itself
     // against the three rank targets, and only the ≤ 3·groups surviving
-    // rows ever reach a join — est ⋈ exact is now tiny ⋈ tiny.
+    // rows ever reach a join — est ⋈ exact is now tiny ⋈ tiny. NULL v
+    // rows are dropped BEFORE the window, as hdrBuckets drops them:
+    // row_number ranks NULLs first, so a kept NULL would shift every
+    // rank against the non-null n.
     val wg = org.apache.spark.sql.expressions.Window.partitionBy(col("grp"))
-    val rk = rawall
+    val rk = rawall.where(col("v").isNotNull)
       .withColumn("rn", row_number().over(wg.orderBy(col("v"))))
       .withColumn("nn", count(col("v")).over(wg))
     val isTarget = qs.map(q => col("rn") === expr(s"($q * nn + 99) DIV 100"))

@@ -2,9 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Graft, SparkEntry}
 
 /** Dump `explain("formatted")` for registry queries to files — the
   * optimization-round evidence artifact (plans/r20/<name>_<tag>.txt).
@@ -12,9 +10,10 @@ import graft.SparkEntry
   * Usage: runMain graft.tools.PlanDump <outDir> <tag> [name1,name2,...]
   *
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *      SPARK_GRAFT_CPUS (default 4) — same contract as Bench, so the
-  * dumped plan is the plan the bench actually executes (shuffle
-  * partition count and AQE settings included). Plans are captured via
+  *      SPARK_GRAFT_CPUS (default 4) — same contract as Bench, and the
+  * same `Graft.session`, so the dumped plan is the plan the bench
+  * actually executes (shuffle partition count and AQE settings
+  * included). Plans are captured via
   * `queryExecution.explainString` BEFORE execution (AQE initial plan,
   * `isFinalPlan=false`) — the judge-checkable shape: Exchange count,
   * join strategy, PushedFilters, ReadSchema. */
@@ -34,16 +33,7 @@ object PlanDump {
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench's session config so dumped plans are the executed ones
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(cpus.toInt, "graft-plandump")
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toList.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -88,4 +88,19 @@ class BenchSpec extends AnyFunSuite {
     assert(prior == Map("q1" -> (1.5, 3.0), "q2" -> (0.5, 1.0)))
     assert(Bench.readPrior("/nonexistent/prior.json").isEmpty)
   }
+
+  test("two writes to the same default output path produce two files") {
+    val dir = java.nio.file.Files.createTempDirectory("bench-out")
+    val name = Bench.defaultOutPath("8", "/data/sf0.1/")
+    assert(name == "bench_out_c8_sf0.1.json", name)
+    val path = dir.resolve(name).toString
+    val first = Bench.writeNew(path, "run 1\n")
+    val second = Bench.writeNew(path, "run 2\n")
+    assert(first == path)
+    assert(second == dir.resolve("bench_out_c8_sf0.1.1.json").toString)
+    def read(p: String) =
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
+    assert(read(first) == "run 1\n" && read(second) == "run 2\n",
+      "the second write must not clobber the first")
+  }
 }

@@ -270,4 +270,31 @@ class SketchSpec extends AnyFunSuite {
     // the __all__ roll-up (sum-merged from per-source grids) is present
     assert(rows.count(_.getString(0) == "__all__") == 3)
   }
+
+  test("sketch_quantile_hdr: NULL text does not shift the exact order statistic") {
+    // a temp copy of documents with every third doc's text NULL (spread
+    // across sources); the exact tier must be the nearest-rank quantile
+    // of the NON-null lengths, the same n the HDR estimate uses
+    val dir = java.nio.file.Files.createTempDirectory("hdr-null").toString
+    val docs = Graft.table(spark, sf, "documents")
+      .withColumn("text",
+        when(col("doc_id") % 3 === 0, lit(null).cast("string"))
+          .otherwise(col("text")))
+    docs.write.parquet(s"$dir/documents.parquet")
+    val lens = docs.where(col("text").isNotNull)
+      .select(col("source"), length(col("text")).cast("long"))
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(lens.length < docs.count(), "the copy must carry NULL text")
+    val byGrp = lens.groupBy(_._1).map { case (g, xs) => g -> xs.map(_._2) } +
+      ("__all__" -> lens.map(_._2))
+    def nearestRank(xs: Array[Long], q: Int): Long =
+      xs.sorted.apply((q * xs.length + 99) / 100 - 1)
+    val rows = SketchQueries.sketch_quantile_hdr(spark, dir).collect()
+    assert(rows.length == 3 * byGrp.size)
+    rows.foreach { r =>
+      val (g, q) = (r.getString(0), r.getInt(1))
+      assert(r.getAs[Long]("exact_v") == nearestRank(byGrp(g), q),
+        s"grp=$g q=$q")
+    }
+  }
 }
