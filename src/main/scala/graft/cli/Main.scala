@@ -330,13 +330,19 @@ object Main {
         // (time/zone/dict/prefix stats + term digests) without scanning
         // — the operator's selectivity check before an expensive query
         if (flags.contains("explain")) {
-          val (live, surv) = new Searcher(spark, cat).explainPrune(
+          val (live, surv) = new Searcher(spark, cat).explainPruneSplits(
             pos.head, pos(1),
             fields = flags.get("fields").map(_.split(",").toList))
           println(s"splits: ${live.length} live, ${surv.length} scanned " +
             s"(${live.length - surv.length} pruned)")
-          surv.foreach(id => println(s"  scan $id"))
-          live.filterNot(surv.toSet).foreach(id => println(s"  prune $id"))
+          // the files a scan would open, as the manifest recorded them
+          val files = surv.flatMap(_.files)
+          println(s"files: ${files.length} in scanned splits, " +
+            s"${files.map(_._2).sum} bytes, " +
+            s"${surv.count(_.files.isEmpty)} splits without a recorded list")
+          surv.map(_.id).sorted.foreach(id => println(s"  scan $id"))
+          live.filterNot(surv.contains).map(_.id).sorted
+            .foreach(id => println(s"  prune $id"))
         } else {
           val req = graft.engine.SearchRequest(pos(1),
             limit = flags.get("limit").map(_.toInt).getOrElse(1),

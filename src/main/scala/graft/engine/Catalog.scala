@@ -17,6 +17,7 @@ import graft.exprs.JsonSupport
   * <root>/catalog/<name>.yaml            # index config (create/drop)
   * <root>/indexes/<name>/splits/<id>/    # parquet files of one split
   * <root>/indexes/<name>/manifest.json   # commit point: gen + page refs + inline tail
+  *                                       # (each entry lists its split's files)
   * <root>/indexes/<name>/pages/page-<md5>.json  # sealed split entries (content-addressed,
   *                                       # immutable; only above the page threshold)
   * }}}
@@ -62,7 +63,12 @@ final case class SplitInfo(id: String, numDocs: Long,
       * with the swap, so a sidecar index built over the consumed splits
       * (the ANN trained tier) can translate its coverage through the
       * merge instead of forcing a corpus-scale retrain. */
-    parents: List[String] = Nil)
+    parents: List[String] = Nil,
+    /** The split's data files as (name relative to the split directory,
+      * byte length), recorded at write time so a scan plans from the
+      * manifest without listing the directory. Nil = not recorded
+      * (entries from before the field): readers list that one split. */
+    files: List[(String, Long)] = Nil)
 
 object Catalog {
   /** Upper bound on mtime granularity across supported stores: local FS
@@ -182,20 +188,53 @@ object Catalog {
   def digestCacheStats: (Long, Long, Int) =
     (digestHits.get(), digestMisses.get(), digestCache.size())
 
+  /** A split directory's data files as (name, byte length): every plain
+    * file not named `_*` or `.*` — Spark's reader rule, so the
+    * `_digests.json` sidecar, `_SUCCESS` and `.crc` checksums stay out. */
+  private[graft] def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: HPath): List[(String, Long)] =
+    fs.listStatus(dir).iterator.filter(_.isFile)
+      .map(st => st.getPath.getName -> st.getLen)
+      .filterNot { case (n, _) => n.startsWith("_") || n.startsWith(".") }
+      .toList.sortBy(_._1)
+
   /** Read a set of splits as one DataFrame, upgrading format-1 splits
     * (`_dynamic` as JSON text) to the current in-memory shape (variant)
     * so every consumer sees a single representation. Grouped by format so
-    * each parquet read gets the schema its files were written with. */
+    * each parquet read gets the schema its files were written with.
+    *
+    * Each group scans the files the manifest recorded
+    * ([[SplitInfo.files]]) through a fixed [[ManifestFileIndex]], so
+    * planning lists no directory and starts no Spark listing job however
+    * many splits survive pruning. Entries without a recorded list
+    * (written before the field) are listed here, one directory each. */
   private[graft] def readSplits(spark: org.apache.spark.sql.SparkSession,
       d: graft.config.SchemaDerivation, splits: List[SplitInfo],
       dir: SplitInfo => String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     import org.apache.spark.sql.functions.{col, try_parse_json}
+    import org.apache.spark.sql.types.StructType
+    val fs = new HPath(dir(splits.head))
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def scan(group: List[SplitInfo], schema: StructType) = {
+      val files = group.flatMap { s =>
+        val sd = fs.makeQualified(new HPath(dir(s)))
+        val recorded = if (s.files.nonEmpty) s.files else listDataFiles(fs, sd)
+        recorded.map { case (name, len) =>
+          new org.apache.hadoop.fs.FileStatus(len, false, 0, 0L, 0L,
+            new HPath(sd, name))
+        }
+      }
+      spark.baseRelationToDataFrame(HadoopFsRelation(
+        new ManifestFileIndex(files), new StructType(), schema, None,
+        new ParquetFileFormat, Map.empty)(spark))
+    }
     val (cur, legacy) = splits.partition(_.format >= SplitFormat)
     val parts = List(
-      Option.when(cur.nonEmpty)(
-        spark.read.schema(d.storageSchema).parquet(cur.map(dir): _*)),
+      Option.when(cur.nonEmpty)(scan(cur, d.storageSchema)),
       Option.when(legacy.nonEmpty)(
-        spark.read.schema(d.legacyStorageSchema).parquet(legacy.map(dir): _*)
+        scan(legacy, d.legacyStorageSchema)
           .withColumn(graft.config.SchemaDerivation.Dynamic,
             try_parse_json(col(graft.config.SchemaDerivation.Dynamic))))
     ).flatten
@@ -383,6 +422,10 @@ final class Catalog(rootDir: String,
       Option(s.get("digest")).filter(!_.isNull).map(_.asText()),
       Option(s.get("parents")).filter(_.isArray).map {
         _.elements().asScala.map(_.asText()).toList
+      }.getOrElse(Nil),
+      Option(s.get("files")).filter(_.isArray).map {
+        _.elements().asScala.map(f =>
+          f.get("name").asText() -> f.get("bytes").asLong()).toList
       }.getOrElse(Nil))
   }
 
@@ -500,6 +543,15 @@ final class Catalog(rootDir: String,
         val a = m.createArrayNode()
         s.parents.foreach(a.add)
         o.set[com.fasterxml.jackson.databind.JsonNode]("parents", a)
+      }
+      if (s.files.nonEmpty) {
+        val a = m.createArrayNode()
+        s.files.foreach { case (f, len) =>
+          val fo = m.createObjectNode()
+          fo.put("name", f); fo.put("bytes", len)
+          a.add(fo)
+        }
+        o.set[com.fasterxml.jackson.databind.JsonNode]("files", a)
       }
       if (s.numStats.nonEmpty) {
         val st = m.createObjectNode()

@@ -339,19 +339,22 @@ object Indexer {
       Option(get(s"__bloom__$f")).map(_.asInstanceOf[Array[Byte]])
         .flatMap(TermDigest.shrinkBytes).map(f -> _)
     }.toMap
+    val dir = new org.apache.hadoop.fs.Path(splitDir)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val digestMd5 =
       if (digests.isEmpty) None
       else {
         val bytes = TermDigest.renderAll(digests)
-        val p = new org.apache.hadoop.fs.Path(splitDir, TermDigest.SidecarName)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        val out = fs.create(p, true)
+        val out =
+          fs.create(new org.apache.hadoop.fs.Path(dir, TermDigest.SidecarName), true)
         try out.write(bytes) finally out.close()
         Some(TermDigest.md5HexBytes(bytes))
       }
 
+    // One listing of the finished directory, before the manifest commit:
+    // the entry carries its data files, so readers never list the split.
     SplitInfo(id, numDocs, minTs, maxTs, numStats, dicts, hexStats,
-      digest = digestMd5)
+      digest = digestMd5, files = Catalog.listDataFiles(fs, dir))
   }
 
   /** Observed-metric partials travel in task results to the driver (no

@@ -156,6 +156,15 @@ final class Searcher(spark: SparkSession, catalog: Catalog) {
   def explainPrune(indexName: String, query: String,
       fields: Option[List[String]] = None)
       : (List[String], List[String]) = {
+    val (live, surv) = explainPruneSplits(indexName, query, fields)
+    (live.map(_.id).sorted, surv.map(_.id).sorted)
+  }
+
+  /** [[explainPrune]] with the manifest entries, not just their ids — what
+    * `search --explain` reads the scanned splits' recorded files from. */
+  def explainPruneSplits(indexName: String, query: String,
+      fields: Option[List[String]] = None)
+      : (List[SplitInfo], List[SplitInfo]) = {
     val cfg = catalog.load(indexName)
     val d = new SchemaDerivation(cfg)
     val ast = QueryParser.parse(query)
@@ -163,8 +172,7 @@ final class Searcher(spark: SparkSession, catalog: Catalog) {
     // gen-N live listing with a gen-N+1 prune under a concurrent commit
     // and the explain would report splits that do not add up
     val (_, live) = catalog.manifestStateCached(indexName)
-    val surv = prunedFrom(live, cfg, d, ast, fields)
-    (live.map(_.id).sorted, surv.map(_.id).sorted)
+    (live, prunedFrom(live, cfg, d, ast, fields))
   }
 
   /** Shared search prologue: config, derivation, parsed AST, manifest

@@ -389,6 +389,36 @@ class CatalogStoreSpec extends AnyFunSuite {
     }
   }
 
+  test("split file lists round-trip through inline and paged manifests") {
+    withPageSize(4) {
+      val root = Files.createTempDirectory("graft-files").toString
+      val cat = new Catalog(root)
+      cat.create("version: 1\nname: files\npath: /tmp/unused\nschema:\n" +
+        "  fields:\n    - name: body\n      type: !text\n")
+      def withFiles(i: Int): SplitInfo = splitInfo(i).copy(files = List(
+        f"part-$i%05d-c000.snappy.parquet" -> (1000L + i),
+        "part-big.parquet" -> 3000000000L)) // past Int range
+      // inline: one entry, under the page size
+      cat.commitSplit("files", withFiles(0))
+      val rootFile = new java.io.File(root, "indexes/files/manifest.json")
+      assert(new String(Files.readAllBytes(rootFile.toPath), "UTF-8")
+        .contains("part-00000-c000.snappy.parquet"))
+      assert(new Catalog(root).liveSplits("files") == List(withFiles(0)))
+      // paged: 10 entries at page size 4 -> 2 sealed pages + 2 inline
+      assert(cat.swapSplits("files", Nil, (1 until 10).map(withFiles).toList))
+      val pages = new java.io.File(root, "indexes/files/pages").listFiles()
+        .map(_.getName).filter(_.matches("page-.*\\.json"))
+      assert(pages.length == 2, pages.mkString(", "))
+      Catalog.clearPageCache()
+      assert(new Catalog(root).liveSplits("files") ==
+        (0 until 10).map(withFiles).toList,
+        "file lists survive page sealing and a cold read")
+      // an entry without the field parses as "not recorded"
+      cat.commitSplit("files", SplitInfo("bare", 1))
+      assert(new Catalog(root).liveSplits("files").last.files == Nil)
+    }
+  }
+
   test("paged manifest: time travel resolves archived page refs; vacuum GCs orphaned pages") {
     withPageSize(5) {
       val root = Files.createTempDirectory("graft-pagedtt").toString

@@ -85,6 +85,11 @@ class SplitPruningSpec extends AnyFunSuite {
     val sE = outE.toString("UTF-8")
     assert(sE.contains("2 live, 1 scanned (1 pruned)") &&
       sE.contains("scan ") && sE.contains("prune "), sE)
+    // the scanned split's recorded files, read from the manifest
+    val scanned = cat.liveSplits("prune_test").filter(s => surv.contains(s.id))
+    assert(sE.contains(s"files: ${scanned.head.files.length} in scanned " +
+      s"splits, ${scanned.head.files.map(_._2).sum} bytes, 0 splits " +
+      "without a recorded list"), sE)
   }
 
   private val zoneConfig =
@@ -593,21 +598,37 @@ class SplitPruningSpec extends AnyFunSuite {
       s"gen=${cats.head.manifestGen("race_test")}")
   }
 
+  /** One split per document, committed in one swap — the bulk-backfill
+    * build shape: parallel writeSplit, one atomic swapSplits commit. */
+  private def commitOneDocSplits(cat: Catalog, name: String,
+      docs: Seq[String]): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val d = new graft.config.SchemaDerivation(cat.load(name))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val splits = try Await.result(Future.sequence(docs.zipWithIndex.map {
+      case (doc, i) => Future {
+        val typed = d.ingest(Seq(doc).toDF("value"), col("value"))
+        val id = f"$name-$i%05d"
+        Indexer.writeSplit(spark, d, typed, cat.splitDir(name, id), id)
+      }
+    }), Duration(300, "seconds")) finally pool.shutdown()
+    assert(cat.swapSplits(name, Nil, splits.toList))
+  }
+
   test("a selective query opens O(matching splits) files at high split count") {
     // the serving pin behind tools/ProbeServe (measured there at 1,000
     // splits): a term/zone-selective query must OPEN only the splits the
     // manifest prune keeps — `df.inputFiles` is the executed scan's file
     // list, so this catches any regression where pruning is computed but
-    // the scan still enumerates everything. Bulk-backfill build shape:
-    // parallel writeSplit, one atomic swapSplits commit.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
+    // the scan still enumerates everything.
     val n = 24
     val root = Files.createTempDirectory("graft-serve").toString
     val cat = new Catalog(root)
-    val cfg = cat.create(
+    cat.create(
       """version: 1
         |name: serve_test
         |path: /tmp/unused
@@ -623,19 +644,8 @@ class SplitPruningSpec extends AnyFunSuite {
         |    - name: msg
         |      type: !text
         |""".stripMargin)
-    val d = new graft.config.SchemaDerivation(cfg)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val splits = Await.result(Future.sequence((0 until n).map { i =>
-      Future {
-        val doc = f"""{"tenant": "t$i%04d", "n": $i, "msg": "payload alpha uniqtoken$i"}"""
-        val typed = d.ingest(Seq(doc).toDF("value"), col("value"))
-        val id = f"serve-$i%05d"
-        Indexer.writeSplit(spark, d, typed, cat.splitDir("serve_test", id), id)
-      }
-    }), Duration(300, "seconds"))
-    pool.shutdown()
-    assert(cat.swapSplits("serve_test", Nil, splits.toList))
+    commitOneDocSplits(cat, "serve_test", (0 until n).map(i =>
+      f"""{"tenant": "t$i%04d", "n": $i, "msg": "payload alpha uniqtoken$i"}"""))
     assert(cat.liveSplits("serve_test").length == n)
 
     val search = new Searcher(spark, cat)
@@ -655,6 +665,96 @@ class SplitPruningSpec extends AnyFunSuite {
     // and the un-prunable query still sees everything (conservatism)
     assert(opened("*") == n)
     assert(search.countMatches("serve_test", "*") == n.toLong)
+  }
+
+  private val manyConfig =
+    """version: 1
+      |name: many_test
+      |path: /tmp/unused
+      |schema:
+      |  fields:
+      |    - name: n
+      |      type: !number
+      |        type: i64
+      |    - name: msg
+      |      type: !text
+      |""".stripMargin
+
+  test("a broad search plans from the manifest's file lists: no listing job") {
+    // past Spark's 32-path parallelPartitionDiscovery.threshold a
+    // directory-based read lists the splits with a Spark job on every
+    // request; the manifest-recorded file lists make planning job-free
+    val n = 40
+    val root = Files.createTempDirectory("graft-nolist").toString
+    val cat = new Catalog(root)
+    cat.create(manyConfig)
+    commitOneDocSplits(cat, "many_test",
+      (0 until n).map(i => s"""{"n": $i, "msg": "doc$i"}"""))
+    val live = cat.liveSplits("many_test")
+    assert(live.length == n && live.forall(_.files.nonEmpty),
+      "every written split records its data files")
+    assert(live.forall(_.files.forall { case (f, len) =>
+      f.endsWith(".parquet") && len > 0 }),
+      s"only data files are recorded: ${live.head.files}")
+
+    val search = new Searcher(spark, cat)
+    val sc = spark.sparkContext
+    val group = "graft-nolist-build"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    val df = try {
+      sc.setJobGroup(group, "build a match-all search")
+      try search.searchDf("many_test", "*", 5)
+      finally sc.clearJobGroup()
+    } finally {
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0,
+      s"building a $n-split search must start no Spark job, saw ${jobs.get}")
+    assert(df.collect().length == 5)
+    assert(search.countMatches("many_test", "*") == n.toLong)
+
+    // the manifest-built scan still pushes typed filters into parquet
+    val ranged = search.searchDf("many_test", "n:[10 TO 14]", 10)
+    val plan = ranged.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(plan.contains("PushedFilters") &&
+      plan.contains("GreaterThanOrEqual(n,10)"),
+      s"typed range must push down to the split scan:\n$plan")
+    assert(ranged.collect().length == 5)
+    cat.drop("many_test")
+  }
+
+  test("a missing recorded data file fails search loudly, never partially") {
+    val root = Files.createTempDirectory("graft-missing").toString
+    val cat = new Catalog(root)
+    cat.create(config.replace("prune_test", "missing_test"))
+    val idx = new Indexer(spark, cat)
+    idx.indexFile("missing_test", write(
+      """{"ts": "2020-01-10T00:00:00Z", "msg": "kept alpha"}"""))
+    val lost = idx.indexFile("missing_test", write(
+      """{"ts": "2024-01-10T00:00:00Z", "msg": "lost alpha"}""")).get
+    val search = new Searcher(spark, cat)
+    assert(search.countMatches("missing_test", "msg:alpha") == 2L)
+
+    val (file, _) = lost.files.head
+    Files.delete(java.nio.file.Paths.get(
+      cat.splitDir("missing_test", lost.id), file))
+    // a directory listing would silently skip the file and answer from the
+    // other split; the manifest says the file exists, so the scan fails
+    val e1 = intercept[Exception](search.search("missing_test", "msg:alpha", 10))
+    assert(Iterator.iterate[Throwable](e1)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(file)), e1.toString)
+    intercept[Exception](search.countMatches("missing_test", "msg:alpha"))
+    cat.drop("missing_test")
   }
 
   test("bound extraction composes through booleans") {
