@@ -233,31 +233,31 @@ object Main {
         // (skew visible at a glance: a hot cell serves slow)
         for (f <- flags.get("ann")) {
           val ann = new graft.engine.AnnIndex(spark, cat)
-          ann.meta(name, f) match {
+          ann.snapshot(name, f) match {
             case None => println(s"ann '$f': not trained")
-            case Some((cells, gen, spill)) =>
+            case Some(m) =>
               val cur = cat.manifestState(name)._1
-              val stale = if (cur == gen) "fresh" else s"STALE (index at $cur)"
+              val stale = if (cur == m.gen) "fresh" else s"STALE (index at $cur)"
               val sizes = ann.cellSizes(name, f)
               val tot = sizes.map(_._2).sum
               val mx = if (sizes.isEmpty) 0L else sizes.map(_._2).max
-              val (eb, ee) = ann.epochSpan(name, f)
+              val (eb, ee) = (m.base, m.epoch)
               val span = if (eb == ee) s"1 epoch"
                 else s"${ee - eb + 1} epochs ($eb..$ee — train --compact folds them)"
-              val tier = if (ann.pqOf(name, f) > 0) s", pq=${ann.pqOf(name, f)}"
-                else if (ann.sq8Of(name, f)) ", sq8"
+              val tier = if (m.pq > 0) s", pq=${m.pq}"
+                else if (m.sq8) ", sq8"
                 else ""
               val (cd, cf) = ann.fileStats(name, f)
               val fileNote = if (cd > 0 && cf > 2 * cd)
                 s"; $cf files over $cd cell dirs — run train --compact " +
                   "to collapse the fan-out"
                 else s"; $cf file(s) over $cd cell dir(s)"
-              println(s"ann '$f': $cells cell(s), spill=$spill$tier, " +
-                s"trained at gen $gen ($stale); $tot row(s), " +
+              println(s"ann '$f': ${m.cells} cell(s), spill=${m.spill}$tier, " +
+                s"trained at gen ${m.gen} ($stale); $tot row(s), " +
                 s"largest cell $mx, $span$fileNote")
               // drift + skew + tombstone state (r16/r17): the operator's
               // maintenance signals without reading META by hand
-              ann.driftPpm(name, f).foreach(d =>
+              m.driftPpm.foreach(d =>
                 println(s"ann '$f': drift $d ppm below the post-train fit " +
                   "anchor (positive = the stream shifted; " +
                   "--ann-retrain-threshold triggers on this)"))
@@ -268,7 +268,7 @@ object Main {
               // of the drift trigger's batch-side assignSkew
               if (tot > 0)
                 println(s"ann '$f': skew top-cell ${mx * 1000000L / tot} " +
-                  s"ppm of rows, ${sizes.count(_._2 > 0)} of $cells " +
+                  s"ppm of rows, ${sizes.count(_._2 > 0)} of ${m.cells} " +
                   "cell(s) occupied (a hot cell serves slow — retrain " +
                   "re-sizes the cells)")
               // recall calibration curve (r17; served arm r18 —

@@ -59,22 +59,21 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     new HPath(s"${catalog.catalogRoot}/indexes/$name/ann/$field")
   private def fs(p: HPath) = p.getFileSystem(hconf)
 
-  /** (cells, sourceGen, spill) from META, None when no trained index
-    * exists; spill defaults to 1 for pre-spill METAs. */
-  def meta(name: String, field: String): Option[(Int, Long, Int)] = {
-    val p = new HPath(annRoot(name, field), "META")
-    if (!fs(p).exists(p)) None
-    else {
-      val in = fs(p).open(p)
-      val body =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        finally in.close()
-      val kv = body.trim.split("\n").map(_.split("=", 2))
-        .collect { case Array(k, v) => k -> v }.toMap
-      Some((kv("cells").toInt, kv("gen").toLong,
-        kv.get("spill").map(_.toInt).getOrElse(1)))
-    }
+  /** The trained tier's commit record, read ONCE: META through the
+    * open-and-catch [[ManifestStore.readString]] (None when no trained
+    * index exists), plus the pre-r13 `SPLITS` sidecar only when META
+    * carries no `split=` line. Every operation works from one snapshot,
+    * so no decision mixes two publishes. */
+  def snapshot(name: String, field: String): Option[AnnMeta] = {
+    val root = annRoot(name, field)
+    catalog.metaStore.readString(new HPath(root, "META")).map(AnnMeta.parse(_,
+      catalog.metaStore.readString(new HPath(root, "SPLITS"))))
   }
+
+  /** (cells, sourceGen, spill) from META, None when no trained index
+    * exists. */
+  def meta(name: String, field: String): Option[(Int, Long, Int)] =
+    snapshot(name, field).map(m => (m.cells, m.gen, m.spill))
 
   private def vectorCol(cfg: graft.config.IndexConfig, field: String): Unit = {
     val f = cfg.schema.fields.find(_.name == field).getOrElse(
@@ -110,14 +109,15 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     * same visibility rule as [[knn]]) — the skew histogram `stats
     * --ann` prints; one count aggregate over the partition columns,
     * pruned to metadata + row groups. */
-  def cellSizes(name: String, field: String): Seq[(Long, Long)] =
-    spark.read.parquet(new HPath(annRoot(name, field), "data").toString)
-      .where(col("__epoch").between(
-        lit(baseOf(name, field)), lit(epochOf(name, field))))
+  def cellSizes(name: String, field: String): Seq[(Long, Long)] = {
+    val m = snapshot(name, field).getOrElse(
+      sys.error(s"no trained index for '$field' — run train first"))
+    servedRows(annRoot(name, field), m)
       // the partition column's type is directory-name inferred (INT for
       // small ids) — pin it
       .groupBy(col("__cell").cast("long").as("__cell")).count()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
+  }
 
   /** Layout-health census for `stats --ann`: (cell directories, data
     * files) within the SERVED epoch range. files ≫ dirs is the
@@ -126,50 +126,36 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     * measured 5.4× query latency at 64 files/cell), and
     * `train --compact` rewrites it into the one-file-per-cell form.
     * One bounded directory walk, operator-command cost. */
-  def fileStats(name: String, field: String): (Long, Long) = {
-    val dataDir = new HPath(annRoot(name, field), "data")
-    val f = fs(dataDir)
-    if (!f.exists(dataDir)) return (0L, 0L)
-    val (base, served) = epochSpan(name, field)
-    val epochRe = """__epoch=(\d+)""".r
-    var dirs = 0L
-    var files = 0L
-    f.listStatus(dataDir).foreach { ep =>
-      ep.getPath.getName match {
-        case epochRe(e) if e.toLong >= base && e.toLong <= served =>
-          f.listStatus(ep.getPath).foreach { cell =>
-            if (cell.getPath.getName.startsWith("__cell=")) {
-              dirs += 1
-              files += f.listStatus(cell.getPath)
-                .count(_.getPath.getName.endsWith(".parquet"))
-            }
-          }
-        case _ => ()
-      }
+  def fileStats(name: String, field: String): (Long, Long) =
+    snapshot(name, field).fold((0L, 0L)) { m =>
+      val root = annRoot(name, field)
+      val f = fs(root)
+      val cellDirs = epochDirs(root)(m.serves).flatMap(ep =>
+        f.listStatus(ep).toSeq.map(_.getPath)
+          .filter(_.getName.startsWith("__cell=")))
+      (cellDirs.length.toLong, cellDirs.map(c =>
+        f.listStatus(c).count(_.getPath.getName.endsWith(".parquet")).toLong).sum)
     }
-    (dirs, files)
+
+  /** The `__epoch=N` directories of data/ whose epoch passes `keep` —
+    * the one reader of the layout's epoch directory names (a missing
+    * data/ lists as none). */
+  private def epochDirs(root: HPath)(keep: Long => Boolean): Seq[HPath] = {
+    val dataDir = new HPath(root, "data")
+    try fs(dataDir).listStatus(dataDir).toSeq.map(_.getPath)
+      .filter(p => AnnIndex.partValue(p.getName, "__epoch").exists(keep))
+    catch { case _: java.io.FileNotFoundException => Nil }
   }
 
-  /** Split ids the trained data/ currently covers: `split=` lines of
-    * META — the same atomically-renamed file that carries the epoch, so
-    * coverage and epoch can never disagree after a crash. Pre-r13
-    * indexes kept coverage in a separate SPLITS file; read it as a
-    * fallback when META has no split lines. */
-  private def coveredSplits(name: String, field: String): Set[String] = {
-    val metaP = new HPath(annRoot(name, field), "META")
-    val fromMeta = catalog.metaStore.readString(metaP).map { body =>
-      body.split("\n").map(_.trim).collect {
-        case l if l.startsWith("split=") => l.substring("split=".length)
-      }.filter(_.nonEmpty).toSet
-    }.getOrElse(Set.empty)
-    if (fromMeta.nonEmpty) fromMeta
-    else {
-      val p = new HPath(annRoot(name, field), "SPLITS")
-      catalog.metaStore.readString(p).map(
-        _.split("\n").map(_.trim).filter(_.nonEmpty).toSet)
-        .getOrElse(Set.empty)
-    }
-  }
+  /** The rows `m` serves: data/ cut to its [base, epoch] range. */
+  private def servedRows(root: HPath, m: AnnMeta): DataFrame =
+    spark.read.parquet(new HPath(root, "data").toString).where(inServed(m))
+
+  /** [[AnnMeta.serves]] as a row predicate — the crash contract: rows
+    * outside META's [base, epoch] range are an unreferenced append or a
+    * retired fold and must stay invisible. */
+  private def inServed(m: AnnMeta): Column =
+    col("__epoch").between(lit(m.base), lit(m.epoch))
 
   /** Train the IVF tier: k-means centroids over the field's vectors
     * (seeded by the `cells` smallest content hashes — deterministic, no
@@ -233,7 +219,8 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     val cfg = catalog.load(name)
     vectorCol(cfg, field)
     withMaintenanceLock(annRoot(name, field)) {
-    val tick0 = metaTick(name, field)
+    val prior = snapshot(name, field)
+    val tick0 = prior.fold(0L)(_.tick)
     // STAGED rewrite (r14 advice): a retrain never touches what the
     // current META references. New rows land in the NEXT (invisible)
     // epoch and the model artifacts (centroids / codebooks / sq8 stats)
@@ -253,18 +240,16 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     // winner's range. The pre-r15 form was strictly worse — it
     // overwrote data/ and sq8/ in place, so even a coordinated crash
     // corrupted the surviving META's layout.
-    val priorMeta = meta(name, field)
-    val newEpoch = priorMeta.fold(0)(_ => epochOf(name, field) + 1)
-    if (priorMeta.isEmpty)
+    val newEpoch = prior.fold(0)(_.epoch + 1)
+    prior match {
       // no META has ever referenced data/ — a leftover tree is a
       // crashed first train; replaying on top would double its rows
-      catalog.metaStore.deleteDirBestEffort(
+      case None => catalog.metaStore.deleteDirBestEffort(
         new HPath(annRoot(name, field), "data"))
-    else
       // sweep a crashed prior attempt's orphan epochs before appending
       // under the same number
-      dropOrphanEpochs(annRoot(name, field), baseOf(name, field),
-        epochOf(name, field))
+      case Some(m) => dropOrphanEpochs(annRoot(name, field), m)
+    }
     val modelName = s"t${tick0 + 1}-${java.util.UUID.randomUUID.toString.take(8)}"
     val modelDir = new HPath(annRoot(name, field), s"model/$modelName")
     // ONE manifest read supplies both the recorded generation and the
@@ -550,14 +535,15 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     // APPEND into the staged (invisible) epoch — the current META's
     // served range is untouched until the publish below flips to it.
     writeCells(data, new HPath(root, "data"), overwrite = false)
-    writeMeta(name, field, centRows.length, gen, spill, epoch = newEpoch,
-      covered = splits.map(_.id).toSet, pq = pq, expectTick = tick0,
-      base = newEpoch, sq8 = sq8, model = Some(modelName),
-      reqCells = Some(cells), iters = Some(iterations),
-      fitAnchor = trainFit, pqRes = pq > 0)
+    val published = AnnMeta(tick = tick0 + 1, cells = centRows.length,
+      gen = gen, spill = spill, epoch = newEpoch, pq = pq, sq8 = sq8,
+      pqRes = pq > 0, base = newEpoch, model = Some(modelName),
+      fit = trainFit, reqCells = Some(cells), trainIters = Some(iterations),
+      splits = splits.map(_.id).toSet)
+    writeMeta(name, field, published)
     // committed: retire everything the new META no longer references —
     // pre-train epochs (already invisible) and prior model dirs
-    dropOrphanEpochs(root, newEpoch, newEpoch)
+    dropOrphanEpochs(root, published)
     sweepStaleModels(root, keep = modelName, publishedTick = tick0 + 1)
     (centRows.length, n)
     }
@@ -746,50 +732,44 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     val cfg = catalog.load(name)
     vectorCol(cfg, field)
     withMaintenanceLock(annRoot(name, field)) {
-    val tick0 = metaTick(name, field)
-    val m = meta(name, field).getOrElse(
+    val m = snapshot(name, field).getOrElse(
       sys.error(s"no trained index for '$field' — run train first"))
-    val covered0 = coveredSplits(name, field)
     val (gen, live) = catalog.manifestState(name)
-    val covered = translateThroughMerges(covered0, live)
+    val covered = translateThroughMerges(m.splits, live)
     val liveIds = live.map(_.id).toSet
     val gone = covered.diff(liveIds)
     require(gone.isEmpty,
       s"covered split(s) no longer live and not translatable through a " +
         s"lossless merge lineage: ${gone.take(3).mkString(", ")} — " +
         "refresh would double-serve their documents; re-run a full train")
-    val pq = pqOf(name, field)
-    val sq8 = sq8Of(name, field)
+    val pq = m.pq
+    val sq8 = m.sq8
     val root = annRoot(name, field)
-    val servedEpoch = epochOf(name, field)
-    val baseEp = baseOf(name, field)
-    val modelKey = metaField(name, field, "model")
     val newSplits = live.filterNot(s => covered(s.id))
     if (newSplits.isEmpty) {
       // nothing to append; still publish the translated coverage and
       // the current generation so the staleness note clears (and a
       // post-merge translation sticks without waiting for new data)
-      writeMeta(name, field, m._1, gen, m._3, servedEpoch, covered, pq,
-        expectTick = tick0, base = baseEp, sq8 = sq8, model = modelKey,
-        fitAnchor = fitAnchorOf(name, field),
-        lastFit = lastFitOf(name, field), tomb = tombOf(name, field),
-        reqCells = reqCellsOf(name, field),
-        iters = trainItersOf(name, field), pqRes = pqResOf(name, field))
+      writeMeta(name, field,
+        m.copy(tick = m.tick + 1, gen = gen, splits = covered))
       return (0, 0L)
     }
     // a refresh that crashed between its append and its META publish
     // left orphan epoch directories no query can see — delete them
     // before re-appending the same splits under the same epoch number
-    dropOrphanEpochs(root, baseEp, servedEpoch)
+    dropOrphanEpochs(root, m)
     val (_, _, df) = corpusOf(name, newSplits)
-    val (centArr, cbs, sqSt, _) = servingModel(name, field, root)
+    // the model artifacts come through the serving cache; should META
+    // change after the snapshot above, the tick CAS refuses the publish
+    val (centArr, cbs, sqSt, _) = servingModel(name, field).getOrElse(
+      sys.error(s"META for '$name.$field' vanished during refresh"))
     // an sq8-flagged META whose sq8/ stats are gone must fail loudly:
     // appending code-less rows would silently drop them from the
     // integer-dot ranking (the shortlist filters on __sq8 is-not-null)
     require(!sq8 || sqSt.isDefined,
       s"META for '$name.$field' claims sq8 but the sq8/ stats are " +
         "missing — re-run a full train --sq8")
-    val epoch = servedEpoch + 1
+    val epoch = m.epoch + 1
     val base = df.where(col(field).isNotNull)
     val nNew = base.count()
     val bcCents = spark.sparkContext.broadcast(centArr)
@@ -797,16 +777,15 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     // (pqres=1, every r17+ train) encode per copy AFTER the cell
     // explode; legacy raw layouts keep the one-code-per-row path so
     // their stored codes stay comparable across epochs
-    val pqRes = pqResOf(name, field)
     val fresh0 = withSq8(
-        withCode(base, field, if (pq > 0 && !pqRes) cbs else None),
+        withCode(base, field, if (pq > 0 && !m.pqRes) cbs else None),
         field, if (sq8) sqSt else None)
       .withColumn("__rid", monotonically_increasing_id())
       .withColumn("__epoch", lit(epoch.toLong))
       .withColumn("__cell", explode(
-        graft.exprs.NearestCells.nearest_cells(col(field), bcCents, m._3)))
+        graft.exprs.NearestCells.nearest_cells(col(field), bcCents, m.spill)))
     val fresh =
-      if (pq > 0 && pqRes)
+      if (pq > 0 && m.pqRes)
         withResidualCode(fresh0, field, cbs.getOrElse(sys.error(
           s"META for '$name.$field' claims pq=$pq but the codebooks " +
             "are missing — re-run a full train --pq")), centArr)
@@ -828,15 +807,12 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
         .select(col("fit_ppm")).head().get(0))
         .map(_.asInstanceOf[java.lang.Long].longValue())
     }
-    val anchor = fitAnchorOf(name, field).orElse(batchFit)
     // batch-sized cell-keyed exchange: one file per touched cell in the
     // new epoch instead of one per task per cell (see writeCells)
     writeCells(fresh, new HPath(root, "data"), overwrite = false)
-    writeMeta(name, field, m._1, gen, m._3, epoch,
-      covered ++ newSplits.map(_.id), pq, expectTick = tick0, base = baseEp,
-      sq8 = sq8, model = modelKey, fitAnchor = anchor, lastFit = batchFit,
-      tomb = tombOf(name, field), reqCells = reqCellsOf(name, field),
-      iters = trainItersOf(name, field), pqRes = pqRes)
+    writeMeta(name, field, m.copy(tick = m.tick + 1, gen = gen,
+      epoch = epoch, fit = m.fit.orElse(batchFit), lastFit = batchFit,
+      splits = covered ++ newSplits.map(_.id)))
     (newSplits.length, nNew)
     }
   }
@@ -861,38 +837,28 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     val cfg = catalog.load(name)
     vectorCol(cfg, field)
     withMaintenanceLock(annRoot(name, field)) {
-    val tick0 = metaTick(name, field)
-    val m = meta(name, field).getOrElse(
+    val m = snapshot(name, field).getOrElse(
       sys.error(s"no trained index for '$field' — run train first"))
     val root = annRoot(name, field)
-    val base = baseOf(name, field)
-    val served = epochOf(name, field)
-    val tomb = tombOf(name, field)
     // a single served epoch with no tombstones has nothing to fold; a
     // tombstoned layout folds even at one epoch (the fold is what turns
     // the logical deletes physical)
-    if (base == served && tomb.isEmpty) return (0, 0L)
-    val gen = metaField(name, field, "gen").map(_.toLong).getOrElse(0L)
-    val pq = pqOf(name, field)
-    val covered = coveredSplits(name, field)
+    if (m.base == m.epoch && m.tomb.isEmpty) return (0, 0L)
     // sweep uncommitted leftovers first so the fold sees exactly the
     // served range, then rewrite it into the next (invisible) epoch
-    dropOrphanEpochs(root, base, served)
+    dropOrphanEpochs(root, m)
     val dataDir = new HPath(root, "data")
     // the fold is where --dedup tombstones go physical: retired rows
     // drop out of the rewrite and the fresh META carries no tomb=
-    val rows = antiTomb(root, tomb.map(t => Map("tomb" -> t)).getOrElse(Map.empty))(
-      spark.read.parquet(dataDir.toString)
-        .where(col("__epoch").between(base, served)))
-    val next = served + 1
+    val rows = antiTomb(root, m.tomb)(servedRows(root, m))
+    val next = m.epoch + 1
     // fresh __rid per LOGICAL row: spill copies share their old
     // (__epoch, __rid) pair and must keep sharing the new id (query-time
     // dedup collapses on it); distinct old pairs get a unique monotonic
     // id and the rows join it back — two corpus-keyed exchanges, the
     // honest price of a rewrite, still centroid-free
-    val spill = m._3
     val folded =
-      if (spill > 1) {
+      if (m.spill > 1) {
         val ids = rows.select(col("__epoch").as("__oe"), col("__rid").as("__or"))
           .distinct()
           .withColumn("__nrid", monotonically_increasing_id())
@@ -906,22 +872,17 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
           .withColumn("__rid", monotonically_increasing_id())
           .withColumn("__epoch", lit(next.toLong))
     writeCells(folded, dataDir, overwrite = false)
-    val n = spark.read.parquet(dataDir.toString)
-      .where(col("__epoch") === next).count()
-    writeMeta(name, field, m._1, gen, spill, next, covered, pq,
-      expectTick = tick0, base = next, sq8 = sq8Of(name, field),
-      model = metaField(name, field, "model"),
-      fitAnchor = fitAnchorOf(name, field),
-      lastFit = lastFitOf(name, field),
-      reqCells = reqCellsOf(name, field),
-      iters = trainItersOf(name, field), pqRes = pqResOf(name, field))
+    val published = m.copy(tick = m.tick + 1, base = next, epoch = next,
+      tomb = None)
+    val n = servedRows(root, published).count()
+    writeMeta(name, field, published)
     // retired directories are already invisible; delete is cleanup only
-    dropOrphanEpochs(root, next, next)
+    dropOrphanEpochs(root, published)
     // folded tombstones (the fresh META carries no tomb=) are dead;
     // best-effort sweep of the whole sidecar tree
-    if (tomb.isDefined)
+    if (m.tomb.isDefined)
       catalog.metaStore.deleteDirBestEffort(new HPath(root, "tombstones"))
-    (served - base + 1, n)
+    (m.epoch - m.base + 1, n)
     }
   }
 
@@ -955,95 +916,34 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     * its META publish; below it, retired by a committed compaction whose
     * post-publish delete didn't finish. Both are invisible to queries
     * (the epoch range filter) and swept here before the next append. */
-  private def dropOrphanEpochs(root: HPath, base: Int,
-      servedEpoch: Int): Unit = {
-    val dataDir = new HPath(root, "data")
-    val f = fs(dataDir)
-    if (!f.exists(dataDir)) return
-    val epochRe = """__epoch=(\d+)""".r
-    f.listStatus(dataDir).foreach { st =>
-      st.getPath.getName match {
-        case epochRe(e) if e.toLong > servedEpoch || e.toLong < base =>
-          try { f.delete(st.getPath, true); () }
-          catch { case scala.util.control.NonFatal(_) => () }
-        case _ => ()
-      }
+  private def dropOrphanEpochs(root: HPath, m: AnnMeta): Unit =
+    epochDirs(root)(e => !m.serves(e)).foreach { p =>
+      try { fs(p).delete(p, true); () }
+      catch { case scala.util.control.NonFatal(_) => () }
     }
-  }
 
-  private def metaField(name: String, field: String, key: String): Option[String] = {
-    val p = new HPath(annRoot(name, field), "META")
-    if (!fs(p).exists(p)) return None
-    val in = fs(p).open(p)
-    val body =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-    body.trim.split("\n").map(_.split("=", 2))
-      .collectFirst { case Array(`key`, v) => v }
-  }
-
-  private def epochOf(name: String, field: String): Int =
-    metaField(name, field, "epoch").map(_.toInt).getOrElse(0)
-
-  /** Lower bound of the served epoch range (0 for pre-compaction
-    * METAs): visibility is `base <= __epoch <= epoch`, which is what
-    * lets [[compactEpochs]] retire a long stream's accumulated epoch
-    * directories with one atomic META publish. */
-  private def baseOf(name: String, field: String): Int =
-    metaField(name, field, "base").map(_.toInt).getOrElse(0)
+  /** Whether the stored PQ codes are RESIDUAL codes (see
+    * [[AnnMeta.pqRes]]). */
+  def pqResOf(name: String, field: String): Boolean =
+    snapshot(name, field).exists(_.pqRes)
 
   /** PQ subspace count of the trained index (0 = no code column). */
-  /** Whether the stored PQ codes are RESIDUAL codes (IVFADC, r17 —
-    * every `train --pq` since writes them); legacy layouts return
-    * false and serve through the raw single-LUT path. */
-  def pqResOf(name: String, field: String): Boolean =
-    metaField(name, field, "pqres").contains("1")
-
   def pqOf(name: String, field: String): Int =
-    metaField(name, field, "pq").map(_.toInt).getOrElse(0)
+    snapshot(name, field).fold(0)(_.pq)
 
   /** Whether the trained index stores the SQ8 integer-code column. */
   def sq8Of(name: String, field: String): Boolean =
-    metaField(name, field, "sq8").exists(_.toInt > 0)
+    snapshot(name, field).exists(_.sq8)
 
   /** Served epoch range (base, epoch) — equal after a compaction (or a
     * fresh train); the spread is the directory-growth signal `stats
     * --ann` surfaces so the operator knows when `train --compact` pays. */
   def epochSpan(name: String, field: String): (Int, Int) =
-    (baseOf(name, field), epochOf(name, field))
+    snapshot(name, field).fold((0, 0))(m => (m.base, m.epoch))
 
-  private def fitAnchorOf(name: String, field: String): Option[Long] =
-    metaField(name, field, "fit").map(_.toLong)
-
-  private def reqCellsOf(name: String, field: String): Option[Int] =
-    metaField(name, field, "reqcells").map(_.toInt)
-
-  private def trainItersOf(name: String, field: String): Option[Int] =
-    metaField(name, field, "titer").map(_.toInt)
-
-  private def lastFitOf(name: String, field: String): Option[Long] =
-    metaField(name, field, "lastfit").map(_.toLong)
-
-  /** Centroid-drift reading: how far (ppm of mean nearest-centroid
-    * cosine) the LAST refresh batch's fit sits below the anchor. Since
-    * r17 the anchor is recorded AT TRAIN TIME from a held-out,
-    * training-disjoint slice of the train corpus ([[train]]'s holdN
-    * pass) — so the FIRST refresh batch is already a comparison, and a
-    * stream that drifted between train and its first refresh triggers
-    * instead of silently re-baselining on drifted data (the r16
-    * verdict's finding). The anchor is still OUT-of-sample — ProbeDrift
-    * measured the in-sample train fit ~190k ppm optimistic with no
-    * shift at all, which would false-trigger every stream. None until a
-    * refresh has recorded a `lastfit=` (and, on legacy or tiny-corpus
-    * layouts whose train published no anchor, until a first refresh has
-    * anchored — there drift reads 0 until the SECOND refresh, the
-    * pre-r17 behavior). A retrain clears both and re-records. Positive
-    * = the stream has drifted away from the frozen quantizer; the
-    * `--ann-retrain-threshold` streaming policy retrains when this
-    * crosses the operator's threshold. */
+  /** [[AnnMeta.driftPpm]] of the served META. */
   def driftPpm(name: String, field: String): Option[Long] =
-    for (a <- fitAnchorOf(name, field); l <- lastFitOf(name, field))
-      yield a - l
+    snapshot(name, field).flatMap(_.driftPpm)
 
   /** The trained tier's knobs — what a policy-driven retrain must
     * preserve: storage shape (spill, pq, sq8) PLUS the operator's
@@ -1055,22 +955,20 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     * `reqcells=`/`titer=` lines and fall back to (0, 4) — the defaults
     * those trains actually ran with. */
   def tierKnobs(name: String, field: String): (Int, Int, Boolean, Int, Int) =
-    (meta(name, field).map(_._3).getOrElse(1), pqOf(name, field),
-      sq8Of(name, field),
-      metaField(name, field, "reqcells").map(_.toInt).getOrElse(0),
-      metaField(name, field, "titer").map(_.toInt).getOrElse(4))
+    snapshot(name, field).fold((1, 0, false, 0, 4))(m => (m.spill, m.pq,
+      m.sq8, m.reqCells.getOrElse(0), m.trainIters.getOrElse(4)))
 
   /** The served model directory name (`t<tick>-<uuid>`) — changes
     * exactly when a retrain publishes; None on legacy root-level
     * layouts. */
   def modelOf(name: String, field: String): Option[String] =
-    metaField(name, field, "model")
+    snapshot(name, field).flatMap(_.model)
 
   /** The active tombstone directory name (under `tombstones/`), None
     * when no `--dedup` merge has retired rows since the last
     * train/compact. */
   def tombOf(name: String, field: String): Option[String] =
-    metaField(name, field, "tomb")
+    snapshot(name, field).flatMap(_.tomb)
 
   /** The recall calibration curve a `train --calibrate` persisted —
     * (nprobe, probe recall_ppm, SERVED recall_ppm at the default
@@ -1086,10 +984,17 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     * reads served into the hi slot. Consumed by `knn --target-recall`
     * and `stats --ann`. */
   def readCalib(name: String, field: String)
-      : Option[Seq[(Int, Long, Long, Long)]] = {
-    val root = annRoot(name, field)
-    val mroot = modelOf(name, field)
-      .map(m => new HPath(root, s"model/$m")).getOrElse(root)
+      : Option[Seq[(Int, Long, Long, Long)]] =
+    calibIn(modelDir(annRoot(name, field),
+      snapshot(name, field).flatMap(_.model)))
+
+  /** The directory holding a META's model artifacts: staged trains name
+    * it with `model=`; a legacy (pre-staging) META has none and its
+    * train wrote them in place at the root. */
+  private def modelDir(root: HPath, model: Option[String]): HPath =
+    model.fold(root)(v => new HPath(root, s"model/$v"))
+
+  private def calibIn(mroot: HPath): Option[Seq[(Int, Long, Long, Long)]] = {
     val p = new HPath(mroot, "calib")
     if (!fs(p).exists(p)) None
     else {
@@ -1119,7 +1024,7 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     * Consumed by the streaming `annTombstoneThreshold` policy and
     * `stats --ann`. */
   def tombstoneShare(name: String, field: String): Option[(Long, Long)] =
-    tombOf(name, field).map { td =>
+    snapshot(name, field).flatMap(m => m.tomb.map { td =>
       val root = annRoot(name, field)
       val t = spark.read
         .parquet(new HPath(root, s"tombstones/$td").toString).count()
@@ -1128,14 +1033,9 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
       // than spill under-counts its logical rows and the streaming
       // fold policy fires earlier than the configured share (r17
       // advice). Both counts stay parquet-metadata cheap.
-      val copies = meta(name, field).fold(1) { case (cells, _, sp) =>
-        math.max(1, math.min(sp, cells)) }
-      val rows = spark.read.parquet(new HPath(root, "data").toString)
-        .where(col("__epoch").between(baseOf(name, field),
-          epochOf(name, field)))
-        .count()
-      (t, math.max(1L, rows / copies))
-    }
+      val copies = math.max(1, math.min(m.spill, m.cells))
+      (t, math.max(1L, servedRows(root, m).count() / copies))
+    })
 
   /** Serve-time tombstone exclusion: anti-join the (tiny — ∝ deletes,
     * broadcast) retired-row set against a trained-layout scan. A
@@ -1145,9 +1045,9 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     * process-wide LRU can never serve a stale set, and per-query
     * small-file GETs (the refetch-storm class the serving-model and
     * digest caches exist for) never happen. */
-  private def antiTomb(root: HPath, mm: Map[String, String])(
+  private def antiTomb(root: HPath, tomb: Option[String])(
       df: DataFrame): DataFrame =
-    mm.get("tomb").fold(df) { td =>
+    tomb.fold(df) { td =>
       val key = new HPath(root, s"tombstones/$td").toString
       val rows = Option(AnnIndex.tombCache.get(key)).getOrElse {
         val r = spark.read.parquet(key)
@@ -1194,20 +1094,16 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     vectorCol(cfg, field)
     val d = new SchemaDerivation(cfg)
     withMaintenanceLock(annRoot(name, field)) {
-      val tick0 = metaTick(name, field)
-      val m = meta(name, field).getOrElse(sys.error(
+      val m = snapshot(name, field).getOrElse(sys.error(
         s"no trained index for '$field' — nothing to dedup-sync"))
-      val covered = coveredSplits(name, field)
-      val missing = consumed.diff(covered)
+      val missing = consumed.diff(m.splits)
       require(missing.isEmpty,
         s"dedup merge consumed split(s) the trained tier never covered " +
           s"(${missing.take(3).mkString(", ")}) — the layout cannot claim " +
           "the produced split; re-run a full train")
       val root = annRoot(name, field)
       val (gen, _) = catalog.manifestState(name)
-      val rows = spark.read.parquet(new HPath(root, "data").toString)
-        .where(col("__epoch").between(lit(baseOf(name, field)),
-          lit(epochOf(name, field))))
+      val rows = servedRows(root, m)
       // spill copies share (__epoch, __rid) — collapse them first so a
       // kept row's own spill copies are never tombstoned. DELETE identity
       // is 192 bits (r16 advice): the 64-bit contentTieBreak is fine as a
@@ -1230,7 +1126,6 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
         .where(col("__rn") > 1)
         .select(col("__epoch"), col("__rid"))
       val cnt = losers.count()
-      val newCovered = covered.diff(consumed) + produced.id
       // tombstones are serve-time BROADCAST state (two longs per retired
       // row — ~16 MB per million deletes), so the sidecar is deliberately
       // small-file-shaped (coalesce(1)); when a dedup retires a large
@@ -1240,19 +1135,13 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
       val tname =
         if (cnt == 0) None
         else {
-          val t = s"t${tick0 + 1}-${java.util.UUID.randomUUID.toString.take(8)}"
+          val t = s"t${m.tick + 1}-${java.util.UUID.randomUUID.toString.take(8)}"
           losers.coalesce(1).write.mode("overwrite")
             .parquet(new HPath(root, s"tombstones/$t").toString)
           Some(t)
         }
-      writeMeta(name, field, m._1, gen, m._3, epochOf(name, field),
-        newCovered, pqOf(name, field), expectTick = tick0,
-        base = baseOf(name, field), sq8 = sq8Of(name, field),
-        model = modelOf(name, field),
-        fitAnchor = fitAnchorOf(name, field),
-        lastFit = lastFitOf(name, field), tomb = tname,
-        reqCells = reqCellsOf(name, field),
-        iters = trainItersOf(name, field), pqRes = pqResOf(name, field))
+      writeMeta(name, field, m.copy(tick = m.tick + 1, gen = gen,
+        tomb = tname, splits = m.splits.diff(consumed) + produced.id))
       cnt
     }
   }
@@ -1266,8 +1155,9 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     * can never shadow META's.
     *
     * The publish is a compare-and-swap, not an overwrite: META carries a
-    * monotone `tick=`, the caller passes the tick it observed when its
-    * maintenance operation STARTED, and the commit goes through the same
+    * monotone `tick=`, the caller publishes the snapshot it took when its
+    * maintenance operation STARTED with the tick advanced by one (so the
+    * CAS expects `next.tick - 1`), and the commit goes through the same
     * [[ManifestCommitPoint]] machinery as the manifest (OS-locked rename
     * on file://, native conditional PUT where registered). A maintenance
     * operation that lost a race — a `train --compact` folding while a
@@ -1276,50 +1166,13 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     * with nothing visible changed (its appended epoch directory is
     * outside the winner's served range and gets swept), instead of
     * silently dropping or double-serving a batch. */
-  private def writeMeta(name: String, field: String, cells: Int,
-      gen: Long, spill: Int, epoch: Int, covered: Set[String],
-      pq: Int, expectTick: Long, base: Int = 0,
-      sq8: Boolean = false, model: Option[String] = None,
-      fitAnchor: Option[Long] = None, lastFit: Option[Long] = None,
-      tomb: Option[String] = None, reqCells: Option[Int] = None,
-      iters: Option[Int] = None, pqRes: Boolean = false): Unit = {
+  private def writeMeta(name: String, field: String, next: AnnMeta): Unit = {
     val root = annRoot(name, field)
-    val body = new StringBuilder()
-    body.append(s"tick=${expectTick + 1}\n")
-    body.append(s"cells=$cells\ngen=$gen\nspill=$spill\nepoch=$epoch\npq=$pq\n")
-    if (sq8) body.append("sq8=1\n")
-    // pqres=1: the stored __code column holds RESIDUAL codes (IVFADC
-    // proper, r17 — every `train --pq` since): each spilled copy
-    // encodes v − centroid(its cell), so serving must rank with a
-    // per-probed-cell LUT over the query's residual and MIN over a
-    // row's copies. Absent on legacy raw-coded layouts, which keep the
-    // single-LUT path.
-    if (pqRes) body.append("pqres=1\n")
-    if (base > 0) body.append(s"base=$base\n")
-    model.foreach(m => body.append(s"model=$m\n"))
-    // drift bookkeeping: `fit=` is the anchor — since r17 the TRAIN-time
-    // fit of a held-out, training-disjoint slice (train's holdN pass;
-    // falls back to the first refresh batch's fit on tiny/degenerate
-    // corpora) — and `lastfit=` is the most recent refresh batch's. A
-    // retrain re-records both (fresh model, fresh anchor). The
-    // IN-SAMPLE train fit is deliberately never the anchor — ProbeDrift
-    // measured a ~190k-ppm in/out-of-sample gap with NO distribution
-    // shift, which would false-trigger every stream.
-    fitAnchor.foreach(f => body.append(s"fit=$f\n"))
-    lastFit.foreach(f => body.append(s"lastfit=$f\n"))
-    // tombstones: the directory (under tombstones/) holding the
-    // (__epoch, __rid) rows a --dedup merge retired from serving —
-    // anti-joined at query time, folded away by `train --compact`
-    tomb.foreach(t => body.append(s"tomb=$t\n"))
-    // the operator's ORIGINAL train knobs (requested cells, 0 = census;
-    // train iterations) — what a policy-driven retrain replays so it
-    // cannot silently re-derive a different nlist (see [[tierKnobs]])
-    reqCells.foreach(c => body.append(s"reqcells=$c\n"))
-    iters.foreach(i => body.append(s"titer=$i\n"))
-    covered.toList.sorted.foreach(id => body.append(s"split=$id\n"))
+    val expectTick = next.tick - 1
+    val body = AnnMeta.render(next)
     val metaP = new HPath(root, "META")
-    val bytes = body.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val ok = catalog.metaStore.commitPoint(metaP).commit(expectTick + 1, bytes)
+    val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val ok = catalog.metaStore.commitPoint(metaP).commit(next.tick, bytes)
     if (!ok) {
       // One-time migration wrinkle: on a conditional-put store a LEGACY
       // (tick-less) META reads as generation 0, so the first CAS publish
@@ -1330,7 +1183,7 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
       // tick and the CAS path owns all subsequent publishes.
       val legacy = expectTick == 0L &&
         catalog.metaStore.readString(metaP).exists(!_.contains("tick="))
-      if (legacy) catalog.metaStore.writeStringAtomic(metaP, body.toString)
+      if (legacy) catalog.metaStore.writeStringAtomic(metaP, body)
       else sys.error(
         s"ANN META for '$name.$field' changed while this maintenance " +
           s"operation ran (expected tick $expectTick): a concurrent " +
@@ -1347,10 +1200,6 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     }
     catalog.metaStore.deleteIfExists(new HPath(root, "SPLITS"))
   }
-
-  /** Tick CAS version of META (0 = legacy/absent META). */
-  private def metaTick(name: String, field: String): Long =
-    metaField(name, field, "tick").map(_.toLong).getOrElse(0L)
 
   /** Serialize ANN maintenance (train / refresh / compactEpochs) per
     * (index, field) ACROSS PROCESSES: the stream's per-batch refresh and
@@ -1392,57 +1241,49 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     } finally ch.close()
   }
 
-  /** The serving model — (centroid table, PQ codebooks if any, parsed
-    * META key-values) — through a process-wide LRU keyed on the META
-    * signature (the digest-cache discipline): a knn previously re-read
-    * + collected the centroids/ and codebooks/ parquet on EVERY query —
-    * a cold object-store read per query at scale — and separately
-    * re-fetched META for each of epoch/base/pq; one signature check now
-    * answers all of it. Entries are only trusted and stored when the
-    * signature is content-derived (etag) or its mtime tick is settled,
-    * the [[Catalog.manifestStateCached]] rule. */
-  private def servingModel(name: String, field: String, root: HPath)
-      : (Array[(Long, Array[Float])], Option[graft.exprs.Pq.Codebooks],
-         Option[(Array[Double], Array[Double])], Map[String, String]) = {
-    val sigOpt = catalog.metaStore.fileSignature(new HPath(root, "META"))
-    val trusted = sigOpt.exists(sig => sig.etag.nonEmpty ||
-      System.currentTimeMillis() - sig.mtime >= Catalog.MtimeGranularityMs)
-    val key = sigOpt.map(sig => s"${catalog.catalogRoot}#$name#$field#$sig")
-    val hit = if (trusted) key.flatMap(k =>
-      Option(AnnIndex.servingCache.get(k))) else None
-    hit match {
-      case Some(v) =>
+  /** The serving model — (centroid table, PQ codebooks if any, sq8
+    * stats if any, the META snapshot they belong to) — through a
+    * process-wide LRU keyed on the META signature (the digest-cache
+    * discipline): a knn previously re-read + collected the centroids/
+    * and codebooks/ parquet on EVERY query — a cold object-store read
+    * per query at scale; one signature check now answers all of it, and
+    * every serve-time decision reads the one snapshot in the entry.
+    * None when no META exists. Entries are only trusted and stored when
+    * the signature is content-derived (etag) or its mtime tick is
+    * settled, the [[Catalog.manifestStateCached]] rule. */
+  private def servingModel(name: String, field: String)
+      : Option[AnnIndex.ServingEntry] = {
+    val root = annRoot(name, field)
+    catalog.metaStore.fileSignature(new HPath(root, "META")).flatMap { sig =>
+      val trusted = sig.etag.nonEmpty ||
+        System.currentTimeMillis() - sig.mtime >= Catalog.MtimeGranularityMs
+      val key = s"${catalog.catalogRoot}#$name#$field#$sig"
+      val hit = if (trusted) Option(AnnIndex.servingCache.get(key)) else None
+      if (hit.isDefined) {
         AnnIndex.servingHits.incrementAndGet()
-        v
-      case None =>
+        hit
+      } else {
         AnnIndex.servingMisses.incrementAndGet()
-        val kv = catalog.metaStore
-          .readString(new HPath(root, "META")).map { body =>
-            body.trim.split("\n").map(_.split("=", 2))
-              .collect { case Array(k2, v2) if k2 != "split" => k2 -> v2 }
-              .toMap
-          }.getOrElse(Map.empty)
-        // staged-train layout: META's `model=` names the directory this
-        // publish's artifacts live under; a legacy (pre-staging) META
-        // has none and reads the root-level dirs it wrote in place
-        val mroot = kv.get("model")
-          .map(m => new HPath(root, s"model/$m")).getOrElse(root)
-        val centArr = spark.read
-          .parquet(new HPath(mroot, "centroids").toString)
-          .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-          .sortBy(_._1)
-        val cbP = new HPath(mroot, "codebooks")
-        val cbs = if (fs(cbP).exists(cbP)) Some(readCodebooks(mroot)) else None
-        val sqP = new HPath(mroot, "sq8")
-        val sq = if (fs(sqP).exists(sqP)) {
-          val st = spark.read.parquet(sqP.toString).collect()
-            .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
+        snapshot(name, field).map { m =>
+          val mroot = modelDir(root, m.model)
+          val centArr = spark.read
+            .parquet(new HPath(mroot, "centroids").toString)
+            .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
             .sortBy(_._1)
-          Some((st.map(_._2), st.map(_._3)))
-        } else None
-        val v = (centArr, cbs, sq, kv)
-        if (trusted) key.foreach(k => AnnIndex.servingCache.put(k, v))
-        v
+          val cbP = new HPath(mroot, "codebooks")
+          val cbs = if (fs(cbP).exists(cbP)) Some(readCodebooks(mroot)) else None
+          val sqP = new HPath(mroot, "sq8")
+          val sq = if (fs(sqP).exists(sqP)) {
+            val st = spark.read.parquet(sqP.toString).collect()
+              .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
+              .sortBy(_._1)
+            Some((st.map(_._2), st.map(_._3)))
+          } else None
+          val v = (centArr, cbs, sq, m)
+          if (trusted) AnnIndex.servingCache.put(key, v)
+          v
+        }
+      }
     }
   }
 
@@ -1453,34 +1294,66 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     * finds its cell dirs; the intersection with the probe set is what
     * the scan ever sees — 1 + epochs metadata calls, reads bounded by
     * the probe count. basePath keeps the partition columns derived from
-    * the dir names; the epoch filter is part of the crash contract
-    * (rows outside META's [base, epoch] range are an unreferenced
-    * append or a retired fold and must stay invisible) and, with the
-    * cell filter, stays on as belt-and-braces. */
-  private def probedScan(root: HPath, baseEpoch: Int, servedEpoch: Int,
+    * the dir names; the epoch filter ([[inServed]]) and the cell filter
+    * stay on as belt-and-braces. */
+  private def probedScan(root: HPath, m: AnnMeta,
       probeCells: Set[Long]): DataFrame = {
     val dataDir = new HPath(root, "data")
-    val cellRe = """__cell=(-?\d+)""".r
-    val epochRe = """__epoch=(\d+)""".r
     val f = fs(dataDir)
-    val probedDirs = f.listStatus(dataDir).toSeq
-      .filter(st => st.getPath.getName match {
-        case epochRe(e) => e.toLong >= baseEpoch && e.toLong <= servedEpoch
-        case _          => false
-      })
-      .flatMap(ep => f.listStatus(ep.getPath).toSeq.collect {
-        case st if (st.getPath.getName match {
-          case cellRe(c) => probeCells.contains(c.toLong)
-          case _         => false
-        }) => st.getPath.toString
-      })
+    val probedDirs = epochDirs(root)(m.serves)
+      .flatMap(ep => f.listStatus(ep).toSeq.map(_.getPath).filter(p =>
+        AnnIndex.partValue(p.getName, "__cell").exists(probeCells)))
+      .map(_.toString)
     if (probedDirs.isEmpty)
       spark.read.parquet(dataDir.toString)
         .where(lit(false)) // probed cells hold nothing at all
     else spark.read.option("basePath", dataDir.toString)
       .parquet(probedDirs: _*)
-      .where(col("__cell").isin(probeCells.toSeq: _*) &&
-        col("__epoch").between(lit(baseEpoch), lit(servedEpoch)))
+      .where(col("__cell").isin(probeCells.toSeq: _*) && inServed(m))
+  }
+
+  /** The (nprobe, rerank) a knn serves with. `--target-recall` (r17)
+    * picks the smallest CALIBRATED setting whose measured recall meets
+    * the target, off the curve `train --calibrate` wrote into the served
+    * snapshot's model dir — the SERVED columns (full shortlist + rerank
+    * replay, r17 verdict #1; probe recall alone overstates what the
+    * quantized tiers deliver), escalating the cheaper axis (shortlist
+    * budget before probe count) when the default shortlist is the
+    * binding loss. The curve tops out at nlist, so an unreachable target
+    * serves the full-probe setting rather than failing. An explicit
+    * --nprobe always wins, and an UNTRAINED index serves the brute tier
+    * — exact, so it meets any target trivially (r17 advice: erroring
+    * there blocked both documented outs); the loud error stays on the
+    * curve-lookup path only. */
+  private def tuning(name: String, field: String,
+      served: Option[AnnIndex.ServingEntry], nProbe: Int, rerank: Int,
+      targetRecall: Option[Double]): (Int, Int) = targetRecall match {
+    case Some(r) if nProbe == 0 && served.isDefined =>
+      val curve = calibIn(modelDir(annRoot(name, field), served.get._4.model))
+        .getOrElse(sys.error(s"--target-recall needs a calibration curve " +
+          s"for '$field' — re-run train --calibrate"))
+      AnnIndex.pickSetting(curve, math.min(1000000L, math.round(r * 1000000L)),
+        rerank)
+    case _ => (nProbe, rerank)
+  }
+
+  /** (cell → ADC lookup table) relation for a RESIDUAL-coded layout:
+    * one row per probed cell, the LUT computed over the query's
+    * residual IN THAT CELL by the same `vec_residual` → `pq_lut`
+    * kernels the layout encoded with — bit-parity with the stored
+    * codes by construction. Tiny (≤ probed cells), broadcast; malformed
+    * (null) LUTs drop, mirroring the raw tier's null-code drop. */
+  private def residualLuts(queryVec: Array[Float],
+      cents: Array[(Long, Array[Float])], probed: Set[Long],
+      cb: graft.exprs.Pq.Codebooks): DataFrame = {
+    import spark.implicits._
+    broadcast(cents.filter(c => probed(c._1)).toSeq
+      .map { case (cid, cv) => (cid, cv.toSeq) }.toDF("__lcell", "__ccv")
+      .withColumn("__lut", graft.exprs.Pq.pq_lut(
+        graft.exprs.Pq.vec_residual(
+          typedLit(queryVec.toSeq), col("__ccv")), cb))
+      .where(col("__lut").isNotNull)
+      .select(col("__lcell"), col("__lut")))
   }
 
   /** Top-k cosine neighbors of `queryVec` as (score, doc JSON) rows.
@@ -1502,25 +1375,6 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     * only the newly added cells — so a filtered query returns k
     * results whenever k matches exist, without the caller hand-tuning
     * nprobe per filter selectivity. */
-  /** (cell → ADC lookup table) relation for a RESIDUAL-coded layout:
-    * one row per probed cell, the LUT computed over the query's
-    * residual IN THAT CELL by the same `vec_residual` → `pq_lut`
-    * kernels the layout encoded with — bit-parity with the stored
-    * codes by construction. Tiny (≤ probed cells), broadcast; malformed
-    * (null) LUTs drop, mirroring the raw tier's null-code drop. */
-  private def residualLuts(queryVec: Array[Float],
-      cents: Array[(Long, Array[Float])], probed: Set[Long],
-      cb: graft.exprs.Pq.Codebooks): DataFrame = {
-    import spark.implicits._
-    broadcast(cents.filter(c => probed(c._1)).toSeq
-      .map { case (cid, cv) => (cid, cv.toSeq) }.toDF("__lcell", "__ccv")
-      .withColumn("__lut", graft.exprs.Pq.pq_lut(
-        graft.exprs.Pq.vec_residual(
-          typedLit(queryVec.toSeq), col("__ccv")), cb))
-      .where(col("__lut").isNotNull)
-      .select(col("__lcell"), col("__lut")))
-  }
-
   def knn(name: String, field: String, queryVec: Array[Float], k: Int,
       nProbe: Int = 0, rerank: Int = 0,
       filter: Option[String] = None,
@@ -1530,44 +1384,27 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     val d = new SchemaDerivation(cfg)
     val q = array(queryVec.map(lit).toSeq: _*)
     val searcher = new Searcher(spark, catalog)
-    val m = meta(name, field)
-    // --target-recall (r17): pick the smallest CALIBRATED nprobe whose
-    // measured recall meets the target (train --calibrate wrote the
-    // curve into the served model dir); the curve tops out at nlist,
-    // so an unreachable target serves the full-probe setting rather
-    // than failing. An explicit --nprobe always wins, and an UNTRAINED
-    // index serves the brute tier — exact, so it meets any target
-    // trivially (r17 advice: erroring there blocked both documented
-    // outs); the loud error stays on the curve-lookup path only.
-    val (nProbeEff: Int, rerankEff: Int) = targetRecall match {
-      case Some(r) if nProbe == 0 && m.isDefined =>
-        val curve = readCalib(name, field).getOrElse(sys.error(
-          s"--target-recall needs a calibration curve for '$field' — " +
-            "re-run train --calibrate"))
-        val want = math.min(1000000L, math.round(r * 1000000L))
-        // pick off the SERVED columns (full shortlist + rerank replay,
-        // r17 verdict #1) — probe recall alone overstates what the
-        // quantized tiers deliver — choosing the cheaper escalation
-        // axis (shortlist budget before probe count) when the default
-        // shortlist is the binding loss
-        AnnIndex.pickSetting(curve, want, rerank)
-      case _ => (nProbe, rerank)
-    }
+    // ONE META snapshot (the serving entry's) decides the tier, the
+    // calibration curve, the served range and every layout flag
+    val served =
+      if (nProbe > 0 || targetRecall.isDefined) servingModel(name, field)
+      else None
+    val (nProbeEff, rerankEff) =
+      tuning(name, field, served, nProbe, rerank, targetRecall)
     val pred = filter.map(f => new graft.query.QueryCompiler(d).compile(f))
     def filtered(df: DataFrame): DataFrame =
       pred.fold(df)(p => df.where(p))
     val scored: DataFrame =
-      if (nProbeEff > 0 && m.isDefined) {
+      if (nProbeEff > 0 && served.isDefined) {
         val root = annRoot(name, field)
-        val (cents, cbsOpt, sqStOpt, mm) = servingModel(name, field, root)
+        val (cents, cbsOpt, sqStOpt, mm) = served.get
+        val spilled = mm.spill > 1
         // rank the model-constant centroid table driver-side
         val ranked = cents.map { case (cid, cv) =>
           (cid, AnnIndex.cosine(queryVec, cv))
         }.sortBy { case (cid, c) => (-c, cid) }.map(_._1)
-        val baseEp = mm.get("base").fold(0)(_.toInt)
-        val epoch = mm("epoch").toInt
         def scanCells(cids: Seq[Long]): DataFrame =
-          antiTomb(root, mm)(filtered(probedScan(root, baseEp, epoch, cids.toSet)))
+          antiTomb(root, mm.tomb)(filtered(probedScan(root, mm, cids.toSet)))
         var covered = math.min(nProbeEff, ranked.length)
         var cand0 = scanCells(ranked.take(covered))
         // ADAPTIVE nprobe (r14 #3, built r16): a selective filter can
@@ -1592,12 +1429,12 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
           // all malformed-vector rows must keep escalating, not be
           // declared sufficient and under-fill k (r17 advice)
           val codeCol: Option[String] =
-            if (mm.get("pq").fold(0)(_.toInt) > 0) Some("__code")
-            else if (mm.get("sq8").exists(_.toInt > 0)) Some("__sq8")
+            if (mm.pq > 0) Some("__code")
+            else if (mm.sq8) Some("__sq8")
             else None
           def enough(df: DataFrame): Boolean = {
             val servable = codeCol.fold(df)(c => df.where(col(c).isNotNull))
-            val distinct = if (m.exists(_._3 > 1))
+            val distinct = if (spilled)
               servable.select(col("__epoch"), col("__rid"))
                 .dropDuplicates("__epoch", "__rid")
             else servable
@@ -1614,8 +1451,8 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
         // memory-bandwidth cut that matters when a probed cell holds
         // millions of rows — then fetch ONLY the top-R ADC survivors'
         // full rows for the exact-cosine rerank below
-        val pq = mm.get("pq").fold(0)(_.toInt)
-        val cand = if (pq > 0 && mm.get("pqres").contains("1")) {
+        val pq = mm.pq
+        val cand = if (pq > 0 && mm.pqRes) {
           // RESIDUAL tier (IVFADC, r17 — every train --pq since): the
           // stored codes approximate v − centroid(cell), so each probed
           // cell ranks against its OWN lookup table over the query's
@@ -1637,7 +1474,7 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
             .join(luts, col("__cell") === col("__lcell"))
             .withColumn("__adist",
               graft.exprs.Pq.pq_adc(col("__code"), col("__lut")))
-          val best = if (m.exists(_._3 > 1))
+          val best = if (spilled)
             perCopy.groupBy(col("__epoch"), col("__rid"))
               .agg(min(col("__adist")).as("__adist"))
           else perCopy.select(col("__epoch"), col("__rid"), col("__adist"))
@@ -1663,7 +1500,7 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
           val skinny0 = cand0
             .select(col("__epoch"), col("__rid"), col("__code"))
             .where(col("__code").isNotNull)
-          val skinny = if (m.exists(_._3 > 1))
+          val skinny = if (spilled)
             skinny0.dropDuplicates("__epoch", "__rid") else skinny0
           // (__adist, __epoch, __rid) is a TOTAL order — same as
           // knnBatch's — so ADC-distance ties cut deterministically at
@@ -1675,7 +1512,7 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
             .limit(rFetch)
             .select(col("__epoch"), col("__rid"))
           cand0.join(broadcast(survivors), Seq("__epoch", "__rid"))
-        } else if (mm.get("sq8").exists(_.toInt > 0)) {
+        } else if (mm.sq8) {
           // SQ8 tier: same shortlist-then-rerank shape as PQ, ranking
           // ASYMMETRICALLY — the stored int8 codes against the UNQUANTIZED
           // query folded into per-dim fixed-point weights
@@ -1705,7 +1542,7 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
           val skinny0 = cand0
             .select(col("__epoch"), col("__rid"), col("__sq8"))
             .where(col("__sq8").isNotNull)
-          val skinny = if (m.exists(_._3 > 1))
+          val skinny = if (spilled)
             skinny0.dropDuplicates("__epoch", "__rid") else skinny0
           val survivors = skinny
             .withColumn("__ckey", graft.exprs.Sq8.cos_key(col("__sq8"),
@@ -1721,7 +1558,7 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
         // probed — only a spilled index pays this shuffle, spill=1 stays
         // exchange-free
         val deduped =
-          if (m.exists(_._3 > 1)) cand.dropDuplicates("__epoch", "__rid")
+          if (spilled) cand.dropDuplicates("__epoch", "__rid")
           else cand
         deduped
           .withColumn("__score", CosineSimilarity.cosine_similarity(col(field), q))
@@ -1855,26 +1692,15 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     vectorCol(cfg, field)
     val d = new SchemaDerivation(cfg)
     val searcher = new Searcher(spark, catalog)
-    val m = meta(name, field)
-    // --target-recall, batch face: same curve lookup as the single face
-    // (one nprobe for the whole relation — the calibration is per-model,
-    // not per-query; the filtered escalation below still lifts
-    // under-filled qids past it). Same outs as the single face: an
-    // explicit --nprobe wins, an untrained index serves exact brute.
-    val (nProbeEff: Int, rerankEff: Int) = targetRecall match {
-      case Some(r) if nProbe == 0 && m.isDefined =>
-        val curve = readCalib(name, field).getOrElse(sys.error(
-          s"--target-recall needs a calibration curve for '$field' — " +
-            "re-run train --calibrate"))
-        val want = math.min(1000000L, math.round(r * 1000000L))
-        // pick off the SERVED columns (full shortlist + rerank replay,
-        // r17 verdict #1) — probe recall alone overstates what the
-        // quantized tiers deliver — choosing the cheaper escalation
-        // axis (shortlist budget before probe count) when the default
-        // shortlist is the binding loss
-        AnnIndex.pickSetting(curve, want, rerank)
-      case _ => (nProbe, rerank)
-    }
+    // one META snapshot for the whole batch, as in [[knn]]
+    val served =
+      if (nProbe > 0 || targetRecall.isDefined) servingModel(name, field)
+      else None
+    // --target-recall: one nprobe for the whole relation (the
+    // calibration is per-model, not per-query; the filtered escalation
+    // below still lifts under-filled qids past it)
+    val (nProbeEff, rerankEff) =
+      tuning(name, field, served, nProbe, rerank, targetRecall)
     // metadata pre-filter, same semantics as [[knn]]'s `filter`: one
     // predicate over the stored columns, applied to the probed scan
     // before any per-query shortlist so rerank budgets aren't crowded
@@ -1886,13 +1712,11 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
         org.apache.spark.sql.types.FloatType)).as("qv"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
     val scored: DataFrame =
-      if (nProbeEff > 0 && m.isDefined) {
+      if (nProbeEff > 0 && served.isDefined) {
         val root = annRoot(name, field)
-        val (cents, cbsOpt, sqStOpt, mm) = servingModel(name, field, root)
+        val (cents, cbsOpt, sqStOpt, mm) = served.get
         val bc = spark.sparkContext.broadcast(cents)
-        val baseEp = mm.get("base").fold(0)(_.toInt)
-        val servedEp = mm("epoch").toInt
-        val spilled = m.exists(_._3 > 1)
+        val spilled = mm.spill > 1
         // snapshotted: the probe relation feeds both the probed-cell
         // census below and the candidate join — without the checkpoint
         // the query-side lineage (source read + assignment) runs twice
@@ -1922,14 +1746,14 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
           // malformed-vector rows is declared sufficient yet
           // under-fills k (r17 advice; same shape as the single face)
           val codeCol: Option[String] =
-            if (mm.get("pq").fold(0)(_.toInt) > 0) Some("__code")
-            else if (mm.get("sq8").exists(_.toInt > 0)) Some("__sq8")
+            if (mm.pq > 0) Some("__code")
+            else if (mm.sq8) Some("__sq8")
             else None
           def lowQids(): DataFrame = {
             val cellsNow = probesQ.select(col("__pcell")).distinct()
               .collect().map(_.getLong(0)).toSet
-            val scanNow = antiTomb(root, mm)(filtered(probedScan(root,
-              baseEp, servedEp, cellsNow)))
+            val scanNow =
+              antiTomb(root, mm.tomb)(filtered(probedScan(root, mm, cellsNow)))
             val ids = codeCol.fold(scanNow)(c =>
               scanNow.where(col(c).isNotNull))
               .select(col("__cell"), col("__epoch"), col("__rid"))
@@ -1965,10 +1789,10 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
         }
         val probeCells = probesQ.select(col("__pcell")).distinct()
           .collect().map(_.getLong(0)).toSet
-        val data = antiTomb(root, mm)(filtered(probedScan(root,
-          baseEp, servedEp, probeCells)))
-        val pq = mm.get("pq").fold(0)(_.toInt)
-        if (pq > 0 && mm.get("pqres").contains("1")) {
+        val data =
+          antiTomb(root, mm.tomb)(filtered(probedScan(root, mm, probeCells)))
+        val pq = mm.pq
+        if (pq > 0 && mm.pqRes) {
           // RESIDUAL batch tier (IVFADC, r17 — the single face's per-cell
           // LUT + min-over-copies, batched): each (qid, probed cell)
           // pair computes its own LUT over the query's residual in that
@@ -2036,7 +1860,7 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
           survivors.join(full, Seq("__epoch", "__rid"))
             .withColumn("__score",
               CosineSimilarity.cosine_similarity(col(field), col("qv")))
-        } else if (mm.get("sq8").exists(_.toInt > 0)) {
+        } else if (mm.sq8) {
           // SQ8 batch: fold every query row into its per-dim fixed-point
           // ADC weights (one map-only zip_with under the frozen stored
           // stats — same asymmetric form as the single-query tier), rank
@@ -2171,7 +1995,7 @@ object AnnIndex {
     sys.props.get("graft.ann.model.cache.max").map(_.toInt).getOrElse(64)
   private type ServingEntry =
     (Array[(Long, Array[Float])], Option[graft.exprs.Pq.Codebooks],
-     Option[(Array[Double], Array[Double])], Map[String, String])
+     Option[(Array[Double], Array[Double])], AnnMeta)
   private[engine] val servingCache: java.util.Map[String, ServingEntry] =
     java.util.Collections.synchronizedMap(
       new java.util.LinkedHashMap[String, ServingEntry](16, 0.75f, true) {
@@ -2246,6 +2070,12 @@ object AnnIndex {
     if (den == 0.0) 0.0 else dot / den
   }
 
+  /** The value of a `<column>=<n>` partition directory name (the
+    * layout's `__epoch=` and `__cell=` levels), None for any other name. */
+  private[engine] def partValue(dir: String, column: String): Option[Long] =
+    if (dir.startsWith(column + "=")) dir.substring(column.length + 1).toLongOption
+    else None
+
   /** Fixed-point scale of the SQ8 asymmetric-ranking weights — shared
     * with the gated query tier ([[graft.exprs.Sq8.AdcScale]], rationale
     * there). */
@@ -2265,5 +2095,119 @@ object AnnIndex {
     Array.tabulate(n) { i =>
       math.floor(q(i).toDouble * ((mx(i) - mn(i)) / 255.0) * Sq8AdcScale).toLong
     }
+  }
+}
+
+/** One published ANN META: the vector tier's whole commit record, which
+  * one atomic publish replaces. [[AnnMeta.parse]] and [[AnnMeta.render]]
+  * are the format's only reader and writer; the body is `key=value`
+  * lines in [[AnnMeta.render]]'s fixed order.
+  *
+  * @param tick monotone CAS version (0 = a legacy tick-less META)
+  * @param cells trained centroid count
+  * @param gen manifest generation the layout covers
+  * @param spill copies stored per vector (1 on pre-spill METAs)
+  * @param epoch top of the served epoch range
+  * @param pq PQ subspace count (0 = no `__code` column)
+  * @param sq8 the layout stores the SQ8 `__sq8` code column
+  * @param pqRes the stored PQ codes are RESIDUAL (IVFADC, r17 — every
+  *   `train --pq` since): each spilled copy encodes v − centroid(its
+  *   cell), so serving ranks with a per-probed-cell LUT over the query's
+  *   residual and MIN over a row's copies; legacy raw-coded layouts keep
+  *   the single-LUT path
+  * @param base bottom of the served epoch range (0 before any compaction)
+  * @param model the `model/<name>` directory holding the centroids,
+  *   codebooks, sq8 stats and calibration; None on legacy layouts, whose
+  *   train wrote them at the root
+  * @param fit drift anchor: since r17 the TRAIN-time fit of a held-out,
+  *   training-disjoint slice (falling back to the first refresh batch's
+  *   fit on tiny/degenerate corpora). Never the IN-SAMPLE train fit —
+  *   ProbeDrift measured a ~190k-ppm in/out-of-sample gap with no
+  *   distribution shift, which would false-trigger every stream
+  * @param lastFit the most recent refresh batch's fit
+  * @param tomb the `tombstones/<name>` directory of (__epoch, __rid) rows
+  *   a `--dedup` merge retired from serving — anti-joined at query time,
+  *   folded away by `train --compact`
+  * @param reqCells the operator's requested cells (0 = census √n)
+  * @param trainIters train iterations — with `reqCells`, what a
+  *   policy-driven retrain replays (see [[AnnIndex.tierKnobs]])
+  * @param splits covered split ids, in the same file as the epoch so
+  *   coverage and epoch never disagree after a crash */
+final case class AnnMeta(tick: Long, cells: Int, gen: Long, spill: Int,
+    epoch: Int, pq: Int, sq8: Boolean = false, pqRes: Boolean = false,
+    base: Int = 0, model: Option[String] = None, fit: Option[Long] = None,
+    lastFit: Option[Long] = None, tomb: Option[String] = None,
+    reqCells: Option[Int] = None, trainIters: Option[Int] = None,
+    splits: Set[String] = Set.empty) {
+
+  /** The crash contract's visibility rule: epoch `e` is served iff
+    * `base <= e <= epoch`. Anything above is an append whose publish
+    * never happened; anything below was retired by a committed fold. */
+  def serves(e: Long): Boolean = base <= e && e <= epoch
+
+  /** Centroid-drift reading: how far (ppm of mean nearest-centroid
+    * cosine) the LAST refresh batch's fit sits below the anchor. Since
+    * r17 the anchor is recorded AT TRAIN TIME from a held-out slice, so
+    * the FIRST refresh batch is already a comparison and a stream that
+    * drifted between train and its first refresh triggers instead of
+    * silently re-baselining on drifted data (the r16 verdict's
+    * finding). None until a refresh has recorded a `lastfit=` (and, on
+    * legacy or tiny-corpus layouts whose train published no anchor,
+    * until a first refresh has anchored — there drift reads 0 until the
+    * SECOND refresh). A retrain clears both and re-records. Positive =
+    * the stream has drifted away from the frozen quantizer; the
+    * `--ann-retrain-threshold` streaming policy retrains when this
+    * crosses the operator's threshold. */
+  def driftPpm: Option[Long] = for (a <- fit; l <- lastFit) yield a - l
+}
+
+object AnnMeta {
+  /** Parse a META body. Legacy defaults: no `tick=` reads 0, no
+    * `spill=` 1, no `base=`/`epoch=`/`pq=` 0. With no `split=` line the
+    * covered ids come from `legacySplits` — the pre-r13 `SPLITS`
+    * sidecar, one id a line, read only in that case. A body without
+    * `cells=` or `gen=` is not a META and fails loudly. */
+  def parse(body: String, legacySplits: => Option[String] = None): AnnMeta = {
+    val lines = body.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
+    val kv = lines.map(_.split("=", 2))
+      .collect { case Array(k, v) if k != "split" => k -> v }.toMap
+    def req(k: String): String = kv.getOrElse(k,
+      throw new IllegalStateException(s"ANN META has no '$k=' line"))
+    val ids = lines.collect {
+      case l if l.startsWith("split=") => l.substring("split=".length)
+    }.filter(_.nonEmpty).toSet
+    AnnMeta(tick = kv.get("tick").fold(0L)(_.toLong),
+      cells = req("cells").toInt, gen = req("gen").toLong,
+      spill = kv.get("spill").fold(1)(_.toInt),
+      epoch = kv.get("epoch").fold(0)(_.toInt),
+      pq = kv.get("pq").fold(0)(_.toInt),
+      sq8 = kv.get("sq8").exists(_.toInt > 0),
+      pqRes = kv.get("pqres").contains("1"),
+      base = kv.get("base").fold(0)(_.toInt),
+      model = kv.get("model"), fit = kv.get("fit").map(_.toLong),
+      lastFit = kv.get("lastfit").map(_.toLong), tomb = kv.get("tomb"),
+      reqCells = kv.get("reqcells").map(_.toInt),
+      trainIters = kv.get("titer").map(_.toInt),
+      splits = if (ids.nonEmpty) ids else legacySplits.fold(Set.empty[String])(
+        _.split("\n").map(_.trim).filter(_.nonEmpty).toSet))
+  }
+
+  /** The META body of `m`: the always-present keys first, then each
+    * optional key only when set, then the covered ids sorted. */
+  def render(m: AnnMeta): String = {
+    val b = new StringBuilder()
+    b.append(s"tick=${m.tick}\ncells=${m.cells}\ngen=${m.gen}\n")
+    b.append(s"spill=${m.spill}\nepoch=${m.epoch}\npq=${m.pq}\n")
+    if (m.sq8) b.append("sq8=1\n")
+    if (m.pqRes) b.append("pqres=1\n")
+    if (m.base > 0) b.append(s"base=${m.base}\n")
+    m.model.foreach(v => b.append(s"model=$v\n"))
+    m.fit.foreach(v => b.append(s"fit=$v\n"))
+    m.lastFit.foreach(v => b.append(s"lastfit=$v\n"))
+    m.tomb.foreach(v => b.append(s"tomb=$v\n"))
+    m.reqCells.foreach(v => b.append(s"reqcells=$v\n"))
+    m.trainIters.foreach(v => b.append(s"titer=$v\n"))
+    m.splits.toList.sorted.foreach(id => b.append(s"split=$id\n"))
+    b.toString
   }
 }

@@ -836,4 +836,134 @@ class AdviceRegressionSpec extends AnyFunSuite {
     }
     cat.drop("trbrute")
   }
+
+  private def annDir(cat: Catalog, name: String): java.nio.file.Path =
+    java.nio.file.Paths.get(cat.catalogRoot.stripPrefix("file:"),
+      "indexes", name, "ann", "emb")
+
+  private def readFile(p: java.nio.file.Path): String =
+    new String(Files.readAllBytes(p), "UTF-8")
+
+  test("a legacy META (no tick/spill/base/knob/split lines, coverage in " +
+      "a SPLITS sidecar) reads with its defaults and refreshes onto the " +
+      "tick CAS") {
+    val (cat, root) = vecCatalog("graft-legacymeta", "legann")
+    val docs = Seq(vdoc("a", Seq(1.0, 0.0, 0.0, 0.0)),
+      vdoc("b", Seq(0.0, 0.0, 1.0, 0.0)))
+    graft.cli.Main.run(Array("index", "legann", writeDocs(docs.mkString("\n"))),
+      spark, cat, root)
+    val ann = new graft.engine.AnnIndex(spark, cat)
+    // the retrain serves epoch 1 from base 1 under a 2-iteration model,
+    // so every dropped line below differs from its legacy default
+    ann.train("legann", "emb", cells = 1, iterations = 2)
+    ann.train("legann", "emb", cells = 1, iterations = 2)
+    val dir = annDir(cat, "legann")
+    val body = readFile(dir.resolve("META"))
+    assert(body.contains("\nbase=1\n") && body.contains("\nepoch=1\n") &&
+      body.contains("\ntiter=2\n"), body)
+    val ids = body.split("\n").collect {
+      case l if l.startsWith("split=") => l.stripPrefix("split=") }.toSeq
+    assert(ids.length == 1, body)
+    val dropped = Seq("tick=", "spill=", "base=", "reqcells=", "titer=", "split=")
+    Files.write(dir.resolve("META"), body.split("\n")
+      .filterNot(l => dropped.exists(l.startsWith)).mkString("", "\n", "\n")
+      .getBytes("UTF-8"))
+    Files.write(dir.resolve("SPLITS"), ids.mkString("", "\n", "\n").getBytes("UTF-8"))
+    graft.cli.Main.run(Array("index", "legann",
+      writeDocs(vdoc("c", Seq(0.9, 0.1, 0.0, 0.0)))), spark, cat, root)
+    assert(ann.meta("legann", "emb").map(_._3).contains(1), "spill reads 1")
+    assert(ann.epochSpan("legann", "emb") == ((0, 1)), "base reads 0")
+    val (_, _, _, reqCells, iters) = ann.tierKnobs("legann", "emb")
+    assert((reqCells, iters) == ((0, 4)), "pre-r17 knob defaults")
+    // the sidecar's ids are covered: only the new split is appended
+    val (ns, nv) = ann.refresh("legann", "emb")
+    assert(ns == 1 && nv == 1L, s"refresh appends only the new split: ($ns, $nv)")
+    val after = readFile(dir.resolve("META"))
+    assert(after.startsWith("tick=1\n"), s"first CAS publish is tick 1: $after")
+    assert(after.split("\n").count(_.startsWith("split=")) == 2, after)
+    assert(ids.forall(id => after.contains(s"split=$id\n")), after)
+    assert(!Files.exists(dir.resolve("SPLITS")), "the sidecar is retired")
+    val hits = ann.knn("legann", "emb", Array(1.0f, 0.0f, 0.0f, 0.0f),
+      k = 5, nProbe = 1).collect().map(_.getString(1))
+    assert(hits.length == 3 && hits.distinct.length == 3, hits.mkString("; "))
+    cat.drop("legann")
+  }
+
+  test("META byte format is pinned: golden body, parse/render round " +
+      "trip, and an engine-written META re-renders byte-for-byte") {
+    import graft.engine.AnnMeta
+    val full = AnnMeta(tick = 7, cells = 12, gen = 42, spill = 2, epoch = 5,
+      pq = 8, sq8 = true, pqRes = true, base = 3, model = Some("t7-abcdef01"),
+      fit = Some(912345L), lastFit = Some(901234L), tomb = Some("t6-0badcafe"),
+      reqCells = Some(0), trainIters = Some(6),
+      splits = Set("s-b", "s-a", "s-c"))
+    val golden = "tick=7\ncells=12\ngen=42\nspill=2\nepoch=5\npq=8\n" +
+      "sq8=1\npqres=1\nbase=3\nmodel=t7-abcdef01\nfit=912345\n" +
+      "lastfit=901234\ntomb=t6-0badcafe\nreqcells=0\ntiter=6\n" +
+      "split=s-a\nsplit=s-b\nsplit=s-c\n"
+    assert(AnnMeta.render(full) == golden)
+    assert(AnnMeta.parse(golden) == full)
+    val bare = AnnMeta(tick = 1, cells = 2, gen = 3, spill = 1, epoch = 0,
+      pq = 0, splits = Set("x"))
+    assert(AnnMeta.render(bare) ==
+      "tick=1\ncells=2\ngen=3\nspill=1\nepoch=0\npq=0\nsplit=x\n")
+    assert(AnnMeta.parse(AnnMeta.render(bare)) == bare)
+    val (cat, root) = vecCatalog("graft-metagolden", "goldann")
+    graft.cli.Main.run(Array("index", "goldann", writeDocs((1 to 6).map(i =>
+      vdoc(s"d$i", Seq(1.0 - 0.1 * i, 0.1 * i, 0.0, 0.0))).mkString("\n"))),
+      spark, cat, root)
+    val ann = new graft.engine.AnnIndex(spark, cat)
+    val metaP = annDir(cat, "goldann").resolve("META")
+    def rerenders(): Unit = {
+      val body = readFile(metaP)
+      assert(AnnMeta.render(AnnMeta.parse(body)) == body, body)
+    }
+    ann.train("goldann", "emb", cells = 2, spill = 2, sq8 = true)
+    rerenders()
+    graft.cli.Main.run(Array("index", "goldann",
+      writeDocs(vdoc("n", Seq(0.5, 0.5, 0.0, 0.0)))), spark, cat, root)
+    ann.refresh("goldann", "emb")
+    val refreshed = readFile(metaP)
+    assert(refreshed.contains("\nsq8=1\n") && refreshed.contains("\nfit=") &&
+      refreshed.contains("\nlastfit="), refreshed)
+    rerenders()
+    cat.drop("goldann")
+  }
+
+  test("knn serves a settled META's model from the cache: one miss, then " +
+      "a hit; a refresh publish misses again") {
+    val (cat, root) = vecCatalog("graft-servecache", "scache")
+    graft.cli.Main.run(Array("index", "scache", writeDocs((1 to 6).map(i =>
+      vdoc(s"d$i", Seq(1.0 - 0.1 * i, 0.1 * i, 0.0, 0.0))).mkString("\n"))),
+      spark, cat, root)
+    val ann = new graft.engine.AnnIndex(spark, cat)
+    ann.train("scache", "emb", cells = 2)
+    val metaP = new org.apache.hadoop.fs.Path(
+      annDir(cat, "scache").resolve("META").toUri)
+    val fs = metaP.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    // a META younger than the mtime granularity is never trusted from
+    // the cache; age it instead of sleeping
+    def settle(): Unit = fs.setTimes(metaP,
+      System.currentTimeMillis() - 2 * Catalog.MtimeGranularityMs, -1L)
+    def knn(): Unit = assert(ann.knn("scache", "emb",
+      Array(1.0f, 0.0f, 0.0f, 0.0f), k = 2, nProbe = 1).collect().length == 2)
+    def stats(): (Long, Long) = {
+      val (h, m, _) = graft.engine.AnnIndex.servingCacheStats
+      (h, m)
+    }
+    settle()
+    val (h0, m0) = stats()
+    knn()
+    assert(stats() == ((h0, m0 + 1)), "the first call loads the model")
+    knn()
+    assert(stats() == ((h0 + 1, m0 + 1)), "an unchanged META hits")
+    graft.cli.Main.run(Array("index", "scache",
+      writeDocs(vdoc("n", Seq(0.5, 0.5, 0.0, 0.0)))), spark, cat, root)
+    ann.refresh("scache", "emb")
+    settle()
+    val (h1, m1) = stats()
+    knn()
+    assert(stats() == ((h1, m1 + 1)), "a new publish misses")
+    cat.drop("scache")
+  }
 }
