@@ -18,101 +18,29 @@ import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardOpenOpti
   * Next to wall seconds, each query reports PROCESS CPU seconds (the
   * whole-JVM `OperatingSystemMXBean` counter delta — in local mode every
   * executor thread lives in this JVM, so the delta is the query's actual
-  * compute): wall time on a shared box inflates 1.4–2× under a
-  * co-located process (two judge rounds burned cycles separating that
-  * from regression — SURVEY §11's drift episodes), while CPU cycles
-  * consumed stay flat, so cross-round per-query diffs should read the
-  * `cpu` column first and treat wall-only movement as contention.
+  * compute): wall time on a shared box inflates under a co-located
+  * process while CPU cycles consumed stay flat.
   *
-  * STORM-PROOFING (r17 verdict #3): median-of-3 rejects one bad
-  * iteration but not a SUSTAINED box storm landing on all three (the
-  * r17 seal carried an 8.09 s row whose same-box A/B truth was ~1.3 s,
-  * and nothing in the artifact flagged it). Each query therefore also
-  * records its wall (min, max); a row whose sample looks
-  * storm-contaminated — max/min spread beyond 3× on a non-trivial
-  * query, or a >2× median step vs the PRIOR SEAL with cpu flat (wall
-  * moved, compute didn't: the contention signature, never a
-  * regression) — runs up to 2 extra timed iterations and reports the
-  * refreshed median plus a `"flapped"` annotation, so the committed
-  * JSON carries its own adjudication instead of burning a judge A/B.
-  * The prior seal is read from `SPARK_GRAFT_PRIOR_BENCH` (a previous
-  * run's JSON line; absent → spread detection only). */
+  * This main only times. Whether a change regressed is decided by
+  * paired, alternating `perfbench/run.py` runs of the parent and the
+  * change (README, "State of the engine"); the cross-round adjudicators
+  * that once read these artifacts are in history
+  * (`git show 4a71c24:src/main/scala/graft/tools/BenchDiff.scala`). */
 object Bench {
 
-  /** One query's report: medians over the successful timed runs, the
-    * wall spread, and whether the sample tripped the storm detector. */
-  final case class Measure(wall: Double, cpu: Double, wallMin: Double,
-      wallMax: Double, flapped: Boolean)
+  /** One query's report: medians over the successful timed runs. */
+  final case class Measure(wall: Double, cpu: Double)
 
   /** Median of the successful runs (−1 when every run failed): one
     * transient failure must not discard the valid measurements. */
   def med(xs: Seq[Double]): Double =
     if (xs.isEmpty) -1.0 else xs.sorted.apply(xs.size / 2)
 
-  /** Storm detector over a timed sample: (a) wall max/min spread > 3×
-    * on a non-trivial query (a storm that caught SOME iterations), or
-    * (b) median wall > 2× the prior seal's with cpu flat (< 1.5× — a
-    * storm that caught ALL of them; flat compute is the contention
-    * signature). Rule (b) needs a PRESENT prior cpu median: a seal
-    * lacking the cpu column ([[readPrior]] fills −1) cannot attest
-    * "compute didn't move", and treating absence as flatness would
-    * annotate a genuine wall+cpu regression as a flap — BenchDiff then
-    * voids its wall evidence and a wall-only artifact masks it
-    * entirely (r18 advice). Without prior cpu, spread detection (a)
-    * still applies. Sub-50 ms rows are exempt from (a): scheduler
-    * noise alone spreads them. */
-  def looksFlapped(walls: Seq[Double], cpus: Seq[Double],
-      prior: Option[(Double, Double)]): Boolean =
-    walls.nonEmpty && {
-      val spread = walls.min > 0.05 && walls.max / walls.min > 3.0
-      val vsPrior = prior.exists { case (pw, pc) =>
-        pw > 0.05 && med(walls) > 2.0 * pw &&
-          pc > 0.0 && med(cpus) < 1.5 * pc
-      }
-      spread || vsPrior
-    }
-
-  /** Time one query: three runs, then — if the sample trips
-    * [[looksFlapped]] — up to `extra` refresh runs folded into the
-    * reported median (a storm long enough to also contaminate the
-    * refreshes still shows in the annotation + retained max). */
-  def measure(run: () => Option[(Double, Double)],
-      prior: Option[(Double, Double)], extra: Int = 2): Measure = {
-    val first = Seq(run(), run(), run()).flatten
-    val flap = looksFlapped(first.map(_._1), first.map(_._2), prior)
-    val ok = if (flap) first ++ Seq.fill(extra)(run()).flatten else first
-    if (ok.isEmpty) Measure(-1.0, -1.0, -1.0, -1.0, flapped = false)
-    else Measure(med(ok.map(_._1)), med(ok.map(_._2)),
-      ok.map(_._1).min, ok.map(_._1).max, flap)
+  /** Time one query: three runs, medians over the ones that succeeded. */
+  def measure(run: () => Option[(Double, Double)]): Measure = {
+    val ok = Seq(run(), run(), run()).flatten
+    Measure(med(ok.map(_._1)), med(ok.map(_._2)))
   }
-
-  /** Per-query (wall, cpu) medians of a prior seal's JSON line —
-    * tolerant of a missing/garbled file (empty map: spread-only
-    * detection still applies). */
-  def readPrior(path: String): Map[String, (Double, Double)] =
-    try {
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val node = mapper.readTree(new java.io.File(path))
-      def obj(name: String): Map[String, Double] = {
-        val n = node.get(name)
-        if (n == null || !n.isObject) Map.empty
-        else {
-          val it = n.properties().iterator()
-          val b = Map.newBuilder[String, Double]
-          while (it.hasNext) {
-            val e = it.next()
-            if (e.getValue.isNumber) b += (e.getKey -> e.getValue.asDouble())
-          }
-          b.result()
-        }
-      }
-      val walls = obj("queries")
-      val cpus = obj("cpu")
-      walls.map { case (k, w) => k -> (w, cpus.getOrElse(k, -1.0)) }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] prior seal unreadable ($path): $e")
-      Map.empty
-    }
 
   /** Default per-query output file: the CPU count and the sf directory's
     * last path component are in the name, so an 8-core run cannot
@@ -140,15 +68,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val prior = sys.env.get("SPARK_GRAFT_PRIOR_BENCH")
-      .map(readPrior).getOrElse(Map.empty)
     // the product session, so the bench times the configuration the
     // oracle certifies
     val spark = Graft.session(cpus.toInt, "graft-bench")
 
     // optional positional args name specific queries to bench in
-    // isolation — the controlled-A/B knob for adjudicating a single
-    // mover without the full run's GC/cleaner bleed in the cpu column
+    // isolation, without the full run's GC/cleaner bleed in the cpu column
     val only = args.toSet
     val ordered = SparkEntry.queries.toList.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -174,16 +99,12 @@ object Bench {
           None
         }
       }
-      name -> measure(once _, prior.get(name))
+      name -> measure(once _)
     }
     def field(f: Measure => Double): String = results
       .map { case (k, m) => "\"" + k + "\":" + f(m) }.mkString("{", ",", "}")
     val qs = field(_.wall)
     val cs = field(_.cpu)
-    val mins = field(_.wallMin)
-    val maxs = field(_.wallMax)
-    val flaps = results.collect { case (k, m) if m.flapped => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
     // A failed query must not shrink total (the regression would read as a
     // speedup): report the failure count explicitly and poison the headline
     // value so a BENCH-vs-BASELINE diff flags it.
@@ -193,13 +114,13 @@ object Bench {
     val cpuTotal =
       if (failed > 0) -1.0 else results.map(_._2.cpu).sum
     val sf = Graft.jsonString(sfDir)
-    val full = s"""{"metric":"total_full","value":$total,"unit":"sec","failed":$failed,"cpu_total":$cpuTotal,"flapped":$flaps,"queries":$qs,"cpu":$cs,"wall_min":$mins,"wall_max":$maxs,"sf":$sf}"""
+    val full = s"""{"metric":"total_full","value":$total,"unit":"sec","failed":$failed,"cpu_total":$cpuTotal,"queries":$qs,"cpu":$cs,"sf":$sf}"""
     // r21 (verdict #1): the driver's stdout capture keeps only the LAST
     // 2000 chars, and the full per-query line above has grown to ~25 KB —
     // every BENCH_r*.json on record holds a line truncated mid-JSON
     // (`parsed: null` for five straight rounds). The full JSON therefore
     // ALSO goes to a file (SPARK_GRAFT_BENCH_OUT, default [[defaultOutPath]]
-    // — the per-query ground truth for cross-round diffs), and the LAST
+    // — the per-query record), and the LAST
     // stdout line is a compact summary guaranteed to sit complete inside
     // the capture window. The 172-entry queries map cannot fit there even
     // at 2-decimal precision (~4 KB serialized vs a ~1.9 KB budget), so
@@ -215,7 +136,7 @@ object Bench {
         System.err.println(s"[bench] could not write $outPath: $e")
         "null"
       }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"cpu_total":$cpuTotal,"n_queries":${results.size},"flapped":$flaps,"queries_file":$written,"sf":$sf}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"cpu_total":$cpuTotal,"n_queries":${results.size},"queries_file":$written,"sf":$sf}""")
     spark.stop()
   }
 }

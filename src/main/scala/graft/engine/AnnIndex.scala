@@ -300,9 +300,12 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
       if (n > trainCap) vecs.orderBy(col("vid")).limit(trainCap.toInt)
       else vecs
     // deterministic seed: the kEff vectors with the smallest content
-    // hashes (identical vectors collapse — harmless for a seed)
+    // hashes (identical vectors collapse — harmless for a seed). The
+    // limit leaves its rows in one partition, so a window keyed on the
+    // partition id numbers them as an unpartitioned one would
     val init = vecs.dropDuplicates("vid").orderBy(col("vid")).limit(kEff)
       .select(row_number().over(org.apache.spark.sql.expressions.Window
+          .partitionBy(spark_partition_id())
           .orderBy(col("vid"))).cast("long").as("cid"),
         col("v").as("cv"))
     val rounds = Ann.kmeansTrain(sample, init, iterations)
@@ -1249,14 +1252,13 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     * per query at scale; one signature check now answers all of it, and
     * every serve-time decision reads the one snapshot in the entry.
     * None when no META exists. Entries are only trusted and stored when
-    * the signature is content-derived (etag) or its mtime tick is
-    * settled, the [[Catalog.manifestStateCached]] rule. */
+    * the signature is [[ManifestStore.FileSig.trusted]], the
+    * [[Catalog.manifestStateCached]] rule. */
   private def servingModel(name: String, field: String)
       : Option[AnnIndex.ServingEntry] = {
     val root = annRoot(name, field)
     catalog.metaStore.fileSignature(new HPath(root, "META")).flatMap { sig =>
-      val trusted = sig.etag.nonEmpty ||
-        System.currentTimeMillis() - sig.mtime >= Catalog.MtimeGranularityMs
+      val trusted = sig.trusted
       val key = s"${catalog.catalogRoot}#$name#$field#$sig"
       val hit = if (trusted) Option(AnnIndex.servingCache.get(key)) else None
       if (hit.isDefined) {
@@ -1982,17 +1984,14 @@ object AnnIndex {
     * rewriting the stored tier (minutes at scale), and waiting is
     * strictly better than the pre-lock behavior (two writers
     * interleaving sweep/append/publish on the same data/ tree). */
-  val MaintenanceLockTimeoutMs: Long =
-    sys.props.get("graft.ann.maintenance.lock.timeout.ms").map(_.toLong)
-      .getOrElse(10L * 60 * 1000)
+  val MaintenanceLockTimeoutMs: Long = 10L * 60 * 1000
 
   /** Process-wide serving-model cache (centroids + codebooks), LRU,
     * keyed on catalog root + index + field + META file signature — see
     * [[AnnIndex.servingModel]]. Sized in MODELS: even 64 resident
     * √n-cell models at 768 dims is a few hundred MB, and one index
     * typically serves per process. */
-  private val ServingCacheMax =
-    sys.props.get("graft.ann.model.cache.max").map(_.toInt).getOrElse(64)
+  private val ServingCacheMax = 64
   private type ServingEntry =
     (Array[(Long, Array[Float])], Option[graft.exprs.Pq.Codebooks],
      Option[(Array[Double], Array[Double])], AnnMeta)

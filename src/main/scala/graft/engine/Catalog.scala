@@ -74,7 +74,7 @@ object Catalog {
   /** Upper bound on mtime granularity across supported stores: local FS
     * and HDFS stamp milliseconds, object stores commonly whole seconds.
     * A manifest signature without an etag whose mtime is younger than
-    * this is treated as unsettled by [[Catalog.manifestStateCached]]
+    * this is treated as unsettled ([[ManifestStore.FileSig.trusted]])
     * (same-tick rewrite still possible); 2 s covers second-granularity
     * stamps plus rounding at the tick boundary. */
   val MtimeGranularityMs = 2000L
@@ -154,8 +154,7 @@ object Catalog {
     * name embeds the content md5, so entries are immutable — no
     * invalidation, only LRU pressure. Sized in entries-of-pages: at the
     * default page size, 1024 resident pages cover a 4M-split index. */
-  private val PageCacheMax =
-    sys.props.get("graft.manifest.page.cache.max").map(_.toInt).getOrElse(1024)
+  private val PageCacheMax = 1024
   private val pageCache: java.util.Map[String, List[SplitInfo]] =
     java.util.Collections.synchronizedMap(
       new java.util.LinkedHashMap[String, List[SplitInfo]](64, 0.75f, true) {
@@ -346,11 +345,9 @@ final class Catalog(rootDir: String,
     store.fileSignature(manifestPath(name)) match {
       case None => (0L, Nil)
       case Some(sig) =>
-        val contentDerived = sig.etag.nonEmpty
-        val settled = // mtime tick fully in the past (future mtimes: never)
-          System.currentTimeMillis() - sig.mtime >= Catalog.MtimeGranularityMs
+        val trusted = sig.trusted
         val hit = manifestCache.get(name)
-        if (hit != null && hit._1 == sig && (contentDerived || settled)) hit._2
+        if (hit != null && hit._1 == sig && trusted) hit._2
         else {
           val st = manifestState(name)
           // Only cache trustworthy reads: an UNSETTLED mtime-only
@@ -359,7 +356,7 @@ final class Catalog(rootDir: String,
           // cached entry would then serve the stale parse on every
           // signature hit once the tick settles. Unsettled reads stay
           // uncached (they were bypassing the cache anyway).
-          if (contentDerived || settled) manifestCache.put(name, (sig, st))
+          if (trusted) manifestCache.put(name, (sig, st))
           st
         }
     }

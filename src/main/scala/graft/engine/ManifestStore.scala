@@ -199,7 +199,17 @@ object ManifestStore {
     * whose `FileStatus` carries none (local FS, HDFS); when present
     * (S3A) it is content-derived and makes the signature collision-proof
     * against same-length-same-mtime rewrites. */
-  final case class FileSig(len: Long, mtime: Long, etag: String)
+  final case class FileSig(len: Long, mtime: Long, etag: String) {
+    /** Whether a read made under this signature may be cached and served
+      * on later hits of the same signature: the etag makes it
+      * content-derived, or the mtime tick lies wholly in the past
+      * ([[Catalog.MtimeGranularityMs]]; a future mtime never settles).
+      * A younger mtime-only signature could still be rewritten at the
+      * same (length, mtime) by a cross-process writer. */
+    def trusted: Boolean =
+      etag.nonEmpty ||
+        System.currentTimeMillis() - mtime >= Catalog.MtimeGranularityMs
+  }
 
   /** Flat object stores where "rename" is copy+delete — not a safe
     * manifest publish primitive. */

@@ -97,7 +97,7 @@ object Ann {
           lit(centArr.head._1)))
         .select((col(idCol) +: carry.map(col)) :+ col("cell"): _*)
     } else
-      vecs.crossJoin(cents)
+      vecs.crossJoin(broadcast(cents))
         .withColumn("ccos", cosine(col(vecCol), col("cv")))
         .withColumn("crn", row_number().over(
           Window.partitionBy(col(idCol)).orderBy(col("ccos").desc, col("cid").asc)))
@@ -110,9 +110,8 @@ object Ann {
     * query batches. queries/corpus: (qid, qv) / (vid, v). */
   def ivf(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       nProbe: Int, k: Int): DataFrame = {
-    val cents = broadcast(centroids)
-    val asg = cellAssign(corpus, cents, "vid", "v", maxRank = 1, carry = Seq("v"))
-    val probes = cellAssign(queries, cents, "qid", "qv", nProbe, carry = Seq("qv"))
+    val asg = cellAssign(corpus, centroids, "vid", "v", maxRank = 1, carry = Seq("v"))
+    val probes = cellAssign(queries, centroids, "qid", "qv", nProbe, carry = Seq("qv"))
     topK(probes.join(asg, "cell").where(col("vid") =!= col("qid")), k)
   }
 
@@ -250,8 +249,7 @@ object Ann {
     * k × dim, independent of corpus size.
     * corpus: (vid, v); centroids: (cid, cv). Output: (cell, d, sum_q, n). */
   def kmeansStep(corpus: DataFrame, centroids: DataFrame): DataFrame = {
-    val cents = broadcast(centroids)
-    val asg = cellAssign(corpus, cents, "vid", "v", maxRank = 1, carry = Seq("v"))
+    val asg = cellAssign(corpus, centroids, "vid", "v", maxRank = 1, carry = Seq("v"))
       .select(col("cell"), col("v"))
     asg
       // explicit double math before round: a float-precision product can
@@ -408,7 +406,7 @@ object Ann {
     * Output: (vid, cell, rk) for kept vectors, rk 1..quota. */
   def clusterBalance(corpus: DataFrame, centroids: DataFrame,
       quota: Long): DataFrame = {
-    val asg = cellAssign(corpus, broadcast(centroids), "vid", "v",
+    val asg = cellAssign(corpus, centroids, "vid", "v",
       maxRank = 1, carry = Nil)
     val w = Window.partitionBy(col("cell")).orderBy(col("h"), col("vid"))
     asg
@@ -473,11 +471,10 @@ object Ann {
     * `isQuery`. Output: (qid, rank, neighbor). */
   def sq8Ivf(corpus: DataFrame, isQuery: Column => Column,
       centroids: DataFrame, nProbe: Int, k: Int): DataFrame = {
-    val cents = broadcast(centroids)
     // snapshotted: assignment and probing both consume the quantized corpus
     val q8 = sq8Corpus(corpus).localCheckpoint(eager = false)
-    val asg = cellAssign(q8, cents, "vid", "v", maxRank = 1, carry = Seq("qv8"))
-    val probes = cellAssign(q8.where(isQuery(col("vid"))), cents,
+    val asg = cellAssign(q8, centroids, "vid", "v", maxRank = 1, carry = Seq("qv8"))
+    val probes = cellAssign(q8.where(isQuery(col("vid"))), centroids,
       "vid", "v", nProbe, carry = Seq("qv8"))
       .select(col("vid").as("qid"), col("qv8").as("qq8"), col("cell"))
     topKDot(probes.join(asg, "cell").where(col("vid") =!= col("qid")), k)
@@ -691,18 +688,17 @@ object Ann {
       centroids: DataFrame, nProbe: Int, numSubspaces: Int,
       k: Int): DataFrame = {
     import graft.exprs.Pq
-    val cents = broadcast(centroids)
     val vecs = corpus.select(col("vid"), col("v"))
     val cb = pqCodebooks(vecs, numSubspaces)
     // snapshotted: the coded corpus feeds assignment, probing, and LUTs
     val snap = vecs.withColumn("code", Pq.pq_encode(col("v"), cb))
       .localCheckpoint(eager = false)
-    val asg = cellAssign(snap.where(col("code").isNotNull), cents,
+    val asg = cellAssign(snap.where(col("code").isNotNull), centroids,
       "vid", "v", maxRank = 1, carry = Seq("code"))
     val qs = snap.where(isQuery(col("vid")))
       .withColumn("lut", Pq.pq_lut(col("v"), cb))
       .where(col("lut").isNotNull)
-    val probes = cellAssign(qs, cents, "vid", "v", nProbe, carry = Seq("lut"))
+    val probes = cellAssign(qs, centroids, "vid", "v", nProbe, carry = Seq("lut"))
       .select(col("vid").as("qid"), col("lut"), col("cell"))
     rankCut(
       probes.join(asg, "cell").where(col("vid") =!= col("qid"))
@@ -762,7 +758,7 @@ object Ann {
     val qs = snap.where(isQuery(col("vid")))
       .withColumn("lut", Pq.pq_lut(col("v"), cb))
       .where(col("lut").isNotNull)
-    val probes = cellAssign(qs, broadcast(centroids), "vid", "v", nProbe,
+    val probes = cellAssign(qs, centroids, "vid", "v", nProbe,
         carry = Seq("v", "lut"))
       .select(col("vid").as("qid"), col("v").as("qv"),
         col("lut"), col("cell"))
@@ -829,7 +825,7 @@ object Ann {
       .select(col("cell"), col("vid"), col("v"), col("code"))
     // probes: one LUT per (query, probed cell) over the query's residual
     val qs = vecs.where(isQuery(col("vid")))
-    val probes = cellAssign(qs, broadcast(centroids), "vid", "v", nProbe,
+    val probes = cellAssign(qs, centroids, "vid", "v", nProbe,
         carry = Seq("v"))
       .join(cellCv, "cell")
       .withColumn("lut",
@@ -926,7 +922,7 @@ object Ann {
             .cast("bigint")),
         lit(0L), (a, b) => a + b)
     val qsN = qs.withColumn("mq", mqCol)
-    val probes = cellAssign(qsN, broadcast(centroids), "vid", "v", nProbe,
+    val probes = cellAssign(qsN, centroids, "vid", "v", nProbe,
         carry = Seq("v", "qw", "mq"))
       .select(col("vid").as("qid"), col("v").as("qv"),
         col("qw"), col("mq"), col("cell"))

@@ -966,4 +966,38 @@ class AdviceRegressionSpec extends AnyFunSuite {
     assert(stats() == ((h1, m1 + 1)), "a new publish misses")
     cat.drop("scache")
   }
+
+  test("train logs neither a dropped broadcast hint nor an unpartitioned " +
+      "window") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val (cat, root) = vecCatalog("graft-trainwarn", "twarn")
+    graft.cli.Main.run(Array("index", "twarn", writeDocs((1 to 8).map(i =>
+      vdoc(s"d$i", Seq(1.0 - 0.1 * i, 0.1 * i, 0.0, 0.0))).mkString("\n"))),
+      spark, cat, root)
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("train-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        logged.add(e.getMessage.getFormattedMessage): Unit
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val rootLogger = ctx.getConfiguration.getRootLogger
+    rootLogger.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    try new graft.engine.AnnIndex(spark, cat).train("twarn", "emb", cells = 2)
+    finally {
+      rootLogger.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val warned = logged.toArray.map(_.toString).filter(m =>
+      m.contains("not part of a join relation") ||
+        m.contains("No Partition Defined"))
+    assert(warned.isEmpty, warned.mkString("\n"))
+    cat.drop("twarn")
+  }
 }

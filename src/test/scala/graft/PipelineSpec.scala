@@ -1457,84 +1457,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(sides.toSeq == Seq("test", "train"), sides.mkString(","))
   }
 
-  test("BenchDiff conviction-stability: a regression holding against EVERY " +
-      "baseline reports STABLE; a single-pair conviction is silenced") {
-    import java.nio.file.Files
-    def art(vals: Map[String, Double]): String = {
-      val qs = vals.map { case (k, v) => s""""$k":$v""" }.mkString(",")
-      val cs = vals.map { case (k, v) => s""""$k":$v""" }.mkString(",")
-      val p = Files.createTempFile("bench", ".json")
-      Files.write(p,
-        s"""{"metric":"t","value":1,"queries":{$qs},"cpu":{$cs}}"""
-          .getBytes("UTF-8"))
-      p.toString
-    }
-    val fill = (1 to 6).map(i => s"q$i" -> 1.0).toMap
-    // q_bad regresses vs BOTH baselines; q_flap only vs baseline A
-    // (baseline B already ran slow — the box-noise signature)
-    val baseA = art(fill + ("q_bad" -> 1.0) + ("q_flap" -> 1.0))
-    val baseB = art(fill + ("q_bad" -> 1.0) + ("q_flap" -> 3.0))
-    val cand = art(fill + ("q_bad" -> 3.0) + ("q_flap" -> 3.0))
-    val out = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-      graft.tools.BenchDiff.main(Array(baseA, baseB, cand))
-    }
-    val text = out.toString("UTF-8")
-    assert(text.contains("1 STABLE conviction(s)"), text)
-    assert(text.linesIterator.exists(l =>
-      l.contains("q_bad") && !l.contains("unstable")), text)
-    assert(text.contains("unstable") && text.contains("q_flap"), text)
-    // and all-noise artifacts report zero stable convictions
-    val out2 = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(out2, true, "UTF-8")) {
-      graft.tools.BenchDiff.main(Array(baseA, baseB,
-        art(fill + ("q_bad" -> 1.0) + ("q_flap" -> 3.0))))
-    }
-    assert(out2.toString("UTF-8").contains("zero STABLE convictions"),
-      out2.toString("UTF-8"))
-  }
-
-  test("BenchDiff: an 'improvement' over a stormed/flapped BEFORE run is " +
-      "annotated as wall-evidence-void, not reported as silent progress") {
-    import java.nio.file.Files
-    // the r18-advice face: wallVoid only gated wr > 1.4, so a flapped
-    // BEFORE median (inflated denominator) let a flat-or-regressed
-    // query read as a clean improvement — it must surface annotated
-    def art(vals: Map[String, Double], flapped: Seq[String] = Nil): String = {
-      val m = vals.map { case (k, v) => s""""$k":$v""" }.mkString(",")
-      val f = flapped.map("\"" + _ + "\"").mkString(",")
-      val p = Files.createTempFile("bench", ".json")
-      Files.write(p,
-        (s"""{"metric":"t","value":1,"flapped":[$f],"queries":{$m},""" +
-          s""""cpu":{$m}}""").getBytes("UTF-8"))
-      p.toString
-    }
-    val fill = (1 to 6).map(i => s"q$i" -> 1.0).toMap
-    val before = art(fill + ("q_mask" -> 3.0), flapped = Seq("q_mask"))
-    val after = art(fill + ("q_mask" -> 1.0))
-    val out = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-      graft.tools.BenchDiff.main(Array(before, after))
-    }
-    val text = out.toString("UTF-8")
-    assert(text.linesIterator.exists(l => l.contains("q_mask") &&
-      l.contains("improvement over a stormed/flapped BEFORE")), text)
-    assert(text.contains("0 regression(s)"), text)
-    // the r19-advice face: a flapped BEFORE whose ratio lands IN the
-    // 0.71-1.4 band must not silently count toward the stable set —
-    // the inflated denominator can mask a real regression into band
-    val before2 = art(fill + ("q_band" -> 1.4), flapped = Seq("q_band"))
-    val after2 = art(fill + ("q_band" -> 1.2))
-    val out2 = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(out2, true, "UTF-8")) {
-      graft.tools.BenchDiff.main(Array(before2, after2))
-    }
-    val text2 = out2.toString("UTF-8")
-    assert(text2.linesIterator.exists(l => l.contains("q_band") &&
-      l.contains("wall evidence void vs stormed BEFORE")), text2)
-    assert(text2.contains("0 regression(s)"), text2)
-  }
-
   test("assignFit / assignSkew: integer ppm drift statistics are exact") {
     import spark.implicits._
     val cents = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)))
