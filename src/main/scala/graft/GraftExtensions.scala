@@ -16,20 +16,28 @@ import graft.exprs._
   * .config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   *
-  * Unlike [[graft.functions.GraftFunctions.register]] (temp functions on
-  * one session), injected functions are part of the session builder, so
-  * every session and `newSession()` fork sees them. The function list is
-  * shared between both paths.
+  * Injected functions are part of the session builder, so every session
+  * and `newSession()` fork sees them. This is the engine's one function
+  * registration path. Applying it twice to the same extensions (the class
+  * named twice in `spark.sql.extensions`, or also passed to
+  * `withExtensions`) injects nothing the second time, so no function is
+  * ever registered over itself.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
-    GraftExtensions.functions.foreach { case (name, usage, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft", null, name, usage, ""), builder))
-    }
+    if (GraftExtensions.injected.add(ext))
+      GraftExtensions.functions.foreach { case (name, usage, builder) =>
+        ext.injectFunction((FunctionIdentifier(name),
+          new ExpressionInfo("graft", null, name, usage, ""), builder))
+      }
 }
 
 object GraftExtensions {
+  /** The extensions this class already injected into, by identity. */
+  private val injected = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[SparkSessionExtensions, java.lang.Boolean]))
+
   /** Fold a constant argument expression at registration time — the
     * non-data parameters of the signature/hash expressions (plane counts,
     * moduli, stopword lists) are plain constructor values, so their SQL

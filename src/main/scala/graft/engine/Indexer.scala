@@ -248,10 +248,13 @@ object Indexer {
     *    widened one ulp so Long→Double rounding stays conservative;
     *  - complete value dictionaries (≤ [[DictCap]] distinct values) for
     *    indexed non-array raw-tokenizer text fields, via the bounded-set
-    *    aggregate ([[graft.exprs.BoundedSetAgg]]) — executor state is
+    *    aggregate ([[graft.exprs.BoundedSet]]) — executor state is
     *    capped, so no cardinality probe is needed;
-    *  - token Bloom digests per text field + catch-all ([[TokenBloomAgg]],
-    *    fixed-size state, shrunk driver-side).
+    *  - token Bloom digests per text field + catch-all ([[TokenBloom]],
+    *    state bounded by the dense filter, shrunk driver-side).
+    *
+    * Both custom aggregates are native Catalyst aggregates that serialize
+    * their own buffers: analysis resolves no encoders for them.
     */
   /** Byte-sized-per-task aggregates: count, zone maps, dictionaries. */
   private def scalarAggs(d: SchemaDerivation): List[org.apache.spark.sql.Column] =
@@ -265,14 +268,16 @@ object Indexer {
         min(hex(rf.column)).as(s"__ipmn__${rf.flatName}"),
         max(hex(rf.column)).as(s"__ipmx__${rf.flatName}"))) ++
       dictFieldsOf(d).map(rf =>
-        graft.exprs.BoundedSetAgg.boundedSet(rf.column, DictCap)
+        graft.exprs.BoundedSet.column(rf.column, DictCap)
           .as(s"__dict__${rf.flatName}"))
 
   /** Bloom-digest aggregates — up to [[TermDigest.BuildBits]]/8 bytes of
-    * state per task per field. */
+    * state per task per field, once a task's field passes
+    * [[TokenBloom.SparseMax]] distinct bit positions; 4 bytes a position
+    * below that. */
   private def bloomAggs(d: SchemaDerivation): List[org.apache.spark.sql.Column] =
     digestFieldsOf(d).map { case (f, toks) =>
-      TokenBloomAgg.tokenBloom(toks).as(s"__bloom__$f")
+      TokenBloom.column(toks).as(s"__bloom__$f")
     }
 
   private def statsAggs(d: SchemaDerivation): List[org.apache.spark.sql.Column] =
@@ -318,7 +323,7 @@ object Indexer {
       }
     }.toMap
 
-    // BoundedSetAgg saturates at cap+1 elements — a saturated result means
+    // BoundedSet saturates at cap+1 elements — a saturated result means
     // "field has too many distinct values, no dictionary"; the state is
     // bounded on the executors regardless of cardinality, so this runs
     // inside the single stats pass (no probe, no second scan).
@@ -358,10 +363,12 @@ object Indexer {
   }
 
   /** Observed-metric partials travel in task results to the driver (no
-    * executor-side tree merge), so the Bloom aggregates — up to 512 KB
-    * ([[TermDigest.BuildBits]]/8) per field per task — only ride the
-    * write when tasks × digest-fields stays under this cell budget:
-    * 64 cells ≈ 32 MB of accumulator payload, safely inside the default
+    * executor-side tree merge), so the Bloom aggregates only ride the
+    * write when tasks × digest-fields stays under this cell budget. A
+    * partial is its distinct bit positions (4 bytes each) up to
+    * [[TokenBloom.SparseMax]], then the dense filter: 512 KB
+    * ([[TermDigest.BuildBits]]/8) per field per task at worst, so
+    * 64 cells ≤ 32 MB of accumulator payload, safely inside the default
     * 1g spark.driver.maxResultSize. A fixed task bound alone under-counts
     * schemas with many digested fields (10 text fields at 32 tasks would
     * ship 160 MB); budgeting cells scales the cutoff both ways — a

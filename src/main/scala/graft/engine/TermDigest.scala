@@ -3,9 +3,14 @@ package graft.engine
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StringType}
 
 import scala.jdk.CollectionConverters._
 
@@ -91,9 +96,11 @@ object TermDigest {
     * false-positive rate of 0.35^5 ≈ 0.5%. */
   val K = 5
 
-  /** Build-time filter size: 4 Mbit (512 KB of executor state per field
-    * during the stats pass). Covers ~600k distinct tokens per split at
-    * fill ≈ 0.5; beyond that the filter saturates and is dropped. */
+  /** Build-time filter size: 4 Mbit. Covers ~600k distinct tokens per
+    * split at fill ≈ 0.5; beyond that the filter saturates and is dropped.
+    * The stats pass holds a field's filter as its set bit positions while
+    * it is sparse and as this dense bitmap (512 KB) only past
+    * [[TokenBloom.SparseMax]] positions ([[BloomBuffer]]). */
   val BuildBits: Int = 1 << 22
 
   /** Smallest fold target: 4 Kbit = 512 bytes — the floor for tiny splits. */
@@ -139,7 +146,7 @@ object TermDigest {
     * invalidate every existing sidecar's token bits, while marker bits
     * are already versioned by the sidecar's `pfx` flag. The incremental
     * form lets the build hash all of a token's prefixes in ONE pass over
-    * its chars ([[TokenBloomAgg.reduce]]); [[hashFor]] computes the same
+    * its chars ([[foreachPosition]]); [[hashFor]] computes the same
     * sequence from the full marker key, so probe and insert positions
     * agree by construction (pinned by the marker fold property). */
   private[engine] val Fnv1 = 0xcbf29ce484222325L
@@ -182,6 +189,49 @@ object TermDigest {
     (h1, h2)
   }
 
+  /** The build-size bit positions that inserting `tok` sets, in insert
+    * order (repeats possible): the [[K]] positions of the token's md5
+    * pair, then [[K]] for each prefix marker of 3..8 chars (the
+    * [[PrefixMarker]] family that lets `body:recei*` prune splits). The
+    * markers are hashed incrementally (the FNV pair extends one char at
+    * a time), so all of a token's markers cost one pass over its chars;
+    * [[hashFor]] reproduces the same values from the full marker key on
+    * the probe side. The one insertion kernel: [[TokenBloom]] and
+    * [[denseBits]] both build through it. */
+  def foreachPosition(tok: String)(f: Int => Unit): Unit = {
+    val (t1, t2) = hash128(tok)
+    emitPositions(t1, t2, f)
+    if (tok.length >= PrefixMinLen) {
+      var h1 = (Fnv1 ^ PrefixMarker) * FnvP1
+      var h2 = (Fnv2 ^ PrefixMarker) * FnvP2
+      val maxL = math.min(PrefixMaxLen, tok.length)
+      var l = 0
+      while (l < maxL) {
+        val c = tok.charAt(l)
+        h1 = (h1 ^ c) * FnvP1
+        h2 = (h2 ^ c) * FnvP2
+        l += 1
+        if (l >= PrefixMinLen) emitPositions(h1, h2, f)
+      }
+    }
+  }
+
+  private def emitPositions(h1: Long, h2: Long, f: Int => Unit): Unit = {
+    val mask = (BuildBits - 1).toLong
+    var i = 0
+    while (i < K) { f(((h1 + i.toLong * h2) & mask).toInt); i += 1 }
+  }
+
+  /** Dense reference build: the [[BuildBits]]-bit filter of `tokens`
+    * (nulls skipped), the words [[TokenBloom]]'s output bytes encode. */
+  def denseBits(tokens: Iterable[String]): Array[Long] = {
+    val b = new Array[Long](BuildBits >> 6)
+    tokens.foreach { t =>
+      if (t != null) foreachPosition(t)(pos => b(pos >>> 6) |= 1L << (pos & 63))
+    }
+    b
+  }
+
   def md5HexBytes(bytes: Array[Byte]): String = {
     val md = digest.get()
     md.reset()
@@ -200,7 +250,7 @@ object TermDigest {
     Some(d).filter(_.fill <= MaxFill)
   }
 
-  /** Inverse of [[TokenBloomAgg]]'s byte output. */
+  /** Inverse of [[TokenBloom]]'s byte output. */
   def shrinkBytes(bytes: Array[Byte]): Option[TermDigest] =
     shrink(bytesToLongs(bytes))
 
@@ -211,7 +261,7 @@ object TermDigest {
     out
   }
 
-  private def longsToBytes(longs: Array[Long]): Array[Byte] = {
+  private[engine] def longsToBytes(longs: Array[Long]): Array[Byte] = {
     val buf = java.nio.ByteBuffer.allocate(longs.length << 3)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     buf.asLongBuffer().put(longs)
@@ -249,79 +299,183 @@ object TermDigest {
   }
 }
 
-/** One-pass token-set Bloom build over a terms array column — runs
-  * alongside the other stats aggregates in [[Indexer.splitStats]], so the
-  * digest costs no extra scan. Executor state is a fixed
-  * [[TermDigest.BuildBits]]-bit buffer regardless of cardinality (the
-  * same bounded-state property as [[graft.exprs.BoundedSetAgg]]); merge
-  * is a bitwise OR. The full-size filter is shrunk driver-side
-  * ([[TermDigest.shrink]]) where the fill is known. */
-final class TokenBloomAgg extends Aggregator[Seq[String], Array[Long], Array[Byte]] {
-  override def zero: Array[Long] = new Array[Long](TermDigest.BuildBits >> 6)
+/** One-pass token-set Bloom build over a terms array column, a native
+  * Catalyst aggregate: it runs alongside the other stats aggregates in
+  * [[Indexer.writeSplit]]'s observed metrics (and [[Indexer.splitStats]]),
+  * so the digest costs no extra scan, and it serializes its own buffer,
+  * so analysis resolves no encoders. The buffer ([[BloomBuffer]]) is the
+  * set of build-size bit positions while there are at most
+  * [[TokenBloom.SparseMax]] of them, so a small batch's partial is a few
+  * KB, not a 512 KB bitmap. The output is always the dense
+  * [[TermDigest.BuildBits]]-bit filter as little-endian longs; it is
+  * shrunk driver-side ([[TermDigest.shrinkBytes]]) where the fill is
+  * known. */
+case class TokenBloom(child: Expression, mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[BloomBuffer] with UnaryLike[Expression] {
 
-  private def setBits(b: Array[Long], h1: Long, h2: Long): Unit = {
-    val mask = (TermDigest.BuildBits - 1).toLong
-    var i = 0
-    while (i < TermDigest.K) {
-      val pos = ((h1 + i.toLong * h2) & mask).toInt
-      b(pos >>> 6) |= 1L << (pos & 63)
-      i += 1
-    }
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+  override def prettyName: String = "token_bloom"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"token_bloom wants array<string>, got ${other.sql}")
   }
 
-  override def reduce(b: Array[Long], toks: Seq[String]): Array[Long] = {
+  override def createAggregationBuffer(): BloomBuffer = new BloomBuffer
+
+  override def update(buffer: BloomBuffer, input: InternalRow): BloomBuffer = {
+    val toks = child.eval(input).asInstanceOf[ArrayData]
     if (toks != null) {
-      val it = toks.iterator
-      while (it.hasNext) {
-        val tok = it.next()
-        if (tok != null) {
-          val (t1, t2) = TermDigest.hash128(tok)
-          setBits(b, t1, t2)
-          // Prefix markers 3..8 chars — the [[TermDigest.PrefixMarker]]
-          // family that lets `body:recei*` prune splits. Hashed
-          // incrementally (the FNV pair extends one char at a time), so
-          // ALL of a token's markers cost one pass over its chars and
-          // zero allocations; [[TermDigest.hashFor]] reproduces the same
-          // values from the full marker key on the probe side.
-          if (tok.length >= TermDigest.PrefixMinLen) {
-            val mc = TermDigest.PrefixMarker
-            var h1 = (TermDigest.Fnv1 ^ mc) * TermDigest.FnvP1
-            var h2 = (TermDigest.Fnv2 ^ mc) * TermDigest.FnvP2
-            val maxL = math.min(TermDigest.PrefixMaxLen, tok.length)
-            var l = 0
-            while (l < maxL) {
-              val c = tok.charAt(l)
-              h1 = (h1 ^ c) * TermDigest.FnvP1
-              h2 = (h2 ^ c) * TermDigest.FnvP2
-              l += 1
-              if (l >= TermDigest.PrefixMinLen) setBits(b, h1, h2)
-            }
-          }
-        }
+      var i = 0
+      while (i < toks.numElements()) {
+        if (!toks.isNullAt(i))
+          TermDigest.foreachPosition(toks.getUTF8String(i).toString)(buffer.add)
+        i += 1
       }
     }
-    b
+    buffer
   }
 
-  override def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < x.length) { x(i) |= y(i); i += 1 }
-    x
-  }
+  override def merge(buffer: BloomBuffer, input: BloomBuffer): BloomBuffer =
+    buffer.union(input)
 
-  override def finish(r: Array[Long]): Array[Byte] = {
-    val buf = java.nio.ByteBuffer.allocate(r.length << 3)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.asLongBuffer().put(r)
-    buf.array()
-  }
+  override def eval(buffer: BloomBuffer): Any = buffer.denseBytes
 
-  override def bufferEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+  override def serialize(buffer: BloomBuffer): Array[Byte] = buffer.toBytes
 
-  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  override def deserialize(bytes: Array[Byte]): BloomBuffer =
+    BloomBuffer.fromBytes(bytes)
+
+  override def withNewMutableAggBufferOffset(n: Int): TokenBloom =
+    copy(mutableAggBufferOffset = n)
+  override def withNewInputAggBufferOffset(n: Int): TokenBloom =
+    copy(inputAggBufferOffset = n)
+  override protected def withNewChildInternal(c: Expression): TokenBloom =
+    copy(child = c)
 }
 
-object TokenBloomAgg {
-  def tokenBloom(c: Column): Column = udaf(new TokenBloomAgg).apply(c)
+object TokenBloom {
+  /** Distinct positions a buffer holds before it turns into the dense
+    * bitmap: 64 KB of positions against the 512 KB bitmap. */
+  val SparseMax = 16384
+
+  def column(toks: Column): Column =
+    graft.exprs.exprs.toColumn(TokenBloom(graft.exprs.exprs.toExpr(toks)))
+}
+
+/** [[TokenBloom]]'s aggregation buffer: distinct build-size bit positions
+  * in an open-addressing int set (`-1` = empty slot, load ≤ 1/2) until
+  * there are more than [[TokenBloom.SparseMax]], then the dense
+  * [[TermDigest.BuildBits]]-bit filter. Both forms denote the same filter:
+  * a position is in the set iff its bit is set. */
+final class BloomBuffer private (private var slots: Array[Int],
+    private var size: Int, private var dense: Array[Long]) {
+
+  def this() = this(BloomBuffer.emptySlots(64), 0, null)
+
+  def isDense: Boolean = dense != null
+
+  def add(pos: Int): Unit =
+    if (dense != null) dense(pos >>> 6) |= 1L << (pos & 63)
+    else {
+      val mask = slots.length - 1
+      var i = BloomBuffer.slotOf(pos, mask)
+      while (slots(i) != -1) {
+        if (slots(i) == pos) return
+        i = (i + 1) & mask
+      }
+      slots(i) = pos
+      size += 1
+      if (size > TokenBloom.SparseMax) densify()
+      else if (size * 2 > slots.length) rehash(slots.length * 2)
+    }
+
+  private def foreachSparse(f: Int => Unit): Unit = {
+    var i = 0
+    while (i < slots.length) { if (slots(i) != -1) f(slots(i)); i += 1 }
+  }
+
+  private def rehash(capacity: Int): Unit = {
+    val old = slots
+    slots = BloomBuffer.emptySlots(capacity)
+    size = 0
+    var i = 0
+    while (i < old.length) { if (old(i) != -1) add(old(i)); i += 1 }
+  }
+
+  private def densify(): Unit = {
+    val b = new Array[Long](TermDigest.BuildBits >> 6)
+    foreachSparse(pos => b(pos >>> 6) |= 1L << (pos & 63))
+    dense = b
+    slots = null
+    size = 0
+  }
+
+  /** Add every position of `other`; returns this buffer. */
+  def union(other: BloomBuffer): BloomBuffer = {
+    if (other.dense != null) {
+      if (dense == null) densify()
+      var i = 0
+      while (i < dense.length) { dense(i) |= other.dense(i); i += 1 }
+    } else other.foreachSparse(add)
+    this
+  }
+
+  /** The dense filter as little-endian longs, [[TokenBloom]]'s output. */
+  def denseBytes: Array[Byte] =
+    if (dense != null) TermDigest.longsToBytes(dense)
+    else {
+      // bit `pos` of little-endian longs is bit `pos & 7` of byte `pos >>> 3`
+      val out = new Array[Byte](TermDigest.BuildBits >> 3)
+      foreachSparse(pos => out(pos >>> 3) = (out(pos >>> 3) | (1 << (pos & 7))).toByte)
+      out
+    }
+
+  /** Storage form: tag 0, count, the positions as ints; or tag 1, the
+    * dense words as longs. Little-endian throughout. */
+  def toBytes: Array[Byte] =
+    if (dense != null) {
+      val buf = java.nio.ByteBuffer.allocate(1 + (dense.length << 3))
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      buf.put(1.toByte)
+      buf.asLongBuffer().put(dense)
+      buf.array()
+    } else {
+      val buf = java.nio.ByteBuffer.allocate(5 + (size << 2))
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      buf.put(0.toByte).putInt(size)
+      foreachSparse(buf.putInt(_))
+      buf.array()
+    }
+}
+
+object BloomBuffer {
+  private def emptySlots(n: Int): Array[Int] = {
+    val a = new Array[Int](n)
+    java.util.Arrays.fill(a, -1)
+    a
+  }
+
+  /** Multiplicative (Fibonacci) hashing: bits 16 and up of `pos * 2^32/φ`. */
+  private def slotOf(pos: Int, mask: Int): Int = ((pos * 0x9e3779b9) >>> 16) & mask
+
+  def fromBytes(bytes: Array[Byte]): BloomBuffer = {
+    val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    buf.get() match {
+      case 0 =>
+        val n = buf.getInt()
+        val b = new BloomBuffer
+        var i = 0
+        while (i < n) { b.add(buf.getInt()); i += 1 }
+        b
+      case 1 =>
+        val dense = new Array[Long](TermDigest.BuildBits >> 6)
+        buf.asLongBuffer().get(dense)
+        new BloomBuffer(null, 0, dense)
+      case t => throw new IllegalStateException(s"bad token-bloom buffer tag $t")
+    }
+  }
 }

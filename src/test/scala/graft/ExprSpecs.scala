@@ -236,7 +236,6 @@ class SigExprsSpec extends AnyFunSuite {
   }
 
   test("new expressions have working SQL faces") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         |  simhash_sig(array('a', 'b')) AS sh,
@@ -389,7 +388,6 @@ class ArrayMatchSpec extends AnyFunSuite {
   }
 
   test("search-hot-path SQL faces work") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         |  count_token_eq(array('a', 'b', 'a'), 'a') AS c,
@@ -403,7 +401,6 @@ class ArrayMatchSpec extends AnyFunSuite {
   }
 
   test("tokenizer SQL faces: bpe_encode and unigram_encode with constant models") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         |  bpe_encode('lower', array('l o', 'lo w', 'e r')) AS bpe,
@@ -427,7 +424,6 @@ class ArrayMatchSpec extends AnyFunSuite {
     assert(b.getSeq[String](1) == Seq("Ġlow"), b.getSeq[String](1))
   }
   test("WordPiece: longest-match encode, UNK semantics, replay parity, SQL face") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         |  wordpiece_encode('unable',

@@ -433,8 +433,7 @@ class PropertySpec extends AnyFunSuite {
         Gen.chooseNum(1, 12).flatMap(l =>
           Gen.stringOfN(l, Gen.frequency((9, Gen.alphaNumChar), (1, Gen.oneOf('é', '語', ' ')))))))
     check("digest membership survives folding")(Prop.forAll(toks) { ts =>
-      val agg = new graft.engine.TokenBloomAgg
-      val bits = ts.foldLeft(agg.zero)((b, t) => agg.reduce(b, Seq(t)))
+      val bits = TermDigest.denseBits(ts)
       // tokens AND their ingest-inserted prefix markers must all survive
       // every fold level — a marker lost to folding would wrong-prune a
       // prefix query
@@ -452,6 +451,94 @@ class PropertySpec extends AnyFunSuite {
         // marker absent — it must answer true (never-prune-on-missing)
         new TermDigest(TermDigest.K, d.bits, hasPrefixes = false)
           .mightContain(TermDigest.prefixKey("zzzneverinserted"))
+    })
+  }
+
+  test("token_bloom partials, in any split and merge order, equal the dense reference build") {
+    // The stats aggregate's sparse position buffer must be invisible:
+    // whatever rows the tasks see and whatever order the driver merges
+    // their partials in, `eval` is the dense filter's exact bytes, and a
+    // buffer survives its storage form in both the sparse and dense form.
+    import graft.engine.{BloomBuffer, TermDigest, TokenBloom}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val agg = TokenBloom(BoundReference(0, ArrayType(StringType), nullable = true))
+    def row(toks: Seq[String]): InternalRow =
+      if (toks == null) InternalRow(null)
+      else InternalRow(new GenericArrayData(toks.map(t =>
+        if (t == null) null else UTF8String.fromString(t)).toArray[Any]))
+    def bytesOf(longs: Array[Long]): Array[Byte] = {
+      val buf = java.nio.ByteBuffer.allocate(longs.length << 3)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      buf.asLongBuffer().put(longs)
+      buf.array()
+    }
+    def roundTrips(b: BloomBuffer): Boolean = {
+      val back = agg.deserialize(agg.serialize(b))
+      back.isDense == b.isDense &&
+        java.util.Arrays.equals(back.denseBytes, b.denseBytes)
+    }
+    def build(rows: Seq[Seq[String]]): BloomBuffer =
+      rows.foldLeft(agg.createAggregationBuffer())((b, r) => agg.update(b, row(r)))
+
+    val word: Gen[String] = Gen.chooseNum(1, 12).flatMap(l =>
+      Gen.stringOfN(l, Gen.frequency((9, Gen.alphaNumChar), (1, Gen.oneOf('é', '語', ' ')))))
+    val tok: Gen[String] = Gen.frequency((30, word), (1, Gen.const(null)))
+    // a tenth of the cases hold enough long tokens (35 positions each)
+    // for one partial, or the union of several, to pass SparseMax
+    val toks: Gen[List[String]] = Gen.frequency(
+      (9, Gen.chooseNum(0, 80).flatMap(Gen.listOfN(_, tok))),
+      (1, Gen.chooseNum(500, 1200).flatMap(Gen.listOfN(_,
+        Gen.chooseNum(8, 12).flatMap(Gen.stringOfN(_, Gen.alphaNumChar))))))
+    val cases = for {
+      ts <- toks
+      // rows of 1..6 tokens; each case also feeds one null array
+      rowCuts <- Gen.listOfN(ts.length, Gen.chooseNum(0, 5))
+      parts <- Gen.chooseNum(1, 5)
+      owner <- Gen.listOfN(ts.length + 1, Gen.chooseNum(0, parts - 1))
+      order <- Gen.listOfN(parts * 2, Gen.chooseNum(0, 1000))
+      nullRow <- Gen.chooseNum(0, 3)
+    } yield (ts, rowCuts, parts, owner, order, nullRow)
+
+    // both buffer forms are reached and round-trip
+    val small = build(Seq(Seq("alpha", "beta")))
+    val big = build(Seq((1 to 1000).map(i => Integer.toHexString(i * 0x9e3779b1))))
+    assert(!small.isDense && big.isDense)
+    assert(roundTrips(small) && roundTrips(big))
+    assert(java.util.Arrays.equals(agg.eval(agg.createAggregationBuffer())
+      .asInstanceOf[Array[Byte]], new Array[Byte](TermDigest.BuildBits >> 3)))
+
+    // no shrinking: a failing thousand-token case would shrink for minutes
+    check("token_bloom == dense reference")(Prop.forAllNoShrink(cases) {
+      case (ts, rowCuts, parts, owner, order, nullRow) =>
+        // cut the token list into rows, deal the rows out to partials
+        val rows = scala.collection.mutable.ListBuffer.empty[Seq[String]]
+        var rest = ts
+        rowCuts.foreach { c =>
+          if (rest.nonEmpty) { rows += rest.take(c + 1); rest = rest.drop(c + 1) }
+        }
+        val dealt = Array.fill(parts)(List.empty[Seq[String]])
+        rows.zipWithIndex.foreach { case (r, i) => dealt(owner(i)) ::= r }
+        dealt(nullRow % parts) ::= null
+        val partials = dealt.map(rs => build(rs.reverse)).toBuffer
+        val partialsOk = partials.forall(roundTrips)
+        // merge in a random pairing order, each partial through its
+        // storage form as it would arrive from a task
+        var pool = partials.map(b => agg.deserialize(agg.serialize(b)))
+        var k = 0
+        while (pool.length > 1) {
+          val i = order(k % order.length) % pool.length
+          val j = (i + 1 + order((k + 1) % order.length) % (pool.length - 1)) % pool.length
+          val merged = agg.merge(pool(i), pool(j))
+          pool = pool.zipWithIndex.collect { case (b, x) if x != i && x != j => b } :+ merged
+          k += 1
+        }
+        val got = agg.eval(pool.head).asInstanceOf[Array[Byte]]
+        partialsOk && roundTrips(pool.head) &&
+          java.util.Arrays.equals(got, bytesOf(TermDigest.denseBits(ts)))
     })
   }
 
@@ -514,8 +601,7 @@ class PropertySpec extends AnyFunSuite {
     val toks: Gen[List[String]] = Gen.chooseNum(1, 50)
       .flatMap(n => Gen.listOfN(n, Gen.alphaNumStr.suchThat(_.nonEmpty)))
     check("render/parse fixpoint")(Prop.forAll(toks) { ts =>
-      val agg = new graft.engine.TokenBloomAgg
-      val bits = ts.foldLeft(agg.zero)((b, t) => agg.reduce(b, Seq(t)))
+      val bits = TermDigest.denseBits(ts)
       TermDigest.shrink(bits).forall { d =>
         val parsed = TermDigest.parseAll(new String(
           TermDigest.renderAll(Map("f" -> d)), "UTF-8"))("f")

@@ -757,6 +757,85 @@ class SplitPruningSpec extends AnyFunSuite {
     cat.drop("missing_test")
   }
 
+  test("a commit's stats and digest sidecar are byte-identical to the pinned build") {
+    // Pins what one small batch commits: the `_digests.json` bytes (its
+    // md5), the dictionaries, the zone maps and the time range, for raw,
+    // tokenized, numeric, ip, declared dynamic and catch-all fields. Any
+    // change to how the stats aggregates build or merge that moves a bit
+    // of a digest fails here.
+    val root = Files.createTempDirectory("graft-ident").toString
+    val cat = new Catalog(root)
+    cat.create(
+      """version: 1
+        |name: ident_test
+        |path: /tmp/unused
+        |schema:
+        |  time_field: ts
+        |  fields:
+        |    - name: ts
+        |      type: !datetime
+        |        formats: [rfc3339]
+        |    - name: severity
+        |      type: !text
+        |        indexed:
+        |          tokenizer: raw
+        |    - name: msg
+        |      type: !text
+        |    - name: latency
+        |      type: !number
+        |        type: f64
+        |    - name: addr
+        |      type: !ip
+        |    - name: attrs
+        |      type: !dynamic_object
+        |        indexed:
+        |          tokenizer: default
+        |""".stripMargin)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val split = try {
+      new Indexer(spark, cat).indexFile("ident_test", write(
+        """{"ts": "2024-03-01T10:00:00Z", "severity": "INFO", "msg": "Receiver started on port 8080", "latency": 1.5, "addr": "10.0.0.1", "attrs": {"service": "ingest", "zone": "east"}, "host": "web-1"}
+          |{"ts": "2024-03-01T10:05:30Z", "severity": "WARN", "msg": "slow response from backend", "latency": 250.25, "addr": "10.0.3.7", "attrs": {"service": "query"}, "user": "alice"}
+          |{"ts": "2024-03-01T11:00:00.123456Z", "severity": "ERROR", "msg": "connection refused: café 語", "latency": -3, "addr": "2001:db8::1", "attrs": {"service": "ingest", "retry": 3}, "host": "web-2"}
+          |{"ts": "2024-03-01T09:59:59Z", "severity": "INFO", "msg": "heartbeat ok", "latency": 0, "addr": "192.168.1.20"}
+          |{"ts": "2024-03-02T00:00:00Z", "severity": "DEBUG", "msg": "Receiver stopped", "latency": 12.75, "addr": "10.0.0.2", "attrs": {"zone": "west"}, "tags": ["a", "b"]}""".stripMargin)).get
+    } finally {
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    val sidecar = java.nio.file.Paths.get(cat.splitDir("ident_test", split.id),
+      graft.engine.TermDigest.SidecarName)
+    val md5 = graft.engine.TermDigest.md5HexBytes(Files.readAllBytes(sidecar))
+    assert(split.numDocs == 5)
+    assert(split.digest.contains(md5))
+    assert(md5 == "c0488d4743c1aabd0ee207390a054e76")
+    assert(split.dicts == Map("severity" -> List("DEBUG", "ERROR", "INFO", "WARN")))
+    assert(split.numStats == Map("latency" -> (-3.0000000000000004, 250.25000000000003)))
+    assert(split.hexStats == Map("addr" ->
+      ("00000000000000000000FFFF0A000001", "20010DB8000000000000000000000001")))
+    assert((split.minTs, split.maxTs) == (Some(1709287199000000L), Some(1709337600000000L)))
+    // the stats rode the write as native aggregates: no encoder-backed
+    // ScalaAggregator in the committing plan
+    import scala.jdk.CollectionConverters._
+    val observed = plans.asScala.toList.filter(_.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.CollectMetrics]))
+    assert(observed.nonEmpty, "no observed plan seen for the commit")
+    val exprNames = observed.flatMap(_.analyzed.flatMap(_.expressions)
+      .flatMap(_.collect { case e => e.getClass.getSimpleName })).toSet
+    assert(Set("TokenBloom", "BoundedSet").subsetOf(exprNames) &&
+      !exprNames.contains("ScalaAggregator"), exprNames)
+    cat.drop("ident_test")
+  }
+
   test("bound extraction composes through booleans") {
     val formats = Seq("rfc3339", "timestamp")
     def b(q: String) = TimeBounds.extract(QueryParser.parse(q), "ts", formats)

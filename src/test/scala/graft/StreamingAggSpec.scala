@@ -133,7 +133,6 @@ class StreamingAggSpec extends AnyFunSuite {
   }
 
   test("sql surface exposes the engine functions") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT ip_display(ip_canonical('::ffff:10.0.0.1')) AS ip, porter_stem('running') AS st, " +
         "cosine_similarity(array(1.0f, 0.0f), array(1.0f, 0.0f)) AS cos").collect()(0)
@@ -151,6 +150,19 @@ class StreamingAggSpec extends AnyFunSuite {
       .collect()(0)
     assert(r.getString(0) == "index")
     assert(r.getString(1) == "10.0.0.7")
+  }
+  test("GraftExtensions applied twice to one builder injects each function once") {
+    // the class named twice in spark.sql.extensions (or also passed to
+    // withExtensions) must not register every function over itself
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions()(ext)
+    new GraftExtensions()(ext)
+    val field = classOf[org.apache.spark.sql.SparkSessionExtensions]
+      .getDeclaredField("injectedFunctions")
+    field.setAccessible(true)
+    val injected = field.get(ext).asInstanceOf[scala.collection.mutable.Buffer[
+      (org.apache.spark.sql.catalyst.FunctionIdentifier, _, _)]]
+    assert(injected.map(_._1.funcName).toList == GraftExtensions.functions.map(_._1).toList)
   }
   test("streaming HLL: per-batch register merges equal the batch sketch") {
     // The sketch merge law under foreachBatch: each micro-batch builds its
