@@ -338,6 +338,8 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     // per-centroid-literal form became a multi-hundred-MB Catalyst tree
     // at 10⁵ cells). __rid ties a row's spill copies together for
     // query-time dedup.
+    val centArr =
+      centRows.sortBy(_._1).map { case (cid, cv) => (cid, cv.toArray) }.toArray
     val pqCb: Option[graft.exprs.Pq.Codebooks] =
       if (pq > 0)
         Some(buildCodebooks(vecs, pq, iterations, n,
@@ -360,13 +362,15 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
           .sortBy(_._1)
         Some((st.map(_._2), st.map(_._3)))
       } else None
+    // the shortlist tier a query of this layout serves with
+    val tier: Option[Ann.Tier] =
+      pqCb.map(cb => Ann.Tier.PqResidual(cb, centArr): Ann.Tier).orElse(
+        sqStats.map { case (mn, mx) => Ann.Tier.Sq8(mn, mx, normalized = true) })
     sqStats.foreach { case (mn, mx) =>
       mn.indices.map(i => (i, mn(i), mx(i))).toDF("d", "mn", "mx")
         .coalesce(1).write.mode("overwrite")
         .parquet(new HPath(modelDir, "sq8").toString)
     }
-    val centArr =
-      centRows.sortBy(_._1).map { case (cid, cv) => (cid, cv.toArray) }.toArray
     val bcCents = spark.sparkContext.broadcast(centArr)
     // RESIDUAL codes (r17): the code depends on the copy's cell, so the
     // encode moves AFTER the cell explode (one broadcast join of the
@@ -427,11 +431,6 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
         :+ kEff).distinct
       val w2 = org.apache.spark.sql.expressions.Window
         .partitionBy(col("qid")).orderBy(col("__c").desc, col("vid").asc)
-      val wq = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid"))
-      // the serve path's default shortlist at k=5 (max(4k, 64)): the
-      // calibration replays the budget a default query actually gets
-      val rFetch = 64
       def top5(scored: DataFrame): DataFrame = scored
         .withColumn("__rn", row_number().over(w2))
         .where(col("__rn") <= 5)
@@ -455,73 +454,26 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
         // --rerank (cheaper than escalating nprobe: extra row fetches,
         // not extra cell scans) would buy at this np (ProbeOpq
         // measured the default 64-slot shortlist ~0.2 below 256 under
-        // probe pressure — the knob must be in the curve to be picked)
-        val ranked: Option[DataFrame] = if (pqCb.isDefined) {
-          // residual ADC, batched: per-(query, probed cell) LUT over
-          // the query residual, MIN over a row's copies, (adist, vid)
-          // total order
-          val cellCv = broadcast(centArr.toSeq
-            .map { case (cid, cv) => (cid, cv.toSeq) }
-            .toDF("__pcell", "__ccv"))
-          val probesL = probes.join(cellCv, "__pcell")
-            .withColumn("__lut", graft.exprs.Pq.pq_lut(
-              graft.exprs.Pq.vec_residual(col("qv"), col("__ccv")), pqCb.get))
-            .where(col("__lut").isNotNull)
-            .drop("__ccv")
-          val perCopy = probesL
-            .join(lay.select(col("__cell").as("__dcell"), col("vid"),
-              col("__code")).where(col("__code").isNotNull),
-              col("__pcell") === col("__dcell"))
-            .where(col("vid") =!= col("qid"))
-            .withColumn("__adist",
-              graft.exprs.Pq.pq_adc(col("__code"), col("__lut")))
-          val best = perCopy.groupBy(col("qid"), col("vid"))
-            .agg(min(col("__adist")).as("__adist"), first(col("qv")).as("qv"))
-          Some(best
-            .withColumn("__srn", row_number().over(wq.orderBy(
-              col("__adist").asc, col("vid").asc))))
-        } else if (sqStats.isDefined) {
-          // sq8, batched: per-query fixed-point ADC weights (the batch
-          // face's zip_with form), normalized cos-key order
-          val (mn, mx) = sqStats.get
-          val step = mn.indices.map(i => (mx(i) - mn(i)) / 255.0)
-          val (ta, tb) = graft.exprs.Sq8.reconTables(mn, mx)
-          val probesS = probes
-            .withColumn("__qw", zip_with(col("qv"), typedLit(step),
-              (x, s) => floor(x * s * lit(AnnIndex.Sq8AdcScale)).cast("bigint")))
-            .where(col("__qw").isNotNull)
-            .withColumn("__mq", aggregate(
-              zip_with(col("qv"), typedLit(mn.toSeq),
-                (x, mc) => floor(x.cast("double") * mc *
-                  lit(AnnIndex.Sq8AdcScale)).cast("bigint")),
-              lit(0L), (acc, x) => acc + x))
-          val cands = probesS
-            .join(lay.select(col("__cell").as("__dcell"), col("vid"),
-              col("__sq8")).where(col("__sq8").isNotNull),
-              col("__pcell") === col("__dcell"))
-            .where(col("vid") =!= col("qid"))
-            .dropDuplicates("qid", "vid")
-          Some(cands
-            .withColumn("__ckey", graft.exprs.Sq8.cos_key(col("__sq8"),
-              col("__qw"), col("__mq"), ta, tb))
-            .withColumn("__srn", row_number().over(wq.orderBy(
-              col("__ckey").desc, col("vid").asc))))
-        } else None // raw layout: the serve path IS the probe shape
-        val rankedCk = ranked.map(
-          _.select(col("qid"), col("qv"), col("vid"), col("__srn"))
-            .localCheckpoint(eager = false))
+        // probe pressure — the knob must be in the curve to be picked).
+        // Identical vectors share a content-hash vid (the sample keeps
+        // every physical row), so their rows reduce like spill copies.
+        val rankedCk = tier.map(t => Ann.shortlist(probes,
+            lay.select(col("__cell").as("cell"),
+              col(AnnIndex.codeCol(t)).as("code"), col("vid")),
+            t, Seq("vid"), spill = true, rerank = AnnIndex.CalibRerankHi,
+            pair = Some(col("vid") =!= col("qid")))
+          .localCheckpoint(eager = false))
+        // raw layout: the serve path IS the probe shape
         def servedAt(rf: Int): DataFrame = rankedCk.fold(probeArm) { r =>
-          // identical vectors share a content-hash vid (the sample
-          // keeps every physical row) — dedup the rerank relation or
-          // each survivor re-enters once per copy and row_number
-          // admits the copies into the top-5
-          top5(r.where(col("__srn") <= rf)
+          // dedup the rerank relation too, or each survivor re-enters
+          // once per copy and row_number admits the copies into the top-5
+          top5(r.where(col("rank") <= rf)
             .join(samp.select(col("vid"), col("v"))
               .dropDuplicates("vid"), "vid")
             .withColumn("__c",
               CosineSimilarity.cosine_similarity(col("v"), col("qv"))))
         }
-        (np, recallOf(probeArm), recallOf(servedAt(rFetch)),
+        (np, recallOf(probeArm), recallOf(servedAt(AnnIndex.CalibRerank)),
           recallOf(servedAt(AnnIndex.CalibRerankHi)))
       }
       curve.toDF("np", "recall_ppm", "served_ppm", "served_hi_ppm")
@@ -745,8 +697,6 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
       s"covered split(s) no longer live and not translatable through a " +
         s"lossless merge lineage: ${gone.take(3).mkString(", ")} — " +
         "refresh would double-serve their documents; re-run a full train")
-    val pq = m.pq
-    val sq8 = m.sq8
     val root = annRoot(name, field)
     val newSplits = live.filterNot(s => covered(s.id))
     if (newSplits.isEmpty) {
@@ -764,14 +714,9 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     val (_, _, df) = corpusOf(name, newSplits)
     // the model artifacts come through the serving cache; should META
     // change after the snapshot above, the tick CAS refuses the publish
-    val (centArr, cbs, sqSt, _) = servingModel(name, field).getOrElse(
+    val served = servingModel(name, field).getOrElse(
       sys.error(s"META for '$name.$field' vanished during refresh"))
-    // an sq8-flagged META whose sq8/ stats are gone must fail loudly:
-    // appending code-less rows would silently drop them from the
-    // integer-dot ranking (the shortlist filters on __sq8 is-not-null)
-    require(!sq8 || sqSt.isDefined,
-      s"META for '$name.$field' claims sq8 but the sq8/ stats are " +
-        "missing — re-run a full train --sq8")
+    val centArr = served.cents
     val epoch = m.epoch + 1
     val base = df.where(col(field).isNotNull)
     val nNew = base.count()
@@ -781,18 +726,17 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     // explode; legacy raw layouts keep the one-code-per-row path so
     // their stored codes stay comparable across epochs
     val fresh0 = withSq8(
-        withCode(base, field, if (pq > 0 && !m.pqRes) cbs else None),
-        field, if (sq8) sqSt else None)
+        withCode(base, field, served.tier.collect { case Ann.Tier.Pq(cb) => cb }),
+        field, served.tier.collect { case Ann.Tier.Sq8(mn, mx, _) => (mn, mx) })
       .withColumn("__rid", monotonically_increasing_id())
       .withColumn("__epoch", lit(epoch.toLong))
       .withColumn("__cell", explode(
         graft.exprs.NearestCells.nearest_cells(col(field), bcCents, m.spill)))
-    val fresh =
-      if (pq > 0 && m.pqRes)
-        withResidualCode(fresh0, field, cbs.getOrElse(sys.error(
-          s"META for '$name.$field' claims pq=$pq but the codebooks " +
-            "are missing — re-run a full train --pq")), centArr)
-      else fresh0
+    val fresh = served.tier match {
+      case Some(Ann.Tier.PqResidual(cb, _)) =>
+        withResidualCode(fresh0, field, cb, centArr)
+      case _ => fresh0
+    }
     // out-of-sample FIT of this batch against the frozen centroids —
     // one batch-sized broadcast-assignment pass (integer ppm, see
     // [[Ann.assignFit]]). The anchor is normally the TRAIN-time
@@ -1244,18 +1188,20 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     } finally ch.close()
   }
 
-  /** The serving model — (centroid table, PQ codebooks if any, sq8
-    * stats if any, the META snapshot they belong to) — through a
-    * process-wide LRU keyed on the META signature (the digest-cache
-    * discipline): a knn previously re-read + collected the centroids/
-    * and codebooks/ parquet on EVERY query — a cold object-store read
-    * per query at scale; one signature check now answers all of it, and
-    * every serve-time decision reads the one snapshot in the entry.
-    * None when no META exists. Entries are only trusted and stored when
-    * the signature is [[ManifestStore.FileSig.trusted]], the
+  /** The serving model — centroid table, shortlist tier and the META
+    * snapshot they belong to — through a process-wide LRU keyed on the
+    * META signature (the digest-cache discipline): a knn previously
+    * re-read + collected the centroids/ and codebooks/ parquet on EVERY
+    * query — a cold object-store read per query at scale; one signature
+    * check now answers all of it, and every serve-time decision reads
+    * the one snapshot in the entry. A META that claims pq or sq8 whose
+    * model dir lacks the codebooks or stats fails here, loudly, before
+    * any tier serves or appends from it. None when no META exists.
+    * Entries are only trusted and stored when the signature is
+    * [[ManifestStore.FileSig.trusted]], the
     * [[Catalog.manifestStateCached]] rule. */
   private def servingModel(name: String, field: String)
-      : Option[AnnIndex.ServingEntry] = {
+      : Option[AnnIndex.Served] = {
     val root = annRoot(name, field)
     catalog.metaStore.fileSignature(new HPath(root, "META")).flatMap { sig =>
       val trusted = sig.trusted
@@ -1272,16 +1218,25 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
             .parquet(new HPath(mroot, "centroids").toString)
             .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
             .sortBy(_._1)
-          val cbP = new HPath(mroot, "codebooks")
-          val cbs = if (fs(cbP).exists(cbP)) Some(readCodebooks(mroot)) else None
-          val sqP = new HPath(mroot, "sq8")
-          val sq = if (fs(sqP).exists(sqP)) {
-            val st = spark.read.parquet(sqP.toString).collect()
-              .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-              .sortBy(_._1)
-            Some((st.map(_._2), st.map(_._3)))
-          } else None
-          val v = (centArr, cbs, sq, m)
+          def artifact(dir: String, claim: String): HPath = {
+            val p = new HPath(mroot, dir)
+            require(fs(p).exists(p), s"ANN META for '$name.$field' claims " +
+              s"$claim but has no $dir/ — re-run a full train --$claim")
+            p
+          }
+          val tier: Option[Ann.Tier] =
+            if (m.pq > 0) {
+              artifact("codebooks", "pq")
+              val cb = readCodebooks(mroot)
+              Some(if (m.pqRes) Ann.Tier.PqResidual(cb, centArr) else Ann.Tier.Pq(cb))
+            } else if (m.sq8) {
+              val st = spark.read.parquet(artifact("sq8", "sq8").toString)
+                .collect()
+                .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
+                .sortBy(_._1)
+              Some(Ann.Tier.Sq8(st.map(_._2), st.map(_._3), normalized = true))
+            } else None
+          val v = AnnIndex.Served(centArr, tier, m)
           if (trusted) AnnIndex.servingCache.put(key, v)
           v
         }
@@ -1328,10 +1283,10 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     * there blocked both documented outs); the loud error stays on the
     * curve-lookup path only. */
   private def tuning(name: String, field: String,
-      served: Option[AnnIndex.ServingEntry], nProbe: Int, rerank: Int,
+      served: Option[AnnIndex.Served], nProbe: Int, rerank: Int,
       targetRecall: Option[Double]): (Int, Int) = targetRecall match {
     case Some(r) if nProbe == 0 && served.isDefined =>
-      val curve = calibIn(modelDir(annRoot(name, field), served.get._4.model))
+      val curve = calibIn(modelDir(annRoot(name, field), served.get.meta.model))
         .getOrElse(sys.error(s"--target-recall needs a calibration curve " +
           s"for '$field' — re-run train --calibrate"))
       AnnIndex.pickSetting(curve, math.min(1000000L, math.round(r * 1000000L)),
@@ -1399,7 +1354,7 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     val scored: DataFrame =
       if (nProbeEff > 0 && served.isDefined) {
         val root = annRoot(name, field)
-        val (cents, cbsOpt, sqStOpt, mm) = served.get
+        val AnnIndex.Served(cents, tier, mm) = served.get
         val spilled = mm.spill > 1
         // rank the model-constant centroid table driver-side
         val ranked = cents.map { case (cid, cv) =>
@@ -1430,12 +1385,9 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
           // tier can rank (non-null code) — a qid whose matches are
           // all malformed-vector rows must keep escalating, not be
           // declared sufficient and under-fill k (r17 advice)
-          val codeCol: Option[String] =
-            if (mm.pq > 0) Some("__code")
-            else if (mm.sq8) Some("__sq8")
-            else None
           def enough(df: DataFrame): Boolean = {
-            val servable = codeCol.fold(df)(c => df.where(col(c).isNotNull))
+            val servable = tier.fold(df)(t =>
+              df.where(col(AnnIndex.codeCol(t)).isNotNull))
             val distinct = if (spilled)
               servable.select(col("__epoch"), col("__rid"))
                 .dropDuplicates("__epoch", "__rid")
@@ -1448,112 +1400,62 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
             covered = next
           }
         }
-        // PQ tier: rank candidates over the SKINNY (__code, ids) columns
-        // — m ints per row instead of the full stored document, the
-        // memory-bandwidth cut that matters when a probed cell holds
-        // millions of rows — then fetch ONLY the top-R ADC survivors'
-        // full rows for the exact-cosine rerank below
-        val pq = mm.pq
-        val cand = if (pq > 0 && mm.pqRes) {
-          // RESIDUAL tier (IVFADC, r17 — every train --pq since): the
-          // stored codes approximate v − centroid(cell), so each probed
-          // cell ranks against its OWN lookup table over the query's
-          // residual in that cell ([[residualLuts]] — nprobe tiny rows,
-          // broadcast), and a spilled row's copies (DIFFERENT codes, one
-          // per cell) reduce by MIN before the shortlist cut — the
-          // deterministic aggregate replacing the raw tier's
-          // identical-copy dedup. Everything downstream (skinny
-          // projection, total order, exact-cosine rerank) is the raw
-          // tier's shape.
-          val cb = cbsOpt.getOrElse(sys.error(
-            s"trained index for '$field' claims pq=$pq but has no codebooks"))
-          val rFetch = if (rerankEff > 0) rerankEff else math.max(4 * k, 64)
-          val luts = residualLuts(queryVec, cents,
-            ranked.take(covered).toSet, cb)
-          val perCopy = cand0
-            .select(col("__cell"), col("__epoch"), col("__rid"), col("__code"))
-            .where(col("__code").isNotNull)
-            .join(luts, col("__cell") === col("__lcell"))
-            .withColumn("__adist",
-              graft.exprs.Pq.pq_adc(col("__code"), col("__lut")))
-          val best = if (spilled)
-            perCopy.groupBy(col("__epoch"), col("__rid"))
-              .agg(min(col("__adist")).as("__adist"))
-          else perCopy.select(col("__epoch"), col("__rid"), col("__adist"))
-          val survivors = best
-            .orderBy(col("__adist").asc, col("__epoch").asc, col("__rid").asc)
+        // quantized tiers rank candidates over the SKINNY (code, ids)
+        // columns — m ints (pq) or ~1 byte/dim (sq8) per row instead of
+        // the full stored document, the memory-bandwidth cut that
+        // matters when a probed cell holds millions of rows — then fetch
+        // ONLY the top-rFetch survivors' full rows for the exact-cosine
+        // rerank below. More probes pour more candidates into a FIXED
+        // shortlist, so raise `rerank` together with nProbe. Each cut
+        // is the (key, __epoch, __rid) total order [[Ann.shortlist]]
+        // uses, so ties cut identically on both faces.
+        val rFetch = AnnIndex.shortlistBudget(rerankEff, k)
+        def survivors(keyed: DataFrame, key: Column): DataFrame =
+          cand0.join(broadcast(keyed
+            .orderBy(key, col("__epoch").asc, col("__rid").asc)
             .limit(rFetch)
-            .select(col("__epoch"), col("__rid"))
-          cand0.join(broadcast(survivors), Seq("__epoch", "__rid"))
-        } else if (pq > 0) {
-          val cb = cbsOpt.getOrElse(sys.error(
-            s"trained index for '$field' claims pq=$pq but has no codebooks"))
-          val lut = AnnIndex.lutFor(queryVec, cb)
-          // the ADC shortlist size: more probes pour more candidates
-          // into a FIXED shortlist, so a crowded R trades recall —
-          // raise `rerank` together with nProbe (measured in ProbeKnn)
-          val rFetch = if (rerankEff > 0) rerankEff else math.max(4 * k, 64)
-          // dedupe the SKINNY projection before the shortlist cut: with
-          // spill > 1 a boundary row's copies land in several probed
-          // cells with identical codes, and letting them occupy several
-          // of the rFetch slots silently shrinks the effective rerank
-          // budget by up to spill× (copies share (__epoch, __rid), so
-          // the dedup is exact; spill=1 skips the exchange)
-          val skinny0 = cand0
-            .select(col("__epoch"), col("__rid"), col("__code"))
-            .where(col("__code").isNotNull)
-          val skinny = if (spilled)
-            skinny0.dropDuplicates("__epoch", "__rid") else skinny0
-          // (__adist, __epoch, __rid) is a TOTAL order — same as
-          // knnBatch's — so ADC-distance ties cut deterministically at
-          // the shortlist boundary run-to-run and across the two tiers
-          val survivors = skinny
-            .withColumn("__adist",
-              graft.exprs.Pq.pq_adc(col("__code"), typedLit(lut.toSeq)))
-            .orderBy(col("__adist").asc, col("__epoch").asc, col("__rid").asc)
-            .limit(rFetch)
-            .select(col("__epoch"), col("__rid"))
-          cand0.join(broadcast(survivors), Seq("__epoch", "__rid"))
-        } else if (mm.sq8) {
-          // SQ8 tier: same shortlist-then-rerank shape as PQ, ranking
-          // ASYMMETRICALLY — the stored int8 codes against the UNQUANTIZED
-          // query folded into per-dim fixed-point weights
-          // (w_i = floor(q_i·step_i·2^24), one literal array): the integer
-          // dot Σ code_i·w_i orders candidates by the RECONSTRUCTED inner
-          // product ⟨x̂, q⟩ up to a per-query constant, so the affine
-          // quantization offset cancels instead of biasing the cut
-          // (quantize-the-query ranking measured 0.66 recall where this
-          // form measures at the exact tier's level — see ProbeKnn).
-          // Candidate reads touch ~1 byte/dim instead of the 8-byte
-          // stored vector; survivors fetch full rows for the exact
-          // cosine rerank. (__idot desc, epoch, rid) is the same total
-          // order as the PQ and batch tiers.
-          val (mn, mx) = sqStOpt.getOrElse(sys.error(
-            s"trained index for '$field' claims sq8 but has no sq8/ stats"))
-          val qw = AnnIndex.sq8AdcWeights(queryVec, mn, mx)
-          // r16: the cut key is the NORMALIZED reconstructed cosine
-          // (one fused kernel over the codes — [[graft.exprs.Sq8CosKey]]),
-          // not the raw inner-product dot: under a wide corpus norm
-          // spread the dot fills the shortlist with high-norm vectors
-          // and drops low-norm true neighbors (ProbeSq8Norm: recall@5
-          // 0.91 → 0.79 at a 10× spread; the normalized key recovers
-          // 0.91). Integer sums + one IEEE div/sqrt — deterministic.
-          val (ta, tb) = graft.exprs.Sq8.reconTables(mn, mx)
-          val mq = graft.exprs.Sq8.mqOf(queryVec, mn)
-          val rFetch = if (rerankEff > 0) rerankEff else math.max(4 * k, 64)
-          val skinny0 = cand0
-            .select(col("__epoch"), col("__rid"), col("__sq8"))
-            .where(col("__sq8").isNotNull)
-          val skinny = if (spilled)
-            skinny0.dropDuplicates("__epoch", "__rid") else skinny0
-          val survivors = skinny
-            .withColumn("__ckey", graft.exprs.Sq8.cos_key(col("__sq8"),
-              typedLit(qw.toSeq), lit(mq), ta, tb))
-            .orderBy(col("__ckey").desc, col("__epoch").asc, col("__rid").asc)
-            .limit(rFetch)
-            .select(col("__epoch"), col("__rid"))
-          cand0.join(broadcast(survivors), Seq("__epoch", "__rid"))
-        } else cand0
+            .select(col("__epoch"), col("__rid"))), Seq("__epoch", "__rid"))
+        // with spill > 1 a boundary row's copies land in several probed
+        // cells; identical copies dedupe before the cut so they cannot
+        // occupy several shortlist slots (copies share (__epoch, __rid))
+        def skinny(code: String): DataFrame = {
+          val s0 = cand0.select(col("__epoch"), col("__rid"), col(code))
+            .where(col(code).isNotNull)
+          if (spilled) s0.dropDuplicates("__epoch", "__rid") else s0
+        }
+        val cand = tier match {
+          case Some(Ann.Tier.PqResidual(cb, _)) =>
+            // residual codes: each probed cell ranks against its OWN
+            // lookup table over the query's residual in that cell
+            // ([[residualLuts]] — nprobe tiny rows, broadcast), and a
+            // spilled row's copies (different codes) reduce by MIN
+            val perCopy = cand0
+              .select(col("__cell"), col("__epoch"), col("__rid"), col("__code"))
+              .where(col("__code").isNotNull)
+              .join(residualLuts(queryVec, cents, ranked.take(covered).toSet, cb),
+                col("__cell") === col("__lcell"))
+              .withColumn("__adist",
+                graft.exprs.Pq.pq_adc(col("__code"), col("__lut")))
+            survivors(if (spilled)
+              perCopy.groupBy(col("__epoch"), col("__rid"))
+                .agg(min(col("__adist")).as("__adist"))
+            else perCopy, col("__adist").asc)
+          case Some(Ann.Tier.Pq(cb)) =>
+            survivors(skinny("__code").withColumn("__adist",
+              graft.exprs.Pq.pq_adc(col("__code"),
+                typedLit(AnnIndex.lutFor(queryVec, cb).toSeq))),
+              col("__adist").asc)
+          case Some(Ann.Tier.Sq8(mn, mx, _)) =>
+            // the query folds into one literal weight array and offset
+            // constant; the key is the fused reconstructed-cosine kernel
+            val (ta, tb) = graft.exprs.Sq8.reconTables(mn, mx)
+            survivors(skinny("__sq8").withColumn("__ckey",
+              graft.exprs.Sq8.cos_key(col("__sq8"),
+                typedLit(AnnIndex.sq8AdcWeights(queryVec, mn, mx).toSeq),
+                lit(graft.exprs.Sq8.mqOf(queryVec, mn)), ta, tb)),
+              col("__ckey").desc)
+          case None => cand0
+        }
         // spill copies of one row share an (__epoch, __rid) identity and
         // an identical score; dedupe before the cut so a boundary row
         // can't occupy two of the k slots when several of its cells were
@@ -1672,16 +1574,11 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     *    model-scale collect — drives ONE [[probedScan]] directory
     *    listing and one cell-keyed equi-join (queries×nprobe probe rows
     *    against the probed cells' rows, shuffled on cell);
-    *  - with PQ, the ranking join carries only the SKINNY code column
-    *    and per-query LUTs (raw layouts: one LUT per query; residual
-    *    layouts since r17: one per (query, probed cell), attached by a
-    *    broadcast join of the tiny model table — probe rows stay
-    *    queries×nprobe); per-query ADC shortlists ride a window by qid
-    *    with the (adist, epoch, rid) total order, and only survivors
-    *    re-join their full rows for the exact-cosine rerank;
-    *  - spill copies dedupe per (qid, __epoch, __rid) BEFORE every cut
-    *    (raw/sq8 tiers — identical copies) or reduce by MIN per
-    *    identity (residual — per-cell codes differ).
+    *  - quantized tiers rank the SKINNY (code, __epoch, __rid) columns
+    *    through [[Ann.shortlist]] — the same per-tier weights, key,
+    *    spill reduction and (key, epoch, rid) cut the single face
+    *    applies — and only survivors re-join their full rows for the
+    *    exact-cosine rerank.
     *
     * nProbe = 0 (or no trained index) runs the brute truth tier:
     * corpus × broadcast queries. Output: (qid, rank, score, doc),
@@ -1716,7 +1613,7 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     val scored: DataFrame =
       if (nProbeEff > 0 && served.isDefined) {
         val root = annRoot(name, field)
-        val (cents, cbsOpt, sqStOpt, mm) = served.get
+        val AnnIndex.Served(cents, tier, mm) = served.get
         val bc = spark.sparkContext.broadcast(cents)
         val spilled = mm.spill > 1
         // snapshotted: the probe relation feeds both the probed-cell
@@ -1747,17 +1644,13 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
           // must apply the same filter or a qid whose matches are all
           // malformed-vector rows is declared sufficient yet
           // under-fills k (r17 advice; same shape as the single face)
-          val codeCol: Option[String] =
-            if (mm.pq > 0) Some("__code")
-            else if (mm.sq8) Some("__sq8")
-            else None
           def lowQids(): DataFrame = {
             val cellsNow = probesQ.select(col("__pcell")).distinct()
               .collect().map(_.getLong(0)).toSet
             val scanNow =
               antiTomb(root, mm.tomb)(filtered(probedScan(root, mm, cellsNow)))
-            val ids = codeCol.fold(scanNow)(c =>
-              scanNow.where(col(c).isNotNull))
+            val ids = tier.fold(scanNow)(t =>
+              scanNow.where(col(AnnIndex.codeCol(t)).isNotNull))
               .select(col("__cell"), col("__epoch"), col("__rid"))
             val matched = probesQ
               .join(ids, col("__pcell") === col("__cell"))
@@ -1793,124 +1686,29 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
           .collect().map(_.getLong(0)).toSet
         val data =
           antiTomb(root, mm.tomb)(filtered(probedScan(root, mm, probeCells)))
-        val pq = mm.pq
-        if (pq > 0 && mm.pqRes) {
-          // RESIDUAL batch tier (IVFADC, r17 — the single face's per-cell
-          // LUT + min-over-copies, batched): each (qid, probed cell)
-          // pair computes its own LUT over the query's residual in that
-          // cell (one broadcast join of the tiny model table onto the
-          // probe relation — probe rows stay qids × nprobe), per-copy
-          // ADC, MIN per (qid, row identity) before the windowed
-          // shortlist cut, exact-cosine rerank of the survivors.
-          val cb = cbsOpt.getOrElse(sys.error(
-            s"trained index for '$field' claims pq=$pq but has no codebooks"))
-          val rFetch = if (rerankEff > 0) rerankEff else math.max(4 * k, 64)
-          import spark.implicits._
-          val cellCv = broadcast(cents.toSeq
-            .map { case (cid, cv) => (cid, cv.toSeq) }
-            .toDF("__pcell", "__ccv"))
-          val probesL = probesQ.join(cellCv, "__pcell")
-            .withColumn("__lut", graft.exprs.Pq.pq_lut(
-              graft.exprs.Pq.vec_residual(col("qv"), col("__ccv")), cb))
-            .where(col("__lut").isNotNull)
-            .drop("__ccv")
-          val skinny = data
-            .select(col("__cell").as("__dcell"), col("__epoch"),
-              col("__rid"), col("__code"))
-            .where(col("__code").isNotNull)
-          val perCopy = probesL.join(skinny, col("__pcell") === col("__dcell"))
-            .withColumn("__adist",
-              graft.exprs.Pq.pq_adc(col("__code"), col("__lut")))
-          // copies carry DIFFERENT codes — reduce by MIN per (qid,
-          // identity); qv rides along (functionally determined by qid)
-          val best = perCopy
-            .groupBy(col("qid"), col("__epoch"), col("__rid"))
-            .agg(min(col("__adist")).as("__adist"), first(col("qv")).as("qv"))
-          val survivors = best
-            .withColumn("__srn", row_number().over(w.orderBy(
-              col("__adist").asc, col("__epoch").asc, col("__rid").asc)))
-            .where(col("__srn") <= rFetch)
-            .select(col("qid"), col("qv"), col("__epoch"), col("__rid"))
-          val full = if (spilled)
-            data.dropDuplicates("__epoch", "__rid") else data
-          survivors.join(full, Seq("__epoch", "__rid"))
-            .withColumn("__score",
+        tier match {
+          case Some(t) =>
+            // quantized tiers: the batched shortlist over the SKINNY
+            // (code, ids) columns, then only survivors re-join their
+            // full rows for the exact-cosine rerank
+            val survivors = Ann.shortlist(probesQ,
+                data.select(col("__cell").as("cell"),
+                  col(AnnIndex.codeCol(t)).as("code"), col("__epoch"),
+                  col("__rid")),
+                t, Seq("__epoch", "__rid"), spilled,
+                AnnIndex.shortlistBudget(rerankEff, k))
+              .drop("rank")
+            val full = if (spilled)
+              data.dropDuplicates("__epoch", "__rid") else data
+            survivors.join(full, Seq("__epoch", "__rid"))
+              .withColumn("__score",
+                CosineSimilarity.cosine_similarity(col(field), col("qv")))
+          case None =>
+            val cands0 = probesQ.join(data, col("__pcell") === col("__cell"))
+            val cands = if (spilled)
+              cands0.dropDuplicates("qid", "__epoch", "__rid") else cands0
+            cands.withColumn("__score",
               CosineSimilarity.cosine_similarity(col(field), col("qv")))
-        } else if (pq > 0) {
-          val cb = cbsOpt.getOrElse(sys.error(
-            s"trained index for '$field' claims pq=$pq but has no codebooks"))
-          val rFetch = if (rerankEff > 0) rerankEff else math.max(4 * k, 64)
-          val probesL = probesQ
-            .withColumn("__lut", graft.exprs.Pq.pq_lut(col("qv"), cb))
-            .where(col("__lut").isNotNull)
-          val skinny = data
-            .select(col("__cell").as("__dcell"), col("__epoch"),
-              col("__rid"), col("__code"))
-            .where(col("__code").isNotNull)
-          val cands0 = probesL.join(skinny, col("__pcell") === col("__dcell"))
-          val cands = if (spilled)
-            cands0.dropDuplicates("qid", "__epoch", "__rid") else cands0
-          val survivors = cands
-            .withColumn("__adist",
-              graft.exprs.Pq.pq_adc(col("__code"), col("__lut")))
-            .withColumn("__srn", row_number().over(w.orderBy(
-              col("__adist").asc, col("__epoch").asc, col("__rid").asc)))
-            .where(col("__srn") <= rFetch)
-            .select(col("qid"), col("qv"), col("__epoch"), col("__rid"))
-          val full = if (spilled)
-            data.dropDuplicates("__epoch", "__rid") else data
-          survivors.join(full, Seq("__epoch", "__rid"))
-            .withColumn("__score",
-              CosineSimilarity.cosine_similarity(col(field), col("qv")))
-        } else if (mm.sq8) {
-          // SQ8 batch: fold every query row into its per-dim fixed-point
-          // ADC weights (one map-only zip_with under the frozen stored
-          // stats — same asymmetric form as the single-query tier), rank
-          // the skinny __sq8 codes per query on the integer dot, cut
-          // per-qid with the (dot desc, epoch, rid) total order, rerank
-          // survivors exact
-          val (mn, mx) = sqStOpt.getOrElse(sys.error(
-            s"trained index for '$field' claims sq8 but has no sq8/ stats"))
-          val rFetch = if (rerankEff > 0) rerankEff else math.max(4 * k, 64)
-          val step = mn.indices.map(i => (mx(i) - mn(i)) / 255.0)
-          // normalized cut key (the single-query tier's r16 rule — one
-          // fused kernel, see the comment there); __mq is the per-query
-          // affine-offset constant, integer-summed per row
-          val (ta, tb) = graft.exprs.Sq8.reconTables(mn, mx)
-          val probesS = probesQ
-            .withColumn("__qw", zip_with(col("qv"), typedLit(step),
-              (x, s) => floor(x * s * lit(AnnIndex.Sq8AdcScale)).cast("bigint")))
-            .where(col("__qw").isNotNull)
-            .withColumn("__mq", aggregate(
-              zip_with(col("qv"), typedLit(mn.toSeq),
-                (x, mc) => floor(x.cast("double") * mc *
-                  lit(AnnIndex.Sq8AdcScale)).cast("bigint")),
-              lit(0L), (acc, x) => acc + x))
-          val skinny = data
-            .select(col("__cell").as("__dcell"), col("__epoch"),
-              col("__rid"), col("__sq8"))
-            .where(col("__sq8").isNotNull)
-          val cands0 = probesS.join(skinny, col("__pcell") === col("__dcell"))
-          val cands = if (spilled)
-            cands0.dropDuplicates("qid", "__epoch", "__rid") else cands0
-          val survivors = cands
-            .withColumn("__ckey", graft.exprs.Sq8.cos_key(col("__sq8"),
-              col("__qw"), col("__mq"), ta, tb))
-            .withColumn("__srn", row_number().over(w.orderBy(
-              col("__ckey").desc, col("__epoch").asc, col("__rid").asc)))
-            .where(col("__srn") <= rFetch)
-            .select(col("qid"), col("qv"), col("__epoch"), col("__rid"))
-          val full = if (spilled)
-            data.dropDuplicates("__epoch", "__rid") else data
-          survivors.join(full, Seq("__epoch", "__rid"))
-            .withColumn("__score",
-              CosineSimilarity.cosine_similarity(col(field), col("qv")))
-        } else {
-          val cands0 = probesQ.join(data, col("__pcell") === col("__cell"))
-          val cands = if (spilled)
-            cands0.dropDuplicates("qid", "__epoch", "__rid") else cands0
-          cands.withColumn("__score",
-            CosineSimilarity.cosine_similarity(col(field), col("qv")))
         }
       } else {
         val (_, df) = corpus(name)
@@ -1941,6 +1739,22 @@ object AnnIndex {
     * pressure). */
   val CalibRerankHi: Int = 256
 
+  /** The shortlist budget a knn serves with: an explicit `--rerank`, or
+    * max(4k, 64) — more probes pour more candidates into a FIXED
+    * shortlist, so a crowded budget trades recall (ProbeKnn). */
+  def shortlistBudget(rerank: Int, k: Int): Int =
+    if (rerank > 0) rerank else math.max(4 * k, 64)
+
+  /** The default budget the calibration's first served column measures:
+    * [[shortlistBudget]] at its k = 5. */
+  val CalibRerank: Int = shortlistBudget(0, 5)
+
+  /** The stored code column a shortlist tier ranks on. */
+  private[engine] def codeCol(t: Ann.Tier): String = t match {
+    case _: Ann.Tier.Sq8 => "__sq8"
+    case _ => "__code"
+  }
+
   /** (nprobe, rerank) for `--target-recall` off a calibration curve
     * (rows (np, probe_ppm, served_ppm, served_hi_ppm) ascending by
     * np): the SMALLEST np that meets the target at either shortlist
@@ -1963,9 +1777,9 @@ object AnnIndex {
   private[graft] def pickSetting(curve: Seq[(Int, Long, Long, Long)],
       want: Long, explicitRerank: Int): (Int, Int) = {
     require(curve.nonEmpty, "empty calibration curve")
-    require(explicitRerank <= 0 || explicitRerank >= 64,
+    require(explicitRerank <= 0 || explicitRerank >= CalibRerank,
       s"--target-recall cannot guarantee a --rerank below the " +
-        s"calibrated default shortlist (64, got $explicitRerank) — " +
+        s"calibrated default shortlist ($CalibRerank, got $explicitRerank) — " +
         "raise --rerank or drop --target-recall for an uncalibrated run")
     if (explicitRerank > 0) {
       val colOf: ((Int, Long, Long, Long)) => Long =
@@ -1992,14 +1806,16 @@ object AnnIndex {
     * √n-cell models at 768 dims is a few hundred MB, and one index
     * typically serves per process. */
   private val ServingCacheMax = 64
-  private type ServingEntry =
-    (Array[(Long, Array[Float])], Option[graft.exprs.Pq.Codebooks],
-     Option[(Array[Double], Array[Double])], AnnMeta)
-  private[engine] val servingCache: java.util.Map[String, ServingEntry] =
+  /** One served model: the centroid table, the shortlist tier the
+    * layout stores codes for (None: exact vectors), and the META
+    * snapshot both were read under. */
+  private[engine] final case class Served(cents: Array[(Long, Array[Float])],
+      tier: Option[Ann.Tier], meta: AnnMeta)
+  private[engine] val servingCache: java.util.Map[String, Served] =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, ServingEntry](16, 0.75f, true) {
+      new java.util.LinkedHashMap[String, Served](16, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[String, ServingEntry]): Boolean =
+            e: java.util.Map.Entry[String, Served]): Boolean =
           size() > ServingCacheMax
       })
   private[engine] val servingHits = new java.util.concurrent.atomic.AtomicLong()
@@ -2075,11 +1891,6 @@ object AnnIndex {
     if (dir.startsWith(column + "=")) dir.substring(column.length + 1).toLongOption
     else None
 
-  /** Fixed-point scale of the SQ8 asymmetric-ranking weights — shared
-    * with the gated query tier ([[graft.exprs.Sq8.AdcScale]], rationale
-    * there). */
-  val Sq8AdcScale: Double = graft.exprs.Sq8.AdcScale
-
   /** Per-dim fixed-point ADC weights of a query under the stored SQ8
     * stats: w_i = floor(q_i · (mx_i − mn_i)/255 · 2^24). Σ code_i·w_i
     * then equals ⟨x̂, q⟩·2^24 minus the per-query constant Σ mn_i·q_i —
@@ -2092,7 +1903,8 @@ object AnnIndex {
       mx: Array[Double]): Array[Long] = {
     val n = math.min(q.length, mn.length)
     Array.tabulate(n) { i =>
-      math.floor(q(i).toDouble * ((mx(i) - mn(i)) / 255.0) * Sq8AdcScale).toLong
+      math.floor(q(i).toDouble * ((mx(i) - mn(i)) / 255.0) *
+        graft.exprs.Sq8.AdcScale).toLong
     }
   }
 }

@@ -75,13 +75,7 @@ object Ann {
   private def cellAssign(vecs: DataFrame, cents: DataFrame, idCol: String,
       vecCol: String, maxRank: Int, carry: Seq[String]): DataFrame =
     if (maxRank == 1) {
-      val centArr = cents
-        .select(col("cid").cast("long"),
-          col("cv").cast(org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-        .sortBy(_._1)
+      val centArr = centroidArray(cents)
       val bc = vecs.sparkSession.sparkContext.broadcast(centArr)
       // window-form parity at the edges: an empty centroid table drops
       // every row (the crossJoin did); a NULL vector still lands in the
@@ -103,6 +97,17 @@ object Ann {
           Window.partitionBy(col(idCol)).orderBy(col("ccos").desc, col("cid").asc)))
         .where(col("crn") <= maxRank)
         .select((col(idCol) +: carry.map(col)) :+ col("cid").as("cell"): _*)
+
+  /** The (cid, cv) centroid table collected driver-side, ascending by
+    * cid — a model constant (k·dim), never a data collect. */
+  private def centroidArray(cents: DataFrame): Array[(Long, Array[Float])] =
+    cents
+      .select(col("cid").cast("long"),
+        col("cv").cast(org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.FloatType)))
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+      .sortBy(_._1)
 
   /** centroids: (cid, cv) — tiny, broadcast. Assignment is one narrow
     * pass; each query probes its nprobe nearest cells (the recall/latency
@@ -336,12 +341,7 @@ object Ann {
     * broadcast-fed [[graft.exprs.NearestCells]] argmax. */
   private def assignOne(corpus: DataFrame, centroids: DataFrame): DataFrame = {
     val sp = corpus.sparkSession
-    val centArr = centroids
-      .select(col("cid").cast("long"),
-        col("cv").cast(org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
+    val centArr = centroidArray(centroids)
     val bc = sp.sparkContext.broadcast(centArr)
     corpus
       .withColumn("cell", element_at(
@@ -706,175 +706,207 @@ object Ann {
       col("adist").asc, k)
   }
 
-  /** The SERVING read shape end-to-end as one gated operator — exactly
-    * what [[graft.engine.AnnIndex]]'s trained tier executes against its
+  /** The code a serving layout stores, and so how [[shortlist]] keys a
+    * candidate against its query. */
+  sealed trait Tier
+  object Tier {
+    /** PQ codes over raw vectors: one ADC table per query. */
+    final case class Pq(cb: graft.exprs.Pq.Codebooks) extends Tier
+    /** RESIDUAL PQ codes (IVFADC — Jégou et al. 2011's production form):
+      * each stored copy encodes `v − centroid(its cell)`, so each
+      * (query, probed cell) pair ranks against its own ADC table over
+      * the query's residual in that cell — the FAISS per-probe LUT.
+      * `centroids` is the (cid, cv) model table the codes were taken
+      * against. */
+    final case class PqResidual(cb: graft.exprs.Pq.Codebooks,
+        centroids: Array[(Long, Array[Float])]) extends Tier
+    /** SQ8 codes under frozen per-dim stats, ranked ASYMMETRICALLY: each
+      * query folds into fixed-point weights
+      * w_j = floor(q_j·step_j·[[graft.exprs.Sq8.AdcScale]]), and the
+      * exact integer dot Σ code_j·w_j orders by reconstructed inner
+      * product (affine offset cancelled). `normalized` keys on the
+      * reconstructed COSINE instead ([[graft.exprs.Sq8CosKey]]): under a
+      * wide corpus norm spread the plain dot fills the shortlist with
+      * high-norm vectors ahead of low-norm true neighbors. */
+    final case class Sq8(mn: Array[Double], mx: Array[Double],
+        normalized: Boolean) extends Tier
+  }
+
+  /** The batched quantized SHORTLIST — the one place the vector tier's
+    * candidate-ranking rule is written for relations: the engine's
+    * batch face ([[graft.engine.AnnIndex.knnBatch]]), `train
+    * --calibrate`'s served arm, and the registry serving twins below all
+    * rank through it, so the oracle gating a twin gates the serving rule
+    * itself.
+    *
+    *  - `probes`: (qid, qv, __pcell), one row per (query, probed cell);
+    *  - `layout`: the stored rows as (cell, code, ids…, payload…) — the
+    *    cell a row sits in, its `tier` code, the `ids` that identify the
+    *    row and break key ties ascending, and any payload columns
+    *    (functions of the ids) to carry along;
+    *  - `spill`: rows may share an identity (spilled copies, or the
+    *    calibration sample's identical vectors). Raw PQ and SQ8 copies
+    *    are IDENTICAL rows and dedupe per (qid, ids); residual copies
+    *    carry per-cell codes and reduce by MIN — a deterministic
+    *    aggregate where a pick-any dedup would not be. Either way it
+    *    happens BEFORE the cut, so copies never crowd the budget;
+    *  - `pair`: an optional (query, row) predicate over the candidates,
+    *    e.g. `vid =!= qid` self-exclusion.
+    *
+    * Rows with a null code or query table drop. Each query keeps its
+    * `rerank` best rows by (key, ids…): ADC distance ascending for PQ,
+    * the SQ8 key descending. Every step is integer or reproducible
+    * double arithmetic, so a DuckDB unroll replays every rank.
+    * Output: (qid, qv, ids…, payload…, rank), rank 1..rerank. */
+  def shortlist(probes: DataFrame, layout: DataFrame, tier: Tier,
+      ids: Seq[String], spill: Boolean, rerank: Int,
+      pair: Option[Column] = None): DataFrame = {
+    import graft.exprs.{Pq => PqK, Sq8 => Sq8K}
+    val carried = layout.columns.toSeq.filterNot(Set("cell", "code"))
+    val code = col("code")
+    val rows = layout.where(code.isNotNull).withColumnRenamed("cell", "__dcell")
+    def candidates(qs: DataFrame): DataFrame = {
+      val c = qs.join(rows, col("__pcell") === col("__dcell"))
+      pair.fold(c)(c.where)
+    }
+    def deduped(c: DataFrame): DataFrame =
+      if (spill) c.dropDuplicates("qid" +: ids) else c
+    val (keyed, order) = tier match {
+      case Tier.PqResidual(cb, cents) =>
+        val sp = probes.sparkSession
+        import sp.implicits._
+        val cellCv = broadcast(cents.toSeq
+          .map { case (cid, cv) => (cid, cv.toSeq) }.toDF("__pcell", "__ccv"))
+        val luts = probes.join(cellCv, "__pcell")
+          .withColumn("__lut",
+            PqK.pq_lut(PqK.vec_residual(col("qv"), col("__ccv")), cb))
+          .where(col("__lut").isNotNull)
+          .drop("__ccv")
+        val perCopy = candidates(luts)
+          .withColumn("__key", PqK.pq_adc(code, col("__lut")))
+        // qv and the payload ride along: functionally determined by
+        // (qid, ids)
+        (if (spill) perCopy.groupBy(("qid" +: ids).map(col): _*)
+          .agg(min(col("__key")).as("__key"),
+            ("qv" +: carried.filterNot(ids.contains))
+              .map(c => first(col(c)).as(c)): _*)
+        else perCopy, col("__key").asc)
+      case Tier.Pq(cb) =>
+        val luts = probes.withColumn("__lut", PqK.pq_lut(col("qv"), cb))
+          .where(col("__lut").isNotNull)
+        (deduped(candidates(luts))
+          .withColumn("__key", PqK.pq_adc(code, col("__lut"))), col("__key").asc)
+      case Tier.Sq8(mn, mx, normalized) =>
+        val step = mn.indices.map(i => (mx(i) - mn(i)) / 255.0)
+        // bigint weights end-to-end (the DuckDB oracle's qw is BIGINT;
+        // an int cast would wrap for large-magnitude vectors)
+        val weighted = probes
+          .withColumn("__qw", zip_with(col("qv"), typedLit(step),
+            (x, s) => floor(x * s * lit(Sq8K.AdcScale)).cast("bigint")))
+          .where(col("__qw").isNotNull)
+        val cands = deduped(candidates(
+          if (!normalized) weighted
+          // the query's affine-offset constant Σ ⌊q_i·mn_i·2²⁴⌋, which
+          // the cosine key needs back
+          else weighted.withColumn("__mq", aggregate(
+            zip_with(col("qv"), typedLit(mn.toSeq),
+              (x, m) => floor(x.cast("double") * m * lit(Sq8K.AdcScale))
+                .cast("bigint")),
+            lit(0L), (acc, x) => acc + x))))
+        val key =
+          if (!normalized) Sq8K.dot_int(code, col("__qw"))
+          else {
+            val (ta, tb) = Sq8K.reconTables(mn, mx)
+            Sq8K.cos_key(code, col("__qw"), col("__mq"), ta, tb)
+          }
+        (cands.withColumn("__key", key), col("__key").desc)
+    }
+    keyed
+      .withColumn("rank", row_number().over(Window.partitionBy(col("qid"))
+        .orderBy(order +: ids.map(col(_).asc): _*)))
+      .where(col("rank") <= rerank)
+      .select((Seq("qid", "qv") ++ carried :+ "rank").map(col): _*)
+  }
+
+  /** The SERVING read shape end-to-end as a gated operator — what
+    * [[graft.engine.AnnIndex]]'s trained tier executes against its
     * cell-partitioned layout, re-expressed over (vid, v) relations so
     * the driver's oracle re-measures the serving tier's recall every
-    * round at every scale factor (the registry twin of the CLI-side
-    * ProbeKnn measurements):
+    * round at every scale factor:
     *
     *  1. spill-cell LAYOUT — each corpus vector lands in its `spill`
     *     nearest cells via the map-only broadcast-fed
-    *     [[graft.exprs.NearestCells]] argmax (the data/ rewrite pass);
-    *  2. PROBES — each query's `nProbe` nearest cells (query-side
-    *     window, queries × k rows only);
-    *  3. spill DEDUP BEFORE the shortlist cut (the r12-advice fix:
-    *     copies of one row must not shrink the rerank budget);
-    *  4. ADC SHORTLIST — top-`rerank` candidates per query by PQ
-    *     approximate L2 over the skinny code column;
-    *  5. exact-cosine RERANK of the shortlist to the final top-k.
+    *     [[graft.exprs.NearestCells]] argmax (the data/ rewrite pass),
+    *     coded by `encode` (which sees the row's `cell`);
+    *  2. PROBES — each query's `nProbe` nearest cells;
+    *  3. the [[shortlist]] of `rerank` per query under `tier`, spill
+    *     copies reduced before the cut, self-pairs excluded, each row's
+    *     vector carried along;
+    *  4. exact-cosine RERANK of the shortlist to the final top-k, ties by
+    *     neighbor id.
     *
-    * Codebooks/encode/LUT/ADC are byte-identical to [[pq]]/[[ivfPq]];
-    * ties break by neighbor id at both cuts, so a DuckDB unroll replays
-    * every rank. corpus: (vid, v); centroids: (cid, cv) — tiny,
-    * broadcast/collected; queries selected by `isQuery`.
-    * Output: (qid, rank, neighbor). */
+    * vecs: (vid, v) plus any columns `encode` or `keep` read;
+    * `keep` is the metadata PRE-filter twin of
+    * [[graft.engine.AnnIndex.knn]]'s `filter`, applied to the stored
+    * rows before the shortlist cut. Output: (qid, rank, neighbor). */
+  private def servingTwin(vecs: DataFrame, isQuery: Column => Column,
+      centroids: DataFrame, centArr: Array[(Long, Array[Float])],
+      nProbe: Int, spill: Int, rerank: Int, k: Int, tier: Tier,
+      keep: Option[Column])(encode: DataFrame => DataFrame): DataFrame = {
+    // snapshotted: the layout and the probes both read it
+    val snap = vecs.localCheckpoint(eager = false)
+    val bc = vecs.sparkSession.sparkContext.broadcast(centArr)
+    val cells = snap.withColumn("cell", explode(
+      graft.exprs.NearestCells.nearest_cells(col("v"), bc, spill)))
+    val layout = encode(keep.fold(cells)(cells.where))
+      .select(col("cell"), col("code"), col("vid"), col("v"))
+    val probes = cellAssign(snap.where(isQuery(col("vid"))), centroids,
+        "vid", "v", nProbe, carry = Seq("v"))
+      .select(col("vid").as("qid"), col("v").as("qv"), col("cell").as("__pcell"))
+    topK(shortlist(probes, layout, tier, Seq("vid"), spill = true, rerank,
+      pair = Some(col("vid") =!= col("qid"))), k)
+  }
+
+  /** The RESIDUAL PQ serving twin of the CLI trained tier's `train --pq`
+    * + `knn` path ([[servingTwin]] under [[Tier.PqResidual]]): each
+    * spilled copy encodes the residual against ITS OWN cell's centroid,
+    * so copies of one row carry different codes and reduce by MIN. The
+    * residual is a double-domain IEEE subtraction
+    * ([[graft.exprs.Pq.vec_residual]]) and everything downstream is
+    * exact fixed-point PQ arithmetic. Codebooks MUST be residual-trained
+    * ([[pqCodebooksTrained]] over [[residuals]]). corpus: (vid, v);
+    * centroids: (cid, cv); queries selected by `isQuery`. */
   def ivfPqServing(corpus: DataFrame, isQuery: Column => Column,
-      centroids: DataFrame, nProbe: Int, spill: Int, numSubspaces: Int,
-      rerank: Int, k: Int,
-      codebooks: Option[graft.exprs.Pq.Codebooks] = None,
-      residual: Boolean = false): DataFrame = {
+      centroids: DataFrame, nProbe: Int, spill: Int, rerank: Int, k: Int,
+      codebooks: graft.exprs.Pq.Codebooks): DataFrame = {
     import graft.exprs.Pq
-    if (residual)
-      return ivfPqServingResidual(corpus, isQuery, centroids, nProbe,
-        spill, rerank, k, codebooks.getOrElse(sys.error(
-          "residual serving needs residual-trained codebooks — train with " +
-            "pqCodebooksTrained over Ann.residuals")))
-    val vecs = corpus.select(col("vid"), col("v"))
-    val cb = codebooks.getOrElse(pqCodebooks(vecs, numSubspaces))
-    // snapshotted: the coded corpus feeds the layout, probing, and LUTs
-    val snap = vecs.withColumn("code", Pq.pq_encode(col("v"), cb))
-      .localCheckpoint(eager = false)
-    val centArr = centroids
-      .select(col("cid").cast("long"),
-        col("cv").cast(org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
-    val bc = vecs.sparkSession.sparkContext.broadcast(centArr)
-    val asg = snap.where(col("code").isNotNull)
-      .withColumn("cell", explode(
-        graft.exprs.NearestCells.nearest_cells(col("v"), bc, spill)))
-    val qs = snap.where(isQuery(col("vid")))
-      .withColumn("lut", Pq.pq_lut(col("v"), cb))
-      .where(col("lut").isNotNull)
-    val probes = cellAssign(qs, centroids, "vid", "v", nProbe,
-        carry = Seq("v", "lut"))
-      .select(col("vid").as("qid"), col("v").as("qv"),
-        col("lut"), col("cell"))
-    // candidate set across probed cells; spill copies of one neighbor
-    // are IDENTICAL rows (same code/vector), so the dedup is exact and
-    // runs BEFORE the shortlist so copies can't crowd the budget
-    val cands = probes.join(asg, "cell")
-      .where(col("vid") =!= col("qid"))
-      .dropDuplicates("qid", "vid")
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adist").asc, col("vid").asc)
-    val shortlist = cands
-      .withColumn("adist", Pq.pq_adc(col("code"), col("lut")))
-      .withColumn("srn", row_number().over(w))
-      .where(col("srn") <= rerank)
-    topK(shortlist.select(col("qid"), col("qv"), col("vid"), col("v")), k)
-  }
-
-  /** The RESIDUAL (IVFADC-proper) serving read shape — [[ivfPqServing]]
-    * with codes over `v − centroid(cell)` instead of raw vectors (Jégou
-    * et al. 2011's production form; the raw-vector form above is the
-    * pre-r17 construction kept for the arithmetic-pinning gates):
-    *
-    *  1. spill-cell LAYOUT as there, but each spilled copy encodes the
-    *     residual against ITS OWN cell's centroid — copies of one row
-    *     carry DIFFERENT codes, each a valid approximation in its cell;
-    *  2. PROBES as there, but each (query, probed cell) pair computes
-    *     its own ADC lookup table over the query's residual in that
-    *     cell — nProbe small tables per query, the FAISS per-probe LUT;
-    *  3. per-copy ADC, then the MIN over a row's probed copies — a
-    *     deterministic aggregate replacing the raw form's
-    *     identical-copy dedup (residual copies are not identical, so a
-    *     pick-any dedup would be nondeterministic);
-    *  4. shortlist cut (adist asc, vid asc) and exact-cosine rerank as
-    *     there.
-    *
-    * The residual is a double-domain IEEE subtraction
-    * ([[graft.exprs.Pq.vec_residual]]) and everything downstream is the
-    * same exact fixed-point PQ arithmetic, so a DuckDB unroll replays
-    * every rank. Codebooks MUST be residual-trained
-    * ([[pqCodebooksTrained]] over [[residuals]]). */
-  private def ivfPqServingResidual(corpus: DataFrame,
-      isQuery: Column => Column, centroids: DataFrame, nProbe: Int,
-      spill: Int, rerank: Int, k: Int,
-      cb: graft.exprs.Pq.Codebooks): DataFrame = {
-    import graft.exprs.Pq
-    val vecs = corpus.select(col("vid"), col("v"))
-    val centF = centroids.select(col("cid").cast("long").as("cid"),
+    val centArr = centroidArray(centroids)
+    val cellCv = broadcast(centroids.select(col("cid").cast("long").as("cell"),
       col("cv").cast(org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType)).as("cv"))
-    val centArr = centF.collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-    val bc = vecs.sparkSession.sparkContext.broadcast(centArr)
-    val cellCv = broadcast(centF.select(col("cid").as("cell"), col("cv")))
-    // layout: per-copy residual codes (cell-matched centroid via one
-    // broadcast join, encode through the tight-loop kernel pair)
-    val asg = vecs
-      .withColumn("cell", explode(
-        graft.exprs.NearestCells.nearest_cells(col("v"), bc, spill)))
-      .join(cellCv, "cell")
-      .withColumn("code",
-        Pq.pq_encode(Pq.vec_residual(col("v"), col("cv")), cb))
-      .where(col("code").isNotNull)
-      .select(col("cell"), col("vid"), col("v"), col("code"))
-    // probes: one LUT per (query, probed cell) over the query's residual
-    val qs = vecs.where(isQuery(col("vid")))
-    val probes = cellAssign(qs, centroids, "vid", "v", nProbe,
-        carry = Seq("v"))
-      .join(cellCv, "cell")
-      .withColumn("lut",
-        Pq.pq_lut(Pq.vec_residual(col("v"), col("cv")), cb))
-      .where(col("lut").isNotNull)
-      .select(col("vid").as("qid"), col("v").as("qv"),
-        col("lut"), col("cell"))
-    val perCopy = probes.join(asg, "cell")
-      .where(col("vid") =!= col("qid"))
-      .withColumn("adist", Pq.pq_adc(col("code"), col("lut")))
-    // min over a row's probed copies — qv/v ride along (functionally
-    // determined by qid/vid, so the first() picks are value-stable)
-    val best = perCopy.groupBy(col("qid"), col("vid"))
-      .agg(min(col("adist")).as("adist"),
-        first(col("qv")).as("qv"), first(col("v")).as("v"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adist").asc, col("vid").asc)
-    val shortlist = best
-      .withColumn("srn", row_number().over(w))
-      .where(col("srn") <= rerank)
-    topK(shortlist.select(col("qid"), col("qv"), col("vid"), col("v")), k)
+        org.apache.spark.sql.types.FloatType)).as("cv")))
+    servingTwin(corpus.select(col("vid"), col("v")), isQuery, centroids,
+        centArr, nProbe, spill, rerank, k, Tier.PqResidual(codebooks, centArr),
+        keep = None) { cells =>
+      // each copy's code is taken against its own cell's centroid
+      cells.join(cellCv, "cell").withColumn("code",
+        Pq.pq_encode(Pq.vec_residual(col("v"), col("cv")), codebooks))
+    }
   }
 
-  /** The SQ8 serving read shape, end to end — the in-query twin of the
-    * CLI trained tier's `train --sq8` + `knn` path, the same way
-    * [[ivfPqServing]] twins the PQ tier: spill-cell layout and probes as
-    * there, then
-    *
-    *  4'. ASYMMETRIC SQ8 SHORTLIST — per-dim corpus min/max freeze the
-    *      quantizer; candidates carry int8-style codes
-    *      ([[graft.exprs.Sq8Quantize]]) and each query folds into
-    *      fixed-point weights w_j = floor(q_j·step_j·2^24)
-    *      ([[graft.exprs.Sq8.AdcScale]]); the exact integer dot
-    *      Σ code_j·w_j orders by reconstructed inner product (affine
-    *      offset cancelled), ties by neighbor id, top-`rerank` survive;
-    *  5'. exact-cosine RERANK of the shortlist to the final top-k.
-    *
-    * Every step is integer or reproducible double arithmetic, so a
-    * DuckDB unroll replays every rank. corpus: (vid, v) plus any
-    * metadata columns `candFilter` needs; centroids: (cid, cv); queries
-    * selected by `isQuery`. `candFilter` is the serving tier's
-    * metadata PRE-filter twin ([[graft.engine.AnnIndex.knn]]'s
-    * `filter`): applied to the probed CANDIDATES before the shortlist
-    * cut, never to the stored layout. Output: (qid, rank, neighbor). */
+  /** The SQ8 serving twin of the CLI trained tier's `train --sq8` +
+    * `knn` path ([[servingTwin]] under [[Tier.Sq8]]): per-dim corpus
+    * min/max freeze the quantizer and candidates carry int8-style codes
+    * ([[graft.exprs.Sq8Quantize]]). `normRank` cuts on the normalized
+    * (reconstructed-cosine) key the CLI tier serves with; without it
+    * the plain asymmetric dot. corpus: (vid, v) plus any metadata
+    * columns `candFilter` needs; centroids: (cid, cv); queries selected
+    * by `isQuery`. `candFilter` is the serving tier's metadata
+    * PRE-filter twin, applied to the stored rows before the shortlist
+    * cut. Output: (qid, rank, neighbor). */
   def ivfSq8Serving(corpus: DataFrame, isQuery: Column => Column,
       centroids: DataFrame, nProbe: Int, spill: Int,
       rerank: Int, k: Int, candFilter: Option[Column] = None,
       normRank: Boolean = false): DataFrame = {
-    import graft.exprs.Sq8
     val vecs = corpus.withColumn("v",
       col("v").cast(org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType)))
@@ -885,76 +917,9 @@ object Ann {
       .sortBy(_._1)
     val mn = stats.map(_._2)
     val mx = stats.map(_._3)
-    // snapshotted: the coded corpus feeds the layout, probing, weights
-    val snap = vecs.withColumn("code", Sq8.sq8_quantize(col("v"), mn, mx))
-      .localCheckpoint(eager = false)
-    val centArr = centroids
-      .select(col("cid").cast("long"),
-        col("cv").cast(org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
-    val bc = vecs.sparkSession.sparkContext.broadcast(centArr)
-    val asg = snap.where(col("code").isNotNull)
-      .withColumn("cell", explode(
-        graft.exprs.NearestCells.nearest_cells(col("v"), bc, spill)))
-    val step = mn.indices.map(i => (mx(i) - mn(i)) / 255.0)
-    val qs = snap.where(isQuery(col("vid")))
-      // bigint weights end-to-end (the DuckDB oracle's qw is BIGINT; an
-      // int cast would wrap for large-magnitude vectors)
-      .withColumn("qw", zip_with(col("v"), typedLit(step),
-        (x, s) => floor(x * s * lit(Sq8.AdcScale)).cast("bigint")))
-      .where(col("qw").isNotNull)
-    // `normRank`: the plain integer dot orders candidates by
-    // reconstructed INNER PRODUCT — correct when corpus norms are
-    // uniform, but on a wide norm spread high-norm vectors crowd the
-    // fixed shortlist ahead of low-norm true (cosine) neighbors
-    // (ProbeSq8Norm: recall@5 0.91 → 0.63 under a 10× spread). The
-    // normalized key divides by the reconstructed norm: numerator
-    // 2²⁴·⟨x̂,q⟩ = mq + idot and denominator (2¹²·‖x̂‖)² are both EXACT
-    // integer sums (order-independent — the determinism discipline), so
-    // the one double division + sqrt per candidate is bit-identical in
-    // the DuckDB replay.
-    val mqCol =
-      if (!normRank) lit(0L)
-      else aggregate(zip_with(col("v"), typedLit(mn.toSeq),
-          (x, m) => floor(x.cast("double") * m * lit(Sq8.AdcScale))
-            .cast("bigint")),
-        lit(0L), (a, b) => a + b)
-    val qsN = qs.withColumn("mq", mqCol)
-    val probes = cellAssign(qsN, centroids, "vid", "v", nProbe,
-        carry = Seq("v", "qw", "mq"))
-      .select(col("vid").as("qid"), col("v").as("qv"),
-        col("qw"), col("mq"), col("cell"))
-    val cands0 = probes.join(asg, "cell")
-      .where(col("vid") =!= col("qid"))
-    val cands = candFilter.fold(cands0)(cands0.where)
-      .dropDuplicates("qid", "vid")
-    val ranked =
-      if (!normRank)
-        cands.withColumn("idot", Sq8.dot_int(col("code"), col("qw")))
-          .withColumn("srn", row_number().over(Window.partitionBy(col("qid"))
-            .orderBy(col("idot").desc, col("vid").asc)))
-      else {
-        // integer reconstruction tables at 2¹² fixed point:
-        // x̂_i·2¹² ≈ A_i + code_i·B_i
-        val ab = typedLit(mn.indices.map(i => (
-          math.floor(mn(i) * 4096.0).toLong,
-          math.floor((mx(i) - mn(i)) / 255.0 * 4096.0).toLong)).toSeq)
-        cands.withColumn("idot", Sq8.dot_int(col("code"), col("qw")))
-          .withColumn("den", aggregate(
-            zip_with(col("code"), ab, (c, s) => {
-              val t = s.getField("_1") + c.cast("bigint") * s.getField("_2")
-              t * t
-            }), lit(0L), (a, x) => a + x))
-          .withColumn("key",
-            when(col("den") === 0L, lit(Double.MinValue)).otherwise(
-              (col("mq") + col("idot")).cast("double") /
-                sqrt(col("den").cast("double"))))
-          .withColumn("srn", row_number().over(Window.partitionBy(col("qid"))
-            .orderBy(col("key").desc, col("vid").asc)))
-      }
-    val shortlist = ranked.where(col("srn") <= rerank)
-    topK(shortlist.select(col("qid"), col("qv"), col("vid"), col("v")), k)
+    servingTwin(vecs, isQuery, centroids, centroidArray(centroids), nProbe,
+        spill, rerank, k, Tier.Sq8(mn, mx, normRank), candFilter) {
+      _.withColumn("code", graft.exprs.Sq8.sq8_quantize(col("v"), mn, mx))
+    }
   }
 }

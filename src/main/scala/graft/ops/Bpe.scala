@@ -44,10 +44,12 @@ object Bpe {
       .select(col("freq"), explode(charPairs(col("w"))).as("pair"))
       .groupBy(col("pair")).agg(sum(col("freq")).as("cnt"))
     // global top-k: orderBy+limit compiles to TakeOrderedAndProject, and
-    // the rank window then runs over the k survivors only
+    // the rank window then runs over the k survivors only. The limit
+    // leaves them in one partition, so a window keyed on the partition
+    // id numbers them as an unpartitioned one would
     val top = pairs.orderBy(col("cnt").desc, col("pair").asc).limit(k)
     top.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy()
+        org.apache.spark.sql.expressions.Window.partitionBy(spark_partition_id())
           .orderBy(col("cnt").desc, col("pair").asc)))
       .select(col("rank"), col("pair"), col("cnt"))
   }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import Hashing.h64
@@ -67,16 +66,17 @@ object Dsir {
     val counts = feat.groupBy(col("bucket")).agg(
       sum(when(col("tgt"), col("cnt")).otherwise(0L)).as("c_t"),
       sum(when(col("tgt"), 0L).otherwise(col("cnt"))).as("c_r"))
-    // totals: an unpartitioned window over the ≤ `buckets`-row aggregate
-    // (never over the corpus — same shape as Mixture's global min)
-    val all = Window.partitionBy()
-    val lr = counts.select(col("bucket"),
-      floor(log(
-        ((col("c_t") + 1).cast("double") *
-          (sum(col("c_r")).over(all) + b).cast("double")) /
-        ((col("c_r") + 1).cast("double") *
-          (sum(col("c_t")).over(all) + b).cast("double"))) * 1e6)
-        .cast("long").as("lr"))
+    // totals: a one-row aggregate over the ≤ `buckets`-row counts (never
+    // over the corpus — same shape as Mixture's global min)
+    val lr = Mixture.withTotals(counts,
+        "__sr" -> sum(col("c_r")), "__st" -> sum(col("c_t")))
+      .select(col("bucket"),
+        floor(log(
+          ((col("c_t") + 1).cast("double") *
+            (col("__sr") + b).cast("double")) /
+          ((col("c_r") + 1).cast("double") *
+            (col("__st") + b).cast("double"))) * 1e6)
+          .cast("long").as("lr"))
     val scored = feat
       .join(broadcast(lr), "bucket")
       .groupBy(col("did")).agg(sum(col("cnt") * col("lr")).as("score"))

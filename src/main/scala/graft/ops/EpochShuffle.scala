@@ -243,9 +243,9 @@ object EpochShuffle {
         .agg(count(lit(1)).as("n_rows")))
     // DECIMAL(38,0) sum: Σw over token-mass-scale weights wraps a
     // BIGINT window sum silently (the Mixture.mixSchedule convention)
-    val wsum = sum(col("weight").cast("decimal(38,0)")).over(Window.partitionBy())
-    val wtab = per.select(col("source").as("__src"),
-      col("weight").as("__w"), wsum.as("__wsum"))
+    val wtab = Mixture.withTotals(per,
+        "__wsum" -> sum(col("weight").cast("decimal(38,0)")))
+      .select(col("source").as("__src"), col("weight").as("__w"), col("__wsum"))
     val keyExpr = epoch match {
       case Some(e) => h64(concat(lit(s"$seed:"), e.cast("string"),
         lit(":"), id.cast("string")))

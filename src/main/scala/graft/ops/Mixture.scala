@@ -16,12 +16,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: ONE source-keyed aggregate over the corpus (partial
   * map-side combine, tiny result), then the global min over the handful
-  * of per-source rows is an unpartitioned window OVER THAT AGGREGATE —
-  * single-partition, but only the per-source rows ever enter it, so the
-  * corpus is never reshuffled and never read twice. (A two-branch
-  * aggregate-plus-crossJoin form reads the corpus TWICE: column pruning
-  * specializes each branch's scan, so ReuseExchange never fires —
-  * plan-pinned in PlanSpec.)
+  * of per-source rows is ONE one-row aggregate OVER THAT AGGREGATE
+  * ([[withTotals]]) — single-task, but only the per-source rows ever
+  * enter it, so the corpus is never reshuffled and never read twice. (A
+  * two-branch aggregate-plus-crossJoin form reads the corpus TWICE:
+  * column pruning specializes each branch's scan, so ReuseExchange never
+  * fires — plan-pinned in PlanSpec.)
   */
 object Mixture {
 
@@ -49,6 +49,22 @@ object Mixture {
     * scheduled shard instead of interleaving it.
     * `private[ops]`: [[EpochShuffle]]'s scheduled sinks build the same
     * per-source weight table and must enforce the same contract. */
+  /** `df` with each global aggregate in `totals` attached to every row
+    * under its name, through ONE one-row aggregate that carries the rows
+    * along (`collect_list`) and explodes them back — no cartesian, no
+    * second consumer of `df`. The final aggregate runs in one task, as
+    * the unpartitioned window it replaces did (which also logged `No
+    * Partition Defined`), so `df` must be a small relation: the
+    * per-source or per-bucket rows of an aggregate, never a corpus. */
+  private[ops] def withTotals(df: DataFrame, totals: (String, Column)*): DataFrame = {
+    val names = df.columns.toSeq
+    df.agg(collect_list(struct(names.map(col): _*)).as("__rows"),
+        totals.map { case (n, t) => t.as(n) }: _*)
+      .select(explode(col("__rows")).as("__r") +: totals.map(t => col(t._1)): _*)
+      .select(names.map(n => col("__r").getField(n).as(n)) ++
+        totals.map(t => col(t._1)): _*)
+  }
+
   private[ops] def weightChecked(per: DataFrame): DataFrame = {
     val nw = count(lit(1)).over(
       org.apache.spark.sql.expressions.Window.partitionBy(col("source")))
@@ -85,10 +101,9 @@ object Mixture {
         .groupBy(col("source"), col("weight"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens")))
     // the no-upsampling unit count: global min over the per-source rows
-    val u = min(expr("n_tokens DIV weight"))
-      .over(org.apache.spark.sql.expressions.Window.partitionBy())
-    per.select(col("source"), col("n_docs"), col("n_tokens"), col("weight"),
-      (col("weight") * u).as("alloc_tokens"))
+    withTotals(per, "__u" -> min(expr("n_tokens DIV weight")))
+      .select(col("source"), col("n_docs"), col("n_tokens"), col("weight"),
+        (col("weight") * col("__u")).as("alloc_tokens"))
   }
 
   /** REALIZE a training mixture: cut each source's document stream at
@@ -181,8 +196,8 @@ object Mixture {
     * input to one). Exact integer arithmetic throughout; the ×10⁶
     * epochs scale-up widens to DECIMAL(38,0) (HUGEINT in the oracle)
     * because `alloc · 10⁶` wraps BIGINT at the 100 TB design point.
-    * One source-keyed combiner aggregate + windows over the per-source
-    * rows only. Output per source: (source, n_tokens, weight,
+    * One source-keyed combiner aggregate + a one-row aggregate over the
+    * per-source rows only. Output per source: (source, n_tokens, weight,
     * alloc_tokens, epochs_ppm, capped_tokens, shortfall_tokens). */
   def mixEpochs(df: DataFrame, source: Column, nTok: Column,
       weight: Column, budgetNum: Long, maxEpochs: Long): DataFrame = {
@@ -190,16 +205,17 @@ object Mixture {
         weight.as("weight"))
       .groupBy(col("source"), col("weight"))
       .agg(sum(col("n_tok")).as("n_tokens")))
-    per.select(col("source"), col("n_tokens"), col("weight"))
+    withTotals(per.select(col("source"), col("n_tokens"), col("weight")),
+        "__tn" -> sum(col("n_tokens")), "__tw" -> sum(col("weight")))
       .withColumn("alloc_tokens", expr(
-        s"(weight * (sum(n_tokens) OVER () * $budgetNum)) " +
-          "DIV sum(weight) OVER ()"))
+        s"(weight * (__tn * $budgetNum)) DIV __tw"))
       .withColumn("epochs_ppm", expr(
         "(CAST(alloc_tokens AS DECIMAL(38,0)) * 1000000) DIV n_tokens"))
       .withColumn("capped_tokens",
         least(col("alloc_tokens"), expr(s"n_tokens * $maxEpochs")))
       .withColumn("shortfall_tokens",
         col("alloc_tokens") - col("capped_tokens"))
+      .drop("__tn", "__tw")
   }
 
   /** Water-filling fixpoint over the per-source (weight, n_tokens)
@@ -400,9 +416,8 @@ object Mixture {
       weight.as("weight"))
     val per = weightChecked(rows.groupBy(col("source"), col("weight"))
       .agg(count(lit(1)).as("n_docs")))
-    val wsum = sum(col("weight").cast("decimal(38,0)")).over(
-      org.apache.spark.sql.expressions.Window.partitionBy())
-    val wtab = per.select(col("source"), col("weight"), wsum.as("wsum"))
+    val wtab = withTotals(per,
+      "wsum" -> sum(col("weight").cast("decimal(38,0)")))
     val wk = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("h"), col("id"))
     rows
@@ -445,10 +460,9 @@ object Mixture {
       .localCheckpoint(eager = false)
     val per = weightChecked(rows.groupBy(col("source"), col("weight"))
       .agg(sum(col("n_tok")).as("n_tokens")))
-    val u = min(expr("n_tokens DIV weight"))
-      .over(org.apache.spark.sql.expressions.Window.partitionBy())
-    val alloc = per.select(col("source"), col("n_tokens"),
-      (col("weight") * u).as("alloc_tokens"))
+    val alloc = withTotals(per, "__u" -> min(expr("n_tokens DIV weight")))
+      .select(col("source"), col("n_tokens"),
+        (col("weight") * col("__u")).as("alloc_tokens"))
       .withColumn("thr", expr(
         s"CAST(LEAST(CAST($MaxH AS DECIMAL(38,0)), " +
           s"CAST($MaxH DIV n_tokens AS DECIMAL(38,0)) * " +
@@ -564,7 +578,7 @@ object Mixture {
     * pass).
     *
     * Scale shape: one source-keyed aggregate (map-side combine, tiny
-    * result), unpartitioned window sums over the per-source rows ONLY,
+    * result), one-row global sums over the per-source rows ONLY,
     * then the rates broadcast back onto the corpus for the keep pass —
     * the corpus is scanned twice (aggregate + filter), which is
     * inherent: rates are a function of the global aggregate. Output per
@@ -578,10 +592,11 @@ object Mixture {
       .localCheckpoint(eager = false)
     val per = rows.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-    val rates = per
-      .withColumn("w", floor(sqrt(col("n_tokens").cast("double"))).cast("long"))
-      .withColumn("target_tokens",
-        expr("(w * (sum(n_tokens) OVER () DIV 2)) DIV sum(w) OVER ()"))
+    val rates = withTotals(per
+        .withColumn("w", floor(sqrt(col("n_tokens").cast("double"))).cast("long")),
+        "__tn" -> sum(col("n_tokens")), "__tw" -> sum(col("w")))
+      .withColumn("target_tokens", expr("(w * (__tn DIV 2)) DIV __tw"))
+      .drop("__tn", "__tw")
       // widen to DECIMAL(38,0) before the ×10^6 scale-up: in pure Int64
       // the multiply wraps above ~9.2e12 target tokens — real at the
       // module's 100 TB design point — and Spark wraps silently while

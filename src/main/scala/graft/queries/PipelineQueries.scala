@@ -71,18 +71,6 @@ object PipelineQueries {
     snapMemo.computeIfAbsent(key, _ => build.localCheckpoint(eager = false))
   }
 
-  /** [[memoSnap]]'s sibling for collected DRIVER artifacts (trained
-    * model tables, weight vectors): same (session, dir, name) keying,
-    * same immutable-fixture argument, same size bound — one eviction
-    * policy for every memo in the module. */
-  private val artifactMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), AnyRef]()
-  private def memoArtifact[T <: AnyRef](
-      key: (SparkSession, String, String))(build: => T): T = {
-    if (artifactMemo.size > 64) artifactMemo.clear()
-    artifactMemo.computeIfAbsent(key, _ => build).asInstanceOf[T]
-  }
-
   private def shingled(s: SparkSession, dir: String): DataFrame =
     memoSnap((s, dir, "shingles")) {
       Dedup.shingles(
@@ -836,8 +824,11 @@ object PipelineQueries {
     }.reduce(_ + _)
     // orderBy+limit = TakeOrderedAndProject (per-partition top-k, merged
     // on the driver) — the rank window then sees only the 10 survivors,
-    // never the corpus (the q_search_bm25 shape)
+    // never the corpus (the q_search_bm25 shape). The limit leaves them in
+    // one partition, so a window keyed on the partition id numbers them
+    // as an unpartitioned one would
     val bmW = org.apache.spark.sql.expressions.Window
+      .partitionBy(spark_partition_id())
       .orderBy(col("score").desc, col("doc_id").asc)
     val bm = d.withColumn("score", score)
       .where(col("score") > 0)
@@ -854,10 +845,12 @@ object PipelineQueries {
       .withColumn("contrib", expr("CAST(1000000000 AS BIGINT) div (60 + rank)"))
       .groupBy(col("doc_id"))
       .agg(sum(col("contrib")).as("rrf_q"))
+    // the same TakeOrdered cut, then the partition-keyed rank window
     val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(spark_partition_id())
       .orderBy(col("rrf_q").desc, col("doc_id").asc)
-    fused.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 10)
+    fused.orderBy(col("rrf_q").desc, col("doc_id").asc).limit(10)
+      .withColumn("rank", row_number().over(w))
       .select(col("rank"), col("doc_id"), col("rrf_q"))
   }
 
@@ -1356,14 +1349,16 @@ object PipelineQueries {
         tokenizeDefault(col("text")).as("toks")),
       col("doc_id"), col("toks"), col("lang") === "en", buckets = 256)
     // TakeOrdered cut FIRST (scale-safe global top-k), then the rank
-    // window runs over the 100 survivors only — never the corpus
+    // window runs over the 100 survivors only — never the corpus. The
+    // limit leaves them in one partition, so a window keyed on the
+    // partition id numbers them as an unpartitioned one would
     val top = docs(s, dir).where(col("lang") =!= "en")
       .select(col("doc_id"))
       .join(scores, col("doc_id") === col("did"))
       .select(col("doc_id"), col("score"))
       .orderBy(col("score").desc, col("doc_id").asc).limit(100)
     top.withColumn("sel_rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy()
+        org.apache.spark.sql.expressions.Window.partitionBy(spark_partition_id())
           .orderBy(col("score").desc, col("doc_id").asc)))
       .orderBy(col("doc_id"))
   }
@@ -1749,13 +1744,14 @@ object PipelineQueries {
       .withColumnRenamed("id", "doc_id")
       .orderBy(col("doc_id"))
 
-  /** Trained WordPiece model per (session, dir) — merge-table rows (a
-    * model artifact, 4 rows) plus the checkpointed word-frequency table,
-    * memoized so the train gate and the apply gate share ONE training
-    * run (the unigram trainer's memo discipline). */
+  /** Trained WordPiece model per scale dir — merge-table rows (a model
+    * artifact, 4 rows) plus the checkpointed word-frequency table,
+    * memoized ([[FixtureMemo.model]]) so the train gate and the apply
+    * gate share ONE training run (the unigram trainer's memo
+    * discipline). */
   private def wordpieceModel(s: SparkSession,
       dir: String): (Seq[(Long, String, Long, Long, Long, Long)], DataFrame) =
-    memoArtifact((s, dir, "wordpiece")) {
+    FixtureMemo.model(s"wordpiece:$dir") {
       val (mt, words) = Wordpiece.trainWithVocab(
         docs(s, dir).select(tokenizeDefault(col("text")).as("toks")),
         col("toks"), iterations = 4)
@@ -1885,10 +1881,10 @@ object PipelineQueries {
   /** The trained model — ONE 3-iteration training execution per
     * (session, dir), shared by the train gate, the apply gate, and the
     * v4 chain (a collected model artifact over immutable fixtures,
-    * through the shared [[memoArtifact]]). Rows: (iter, w_x0..w_x2). */
+    * through [[FixtureMemo.model]]). Rows: (iter, w_x0..w_x2). */
   private def qualityTrainRows(s: SparkSession,
       dir: String): Seq[(Long, Long, Long, Long)] =
-    memoArtifact((s, dir, "qtrain")) {
+    FixtureMemo.model(s"qtrain:$dir") {
       graft.ops.LogReg.train(qualityFeats(s, dir), numFeatures = 3,
           lrDen = QualityLrDen, iterations = 3)
         .collect()
@@ -1974,12 +1970,12 @@ object PipelineQueries {
 
   /** Trained model artifact: (piece, cost_q) rows collected to the
     * driver — V + alphabet rows, the [[graft.ops.Bpe]] merge-table
-    * pattern, not a data collect. Memoized per (session, dir) like the
-    * snapshots above (same immutable-fixture argument): seg and counts
+    * pattern, not a data collect. Memoized per scale dir
+    * ([[FixtureMemo.model]] — same immutable-fixture argument): seg and counts
     * share one training pass instead of each retraining — training
     * dominates the chain (ProbeNewOps). */
   private def unigramModel(s: SparkSession, dir: String): Seq[(String, Long)] =
-    memoArtifact((s, dir, "unimodel")) {
+    FixtureMemo.model(s"unimodel:$dir") {
       graft.ops.Unigram.seedVocab(unigramWords(s, dir), UnigramMaxPiece, topV = 200)
         .select(col("piece"), col("cost_q"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -2548,8 +2544,7 @@ object PipelineQueries {
     }
     val approx = Ann.ivfPqServing(e.select(col("vid"), col("v")), _ < 20,
         cents,
-        nProbe = nProbe, spill = 2, numSubspaces = 4, rerank = 256, k = 5,
-        codebooks = Some(cb), residual = true)
+        nProbe = nProbe, spill = 2, rerank = 256, k = 5, codebooks = cb)
       .select(col("qid"), col("neighbor"))
     val exact = Ann.brute(
       e.where(col("vid") < 20).select(col("vid").as("qid"), col("v").as("qv")),

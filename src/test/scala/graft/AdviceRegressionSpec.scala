@@ -988,8 +988,21 @@ class AdviceRegressionSpec extends AnyFunSuite {
     val rootLogger = ctx.getConfiguration.getRootLogger
     rootLogger.addAppender(capture, null, null)
     ctx.updateLoggers()
-    try new graft.engine.AnnIndex(spark, cat).train("twarn", "emb", cells = 2)
-    finally {
+    try {
+      new graft.engine.AnnIndex(spark, cat).train("twarn", "emb", cells = 2)
+      // one registry call per op whose global totals or top-k ranks
+      // once ran through an unpartitioned window: Dsir.importanceScores
+      // and the selection rank, Bpe.topPairs, Mixture.mixAllocation /
+      // mixSchedule / mixEpochs / mixRealizeTwoPass / temperatureSample,
+      // EpochShuffle's scheduled shard assignment, the hybrid RRF ranks
+      Seq("pipe_dsir_select", "pipe_bpe_step", "pipe_mix_weights",
+        "pipe_mix_schedule", "pipe_mix_epochs", "pipe_mix_realize_2pass",
+        "pipe_temperature_sample", "pipe_mix_shard_schedule",
+        "pipe_hybrid_rrf").foreach { q =>
+        graft.queries.PipelineQueries.all(q)(spark, "/root/testdata/sf0.001")
+          .collect()
+      }
+    } finally {
       rootLogger.removeAppender(capture.getName)
       ctx.updateLoggers()
       capture.stop()
