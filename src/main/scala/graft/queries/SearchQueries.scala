@@ -139,7 +139,7 @@ object SearchQueries {
 
   // ---- engine lifecycle roundtrips --------------------------------------
 
-  private val docsIndexConfig =
+  private[graft] val docsIndexConfig =
     """version: 1
       |name: %s
       |path: /tmp/unused
