@@ -66,17 +66,15 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    // optional positional args name specific queries to bench in
+    // isolation, without the full run's GC/cleaner bleed in the cpu column
+    val ordered = SparkEntry.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the product session, so the bench times the configuration the
     // oracle certifies
     val spark = Graft.session(cpus.toInt, "graft-bench")
 
-    // optional positional args name specific queries to bench in
-    // isolation, without the full run's GC/cleaner bleed in the cpu column
-    val only = args.toSet
-    val ordered = SparkEntry.queries.toList.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
     ordered.foreach { case (name, fn) =>
       try fn(spark, sfDir).count()
       catch { case e: Throwable =>

@@ -31,6 +31,20 @@ object SparkEntry {
     RelationalQueries.all ++ SearchQueries.all ++ PipelineQueries.all ++
       SketchQueries.all
 
+  /** The registry entries a main runs, in name order: every entry when
+    * `names` is empty, else the named ones. An argument may hold several
+    * comma-separated names; empty segments are dropped. A misspelled name
+    * fails loudly instead of running nothing — a bench would otherwise
+    * report a total of 0 and a dump would leave stale outputs to compare. */
+  def select(names: Seq[String]): List[(String, (SparkSession, String) => DataFrame)] = {
+    val wanted = names.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = wanted.diff(queries.keySet)
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    queries.toList.sortBy(_._1)
+      .filter { case (name, _) => wanted.isEmpty || wanted(name) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -8,28 +8,13 @@ object Verify {
     // iteration only; the driver always passes two args = run everything]
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [names]")
     val (sfDir, outDir) = (args(0), args(1))
-    // drop empty segments: a trailing "" filter would otherwise pass the
-    // unknown-name require and silently run nothing
-    val only: Option[Set[String]] =
-      if (args.length > 2)
-        Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet)
-          .filter(_.nonEmpty)
-      else None
-    // a misspelled filter name must fail loudly, not silently run nothing
-    // (stale outputs from a previous dump would then be compared instead)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"unknown query name(s) in filter: ${unknown.mkString(", ")}")
-    }
+    val selected = SparkEntry.select(args.drop(2))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the product session: the oracle gate certifies the configuration
     // the CLI and the bench run, extensions included
     val spark = Graft.session(cpus.toInt, "graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -427,8 +427,10 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
         .getOrElse(lay0)
         .localCheckpoint(eager = false)
       val nTruth = truth.count()
-      val grid = (Iterator.iterate(1)(_ * 2).takeWhile(_ < kEff).toSeq
-        :+ kEff).distinct
+      // ends at the TRAINED cell count: k-means drops empty cells, so
+      // probing kEff cells may name a setting the index does not have
+      val grid = (Iterator.iterate(1)(_ * 2).takeWhile(_ < centArr.length)
+        .toSeq :+ centArr.length).distinct
       val w2 = org.apache.spark.sql.expressions.Window
         .partitionBy(col("qid")).orderBy(col("__c").desc, col("vid").asc)
       def top5(scored: DataFrame): DataFrame = scored
@@ -1518,9 +1520,9 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     * [[graft.queries.PipelineQueries.pipe_hybrid_rrf]] composition: the
     * text tier (BM25 `search` over `textQuery`) and the vector tier
     * ([[knn]], any trained layout, `filter` composes) each produce
-    * their top-`depth` documents, fused by reciprocal-rank fusion with
-    * the same integer-quantized contribution the gate pins
-    * (⌊10⁹/(rrfK + rank)⌋ summed exactly — fusion order cannot drift).
+    * their top-`depth` documents, fused by [[graft.ops.Retrieval.fuse]],
+    * the reciprocal-rank fusion the gated row runs (⌊10⁹/(rrfK + rank)⌋
+    * summed exactly — fusion order cannot drift).
     * Both arms are k-bounded, so the fuse touches 2·depth driver-side
     * rows — a no-op at any corpus size; each arm's own scale shape
     * (pruned splits + stats memo; probed cells + shortlist) is
@@ -1544,14 +1546,10 @@ final class AnnIndex(spark: SparkSession, catalog: Catalog) {
     // prefix of the unfiltered one
     val txtArm = new Searcher(spark, catalog).search(name,
       graft.engine.SearchRequest(textQuery, n, postFilter = filter))
-    val fused = scala.collection.mutable.Map.empty[String, Long]
-    def add(docs: Seq[String]): Unit = docs.zipWithIndex.foreach {
-      case (doc, i) =>
-        fused(doc) = fused.getOrElse(doc, 0L) + 1000000000L / (rrfK + i + 1)
-    }
-    add(vecArm); add(txtArm)
-    fused.toSeq.sortBy { case (doc, s) => (-s, doc) }.take(k)
-      .map { case (doc, s) => (s, doc) }
+    graft.ops.Retrieval.fuse(
+        Seq(vecArm, txtArm).flatMap(_.zipWithIndex.map { case (doc, i) => (doc, i + 1) }),
+        rrfK, k)
+      .map(_.swap)
   }
 
   /** Batch serving: top-k neighbors for a whole query RELATION

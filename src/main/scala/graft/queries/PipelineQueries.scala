@@ -789,69 +789,32 @@ object PipelineQueries {
       .orderBy(col("doc_id"), col("rank"))
 
   /** Hybrid retrieval — the RAG-serving composition: a lexical BM25 arm
-    * (terms `spark join`, the [[graft.queries.SearchQueries]] scoring
-    * shape) fused with a semantic arm (query-by-example: document 7's
+    * (terms `spark join`, the [[SearchQueries.q_search_bm25]] ranking)
+    * fused with a semantic arm (query-by-example: document 7's
     * embedding, exact cosine top-10 via [[graft.ops.Ann.brute]]) by
-    * reciprocal-rank fusion. RRF contributions are integer-quantized —
-    * `⌊10⁹ / (60 + rank)⌋` summed as BIGINTs — so fusion order cannot
-    * produce float drift and the fused ranking is engine-exact.
+    * [[graft.ops.Retrieval.fuse]], the reciprocal-rank fusion
+    * `knn --hybrid-text` serves: `⌊10⁹ / (60 + rank)⌋` summed as longs,
+    * so fusion order cannot produce float drift and the fused ranking
+    * is engine-exact.
     *
     * Scale shape: each arm is its own top-k (BM25 = stats aggregate +
     * scan-score-topk; cosine = the ANN tier, brute here as the oracle-able
-    * stand-in for IVF serving); fusion then touches only 2·k rank rows —
-    * a no-op at any corpus size. Emits (rank, doc_id, rrf_q). */
+    * stand-in for IVF serving); fusion then runs in one task over the
+    * 2·k rank rows — a no-op at any corpus size. Emits (rank, doc_id,
+    * rrf_q). */
   val pipe_hybrid_rrf: Q = (s, dir) => {
-    import graft.exprs.ArrayMatch
-    val k1 = 1.2
-    val b = 0.75
-    val terms = Seq("spark", "join")
-    val d = tokenized(s, dir).withColumn("dl", size(col("toks")))
-    val statsRow = d.agg(
-      count(lit(1)).as("n"),
-      avg(col("dl").cast("double")).as("avgdl"),
-      sum(when(array_contains(col("toks"), terms(0)), 1L).otherwise(0L)).as("df0"),
-      sum(when(array_contains(col("toks"), terms(1)), 1L).otherwise(0L)).as("df1"))
-      .collect()(0)
-    val n = statsRow.getAs[Long]("n").toDouble
-    val avgdl = statsRow.getAs[Double]("avgdl")
-    def idf(df: Double): Double = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-    val idfs = Seq(idf(statsRow.getAs[Long]("df0").toDouble),
-      idf(statsRow.getAs[Long]("df1").toDouble))
-    val score = terms.zip(idfs).map { case (t, i) =>
-      val tf = ArrayMatch.count_token_eq(col("toks"), t).cast("double")
-      lit(i) * tf * lit(k1 + 1.0) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / lit(avgdl)))
-    }.reduce(_ + _)
-    // orderBy+limit = TakeOrderedAndProject (per-partition top-k, merged
-    // on the driver) — the rank window then sees only the 10 survivors,
-    // never the corpus (the q_search_bm25 shape). The limit leaves them in
-    // one partition, so a window keyed on the partition id numbers them
-    // as an unpartitioned one would
-    val bmW = org.apache.spark.sql.expressions.Window
-      .partitionBy(spark_partition_id())
-      .orderBy(col("score").desc, col("doc_id").asc)
-    val bm = d.withColumn("score", score)
-      .where(col("score") > 0)
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(10)
-      .withColumn("rank", row_number().over(bmW))
-      .select(col("doc_id"), col("rank"))
+    val bm = SearchQueries.bm25TopK(tokenized(s, dir), Seq("spark", "join"), 10)
     val e = corpus(s, dir)
     val cos = Ann.brute(
         e.where(col("vid") === 7).select(col("vid").as("qid"), col("v").as("qv")),
         e.select(col("vid"), col("v")), k = 10)
-      .select(col("neighbor").as("doc_id"), col("rank"))
-    val fused = bm.unionByName(cos)
-      .withColumn("contrib", expr("CAST(1000000000 AS BIGINT) div (60 + rank)"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("contrib")).as("rrf_q"))
-    // the same TakeOrdered cut, then the partition-keyed rank window
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(spark_partition_id())
-      .orderBy(col("rrf_q").desc, col("doc_id").asc)
-    fused.orderBy(col("rrf_q").desc, col("doc_id").asc).limit(10)
-      .withColumn("rank", row_number().over(w))
-      .select(col("rank"), col("doc_id"), col("rrf_q"))
+      .select(col("rank"), col("neighbor").as("doc_id"))
+    import s.implicits._
+    bm.unionByName(cos).coalesce(1).mapPartitions { arms =>
+      graft.ops.Retrieval.fuse(arms.map(r => (r.getLong(1), r.getInt(0))).toSeq,
+          k = 60, limit = 10)
+        .zipWithIndex.map { case ((doc, rrf), i) => (i + 1, doc, rrf) }.iterator
+    }.toDF("rank", "doc_id", "rrf_q")
   }
 
   /** Deterministic epoch shuffle + sharding at a fixed 8-shard oracle

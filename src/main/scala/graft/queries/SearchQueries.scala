@@ -10,6 +10,7 @@ import graft.Graft.table
 import graft.engine.{Catalog, Indexer, Searcher}
 import graft.exprs.ArrayMatch
 import graft.functions.TextFunctions.{phraseMatch, tokenizeDefault}
+import graft.ops.Retrieval
 
 /** The reference's query-language surface (SURVEY §2.3) as gated queries
   * over the `documents` table, each with a DuckDB oracle expressing the
@@ -76,38 +77,28 @@ object SearchQueries {
       .groupBy(col("lang")).agg(count(lit(1)).as("n"))
       .orderBy(col("lang"))
 
-  /** BM25 ranking (k1=1.2, b=0.75, Lucene/tantivy idf) for the two-term
-    * query `spark join`, emitted as (rank, doc_id) with score kept
-    * internal — document order is stable across engines because exact
-    * ties (same tf/dl profile) resolve by doc_id and non-ties differ by
-    * far more than double noise. Corpus stats (N, df, avgdl) fold in the
-    * same aggregate-then-score shape the Searcher uses. */
-  val q_search_bm25: Q = (s, dir) => {
-    val k1 = 1.2
-    val b = 0.75
-    val terms = Seq("spark", "join")
-    val d = docs(s, dir).withColumn("dl", size(col("toks")))
-    val statsRow = d.agg(
-      count(lit(1)).as("n"),
-      avg(col("dl").cast("double")).as("avgdl"),
-      sum(when(array_contains(col("toks"), terms(0)), 1L).otherwise(0L)).as("df0"),
-      sum(when(array_contains(col("toks"), terms(1)), 1L).otherwise(0L)).as("df1"))
-      .collect()(0)
-    val n = statsRow.getAs[Long]("n").toDouble
-    val avgdl = statsRow.getAs[Double]("avgdl")
-    def idf(df: Double): Double = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-    val idfs = Seq(idf(statsRow.getAs[Long]("df0").toDouble),
-      idf(statsRow.getAs[Long]("df1").toDouble))
-    val score = terms.zip(idfs).map { case (t, i) =>
-      val tf = ArrayMatch.count_token_eq(col("toks"), t).cast("double")
-      lit(i) * tf * lit(k1 + 1.0) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / lit(avgdl)))
+  /** The top `k` documents of `d` (`doc_id`, `toks`) by BM25 over
+    * `terms` ([[Retrieval]], the search verb's scoring), as (rank,
+    * doc_id). Exact score ties (the same tf/dl profile) resolve by
+    * doc_id; other scores differ by far more than double noise, so the
+    * order is engine-exact. The corpus stats are one aggregate collected
+    * to the driver, as the search verb gathers them. */
+  private[queries] def bm25TopK(d: DataFrame, terms: Seq[String],
+      k: Int): DataFrame = {
+    val toks = col("toks")
+    val stats = d.agg(Retrieval.docCount, Retrieval.meanLength(toks) +:
+      terms.map(Retrieval.docFreq(toks, _)): _*).collect()(0)
+    val n = stats.getLong(0).toDouble
+    val score = terms.zipWithIndex.map { case (t, i) =>
+      Retrieval.termScore(ArrayMatch.count_token_eq(toks, t),
+        Retrieval.idf(n, stats.getLong(i + 2).toDouble), Some(size(toks)),
+        stats.getDouble(1))
     }.reduce(_ + _)
     d.withColumn("score", score)
       .where(col("score") > 0)
       .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(10)
-      // limit leaves its ≤ 10 rows in one partition, so a window keyed on
+      .limit(k)
+      // limit leaves its ≤ k rows in one partition, so a window keyed on
       // the partition id ranks them as an unpartitioned one would, without
       // WindowExec's warning (a literal key is optimized away)
       .withColumn("rank", row_number().over(
@@ -115,6 +106,10 @@ object SearchQueries {
           .orderBy(col("score").desc, col("doc_id").asc)))
       .select(col("rank"), col("doc_id"))
   }
+
+  /** BM25 ranking for the two-term query `spark join`: the top 10 as
+    * (rank, doc_id), score kept internal. */
+  val q_search_bm25: Q = (s, dir) => bm25TopK(docs(s, dir), Seq("spark", "join"), 10)
 
   /** Regex query over the raw text (tantivy's RegexQuery analogue). The
     * pattern stays in the RE2-compatible subset so Java and DuckDB regex

@@ -21,33 +21,22 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <outDir> <tag> [names]")
     val (outDir, tag) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2)
-        Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet)
-          .filter(_.nonEmpty)
-      else None
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"unknown query name(s): ${unknown.mkString(", ")}")
-    }
+    val selected = SparkEntry.select(args.drop(2))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Graft.session(cpus.toInt, "graft-plandump")
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries.toList.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
-          println(s"[plandump] wrote $name")
-        } catch { case e: Throwable =>
-          System.err.println(s"[plandump] $name failed: $e")
-        }
+    selected.foreach { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
+        println(s"[plandump] wrote $name")
+      } catch { case e: Throwable =>
+        System.err.println(s"[plandump] $name failed: $e")
       }
+    }
     spark.stop()
   }
 }

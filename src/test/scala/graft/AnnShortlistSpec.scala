@@ -36,7 +36,11 @@ class AnnShortlistSpec extends AnyFunSuite {
     }
   }
 
-  private def catalogWith(prefix: String, name: String, n: Int): (Catalog, String) = {
+  private def catalogWith(prefix: String, name: String, n: Int): (Catalog, String) =
+    catalogOf(prefix, name, docs(n))
+
+  private def catalogOf(prefix: String, name: String,
+      lines: Seq[String]): (Catalog, String) = {
     val root = Files.createTempDirectory(prefix).toString
     val cat = new Catalog(root)
     cat.create(
@@ -53,7 +57,7 @@ class AnnShortlistSpec extends AnyFunSuite {
          |      array: true
          |""".stripMargin)
     val in = Files.createTempFile("shortlist-docs", ".jsonl")
-    Files.write(in, docs(n).mkString("\n").getBytes("UTF-8"))
+    Files.write(in, lines.mkString("\n").getBytes("UTF-8"))
     cli.Main.run(Array("index", name, in.toString), spark, cat, root)
     (cat, root)
   }
@@ -156,5 +160,21 @@ class AnnShortlistSpec extends AnyFunSuite {
       (2, 925000L, 925000L, 925000L), (4, 1000000L, 1000000L, 1000000L),
       (8, 1000000L, 1000000L, 1000000L)), s"sq8: $sq8")
     cat.drop("cgold")
+  }
+
+  test("train --calibrate writes no curve row above the trained cell count") {
+    // 24 documents over 3 distinct vectors: the seed holds one centroid
+    // per distinct vector, so --cells 8 trains 3 cells
+    val lines = (0 until 24).map { i =>
+      val v = Seq.tabulate(8)(j => if (j == i % 3) 1.0 else 0.0)
+      s"""{"title": "t$i", "emb": [${v.mkString(", ")}]}"""
+    }
+    val (cat, _) = catalogOf("graft-calibcells", "ccells", lines)
+    val ann = new AnnIndex(spark, cat)
+    val (trained, _) = ann.train("ccells", "emb", cells = 8, calibrate = true)
+    assert(trained == 3, s"trained $trained cells")
+    val nprobes = ann.readCalib("ccells", "emb").get.map(_._1)
+    assert(nprobes == Seq(1, 2, 3), s"curve nprobes: $nprobes")
+    cat.drop("ccells")
   }
 }

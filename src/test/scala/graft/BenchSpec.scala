@@ -39,4 +39,15 @@ class BenchSpec extends AnyFunSuite {
     assert(read(first) == "run 1\n" && read(second) == "run 2\n",
       "the second write must not clobber the first")
   }
+
+  test("a misspelled query name fails loudly instead of benching nothing") {
+    val e = intercept[IllegalArgumentException](Bench.main(Array("knn_ivff")))
+    assert(e.getMessage.contains("unknown query name(s): knn_ivff"), e.getMessage)
+    // the selector all three mains share: comma lists, empty segments
+    // dropped, name order, every entry when nothing is named
+    assert(SparkEntry.select(Seq("q_term_search,knn_ivf", "")).map(_._1) ==
+      List("knn_ivf", "q_term_search"))
+    assert(SparkEntry.select(Nil).map(_._1) == SparkEntry.queries.keys.toList.sorted)
+    intercept[IllegalArgumentException](SparkEntry.select(Seq("q_term_search,nope")))
+  }
 }

@@ -8,10 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{Catalog, Indexer, Searcher}
 import graft.exprs.ArrayMatch
 import graft.functions.TextFunctions.tokenizeDefault
+import graft.ops.Retrieval
 import graft.queries.SearchQueries
 
 /** The search verb and the registry's gated BM25 row rank the same
-  * documents the same way. */
+  * documents the same way, and both hybrid faces fuse with one rule. */
 class RetrievalSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -51,5 +52,17 @@ class RetrievalSpec extends AnyFunSuite {
       s"search: ${hits.take(12).map(i => i -> profile(i)).mkString(", ")}\n" +
         s"registry: ${ranked.map(r => r._2 -> profile(r._2)).mkString(", ")}")
     cat.drop("bm25face")
+  }
+
+  test("fuse sums integer RRF contributions and cuts score ties by key") {
+    // b and c tie at one rank-1 hit each; a has two lower-ranked hits
+    val hits = Seq("c" -> 1, "a" -> 2, "b" -> 1, "a" -> 3)
+    assert(Retrieval.fuse(hits, k = 60, limit = 3) ==
+      Seq("a" -> (1000000000L / 62 + 1000000000L / 63),
+        "b" -> 1000000000L / 61, "c" -> 1000000000L / 61))
+    // the cut keeps the smaller key of a tie, in any input order
+    assert(Retrieval.fuse(hits.reverse, k = 60, limit = 2).map(_._1) == Seq("a", "b"))
+    assert(Retrieval.fuse(Seq(7L -> 1, 3L -> 1), k = 60, limit = 1) ==
+      Seq(3L -> 1000000000L / 61))
   }
 }
